@@ -121,88 +121,60 @@ object QueriesCommon {
     math.min(defaultP, if (pow == raw) pow else pow << 1)
   }
 
+  // Configured once, inside computeIfAbsent: the fork's conf is a pure
+  // function of the cache key, and no caller sees the fork before it is
+  // configured. The clone's SQLConf is library-owned, so this mutates
+  // nothing of the caller's.
   private def branchSession(root: SparkSession, atScale: Boolean,
       shufflePartitions: Long, sizeCls: Int,
-      noRuntimeFilter: Boolean = false): SparkSession = {
-    val s = branchSessions.computeIfAbsent(
-      (root, atScale, shufflePartitions, sizeCls, noRuntimeFilter),
-      _ => org.apache.spark.sql.graftbridge.Bridge.forkSession(root))
-    // re-applied per call (idempotent — the values are a function of
-    // the cache key) so `graft.branch.*` override properties take
-    // effect even on an already-forked branch; the clone's SQLConf is
-    // library-owned, so this mutates nothing of the caller's
-    configureBranch(s, atScale, shufflePartitions, sizeCls, noRuntimeFilter)
-    s
-  }
-
-  /** Planner-conf overrides for the branch sessions, applied LAST by
-    * `configureBranch`: `-Dgraft.branch.<sparkConfKey>=<value>`. The
-    * A/B probe tools flip single settings through these — a probe
-    * mutating its own session conf would be shadowed by the fork.
-    * Serial use only (probes are standalone mains); concurrent queries
-    * sharing a branch key race on an override flip by design. */
-  private def branchOverrides: Seq[(String, String)] = {
-    import scala.jdk.CollectionConverters._
-    System.getProperties.stringPropertyNames().asScala.toSeq
-      .filter(_.startsWith("graft.branch."))
-      .map(k => k.stripPrefix("graft.branch.") -> System.getProperty(k))
-  }
+      noRuntimeFilter: Boolean): SparkSession =
+    branchSessions.computeIfAbsent(
+      (root, atScale, shufflePartitions, sizeCls, noRuntimeFilter), _ => {
+        val s = org.apache.spark.sql.graftbridge.Bridge.forkSession(root)
+        configureBranch(s, atScale, shufflePartitions, sizeCls, noRuntimeFilter)
+        s
+      })
 
   /** Shared table loader: cached schema + size-gated AQE and
     * size-gated shuffle fan-out, scoped to a per-branch forked session
     * so the caller's own SQLConf is never touched. The returned
     * DataFrame is bound to the branch session — downstream operators
     * built on it plan (and execute) under the branch settings. */
-  def table(s: SparkSession, dir: String, name: String): DataFrame = {
-    val branch = branchFor(s, dir)
-    val path = s"$dir/$name.parquet"
-    tableCache.computeIfAbsent((branch, path), _ => {
-      val schema = schemaCache.computeIfAbsent(path,
-        q => branch.read.parquet(q).schema)
-      branch.read.schema(schema).parquet(path)
-    })
-  }
-
-  /** The branch session `table(s, dir, _)` binds its frames to — the
-    * size-gated fork every frame over `dir` plans under. */
-  private def branchFor(s: SparkSession, dir: String): SparkSession = {
-    val bytes = totalBytes(dir)
-    val atScale = bytes >= adaptiveMinInputBytes
-    val defaultP = sessionShufflePartitions
-      .computeIfAbsent(s, _.conf.get("spark.sql.shuffle.partitions"))
-    val p =
-      if (atScale) defaultP.toLong
-      else branchFanout(bytes, defaultP.toLong)
-    branchSession(s, atScale, p, sizeClass(bytes, atScale))
-  }
-
-  /** The bucketed-SPINE planning branch: branchFor's conf with runtime
-    * bloom-filter injection off (see `configureBranch`). Frames read
-    * through `bucketedTable` bind here; a query mixing bucketed and
-    * plain frames on the bucketed route reads the plain ones through
-    * [[spineTable]] so everything plans under ONE session. */
-  private def spineBranchFor(s: SparkSession, dir: String): SparkSession = {
-    val bytes = totalBytes(dir)
-    val atScale = bytes >= adaptiveMinInputBytes
-    val defaultP = sessionShufflePartitions
-      .computeIfAbsent(s, _.conf.get("spark.sql.shuffle.partitions"))
-    val p =
-      if (atScale) defaultP.toLong
-      else branchFanout(bytes, defaultP.toLong)
-    branchSession(s, atScale, p, sizeClass(bytes, atScale),
-      noRuntimeFilter = true)
-  }
+  def table(s: SparkSession, dir: String, name: String): DataFrame =
+    branchTable(branchFor(s, dir, noRuntimeFilter = false), dir, name)
 
   /** A PLAIN table bound to the bucketed-spine branch — for the routes
     * that join bucketed facts with un-bucketed dims. */
-  def spineTable(s: SparkSession, dir: String, name: String): DataFrame = {
-    val branch = spineBranchFor(s, dir)
+  def spineTable(s: SparkSession, dir: String, name: String): DataFrame =
+    branchTable(branchFor(s, dir, noRuntimeFilter = true), dir, name)
+
+  private def branchTable(branch: SparkSession, dir: String,
+      name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     tableCache.computeIfAbsent((branch, path), _ => {
       val schema = schemaCache.computeIfAbsent(path,
         q => branch.read.parquet(q).schema)
       branch.read.schema(schema).parquet(path)
     })
+  }
+
+  /** The size-gated fork every frame over `dir` plans under. With
+    * `noRuntimeFilter` it is the bucketed-SPINE planning branch: the
+    * same conf with runtime bloom-filter injection off (see
+    * `configureBranch`). Frames read through `bucketedTable` bind
+    * there; a query mixing bucketed and plain frames on the bucketed
+    * route reads the plain ones through [[spineTable]] so everything
+    * plans under ONE session. */
+  private def branchFor(s: SparkSession, dir: String,
+      noRuntimeFilter: Boolean): SparkSession = {
+    val bytes = totalBytes(dir)
+    val atScale = bytes >= adaptiveMinInputBytes
+    val defaultP = sessionShufflePartitions
+      .computeIfAbsent(s, _.conf.get("spark.sql.shuffle.partitions"))
+    val p =
+      if (atScale) defaultP.toLong
+      else branchFanout(bytes, defaultP.toLong)
+    branchSession(s, atScale, p, sizeClass(bytes, atScale), noRuntimeFilter)
   }
 
   /** The BUCKETED twin of `table`: the same frame read through a
@@ -232,7 +204,8 @@ object QueriesCommon {
     // falls back to the plain route instead of serving stale rows
     else if (graft.ops.Scale.sidecarSourceFp(path).exists(
         _ != graft.ops.Scale.sourceFingerprint(s"$dir/$name.parquet"))) None
-    else graft.ops.Scale.readBucketedDir(spineBranchFor(s, dir), path)
+    else graft.ops.Scale.readBucketedDir(
+      branchFor(s, dir, noRuntimeFilter = true), path)
   }
 
   /** The bucketed layout of `name` carrying at least `cols`, projected
@@ -250,7 +223,7 @@ object QueriesCommon {
 
   private def configureBranch(s: SparkSession, atScale: Boolean,
       shufflePartitions: Long, sizeCls: Int,
-      noRuntimeFilter: Boolean = false): Unit = {
+      noRuntimeFilter: Boolean): Unit = {
     s.conf.set("spark.sql.adaptive.enabled", atScale.toString)
     // The bucketed-spine fork plans with runtime bloom injection OFF:
     // a co-located join has no exchange for the bloom to protect — the
@@ -361,7 +334,6 @@ object QueriesCommon {
     // dataset; AQE's measured sizes plus the default ceiling is the
     // setting that generalizes.
     s.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    branchOverrides.foreach { case (k, v) => s.conf.set(k, v) }
   }
   /** Like `table`, but fans the scan out to the session's cores when
     * the input sits below the adaptive threshold. The test parquet
@@ -425,47 +397,6 @@ object QueriesCommon {
   val toksSql: String = toksSqlFor("text")
 
   def toksExpr: Column = expr(toksSql)
-
-  /** `size(toksExpr)` WITHOUT materializing the token array: the
-    * count-only byte-scan kernel ([[graft.expressions.TokenCount]] —
-    * no lowercase, no hashing, no token allocations, whole-stage
-    * codegen), for the counts-ONLY passes (BM25's avgdl stats, token
-    * budgets, packing bins, curation n_tok). Measured per-row CPU
-    * (tools/TokenCountProbe, r15: ×32-replicated sf0.1 text, cached,
-    * local[1], min-of-5 over two runs): interpreted filter/split tower
-    * 0.048–0.053 s, `regexp_count(c,'\S+')` 0.028–0.030 s, sizing the
-    * fused hash kernel 0.028–0.034 s, this kernel 0.025–0.031 s —
-    * ~1.8× under the tower it replaces at the toksExpr sites, and
-    * never worse than (plus allocation-free vs) the alternatives at
-    * the kernel-size sites; row-for-row equal everywhere.
-    *
-    * Equality argument (all inputs, not just the probe corpus): the
-    * non-empty elements of `split(s, '\s+')` are exactly the maximal
-    * runs of non-whitespace in s (separators are \s+ matches; a
-    * leading separator contributes one leading "" element and a
-    * trailing separator one trailing "" element — Spark's split uses
-    * limit -1, which KEEPS trailing empties, unlike Java's
-    * String.split — and the x != '' filter drops both; interior
-    * empties cannot occur under the + quantifier). `trim` strips only
-    * edge spaces — removing no \S run — and no character's lowercase
-    * mapping adds or removes whitespace, so `trim`/`lower` drop out of
-    * the COUNT even though they shape the token TEXT. Hence
-    * size(filter(split(trim(lower(c)), '\s+'), x != '')) ≡ the
-    * non-whitespace-run count for every c (both null on null); the
-    * kernel's byte-level separator scan matches Java `\s` exactly
-    * (TokenHashUtil's argument). TokenCountFastSpec pins all of it on
-    * the adversarial edge set. Null contract: the kernel returns null
-    * for null text, equal to size(...) under Spark 4's default ANSI
-    * mode; a deployment setting spark.sql.ansi.enabled=false flips the
-    * replaced size(...) forms to legacy sizeOfNull = -1 while the
-    * kernel stays null — the engine ships (and the spec asserts) the
-    * ANSI default, so the equivalence claim is scoped to it. Anything
-    * consuming token identities still needs toksExpr /
-    * tokenHashesCol. */
-  def tokenCountFast(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.column(graft.expressions.TokenCount(Bridge.expression(c)))
-  }
 
   /** (doc_id, toks) projection over a documents-shaped frame. */
   def tokens(d: DataFrame): DataFrame =

@@ -159,8 +159,8 @@ object QueriesExt12 {
         t(s, dir, "documents")
           .withColumn("budget",
             expr("(cast(substr(source, 4) AS int) % 3 + 1) * 1000"))
-          // counts-only: tokenCountFast ≡ size(tokenHashesCol), r15
-          .withColumn("toks", QueriesCommon.tokenCountFast(col("text"))),
+          // counts-only: TextFunctions.tokenCount ≡ size(tokenHashesCol), r15
+          .withColumn("toks", graft.functions.TextFunctions.tokenCount(col("text"))),
         "source", "doc_id", col("toks"), col("budget"))
       .groupBy("source")
       .agg(max(col("budget")).as("budget"), count(lit(1)).as("n_kept"),
@@ -177,8 +177,8 @@ object QueriesExt12 {
         t(s, dir, "documents")
           .withColumn("budget",
             expr("(cast(substr(source, 4) AS int) % 3 + 1) * 1000"))
-          // counts-only: tokenCountFast ≡ size(tokenHashesCol), r15
-          .withColumn("toks", QueriesCommon.tokenCountFast(col("text"))),
+          // counts-only: TextFunctions.tokenCount ≡ size(tokenHashesCol), r15
+          .withColumn("toks", graft.functions.TextFunctions.tokenCount(col("text"))),
         "source", "doc_id", col("toks"), col("budget"))
       .groupBy("source")
       .agg(max(col("budget")).as("budget"), count(lit(1)).as("n_kept"),

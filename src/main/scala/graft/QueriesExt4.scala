@@ -31,7 +31,6 @@ object QueriesExt4 {
     * / no-barrier 4.06 s — and no-barrier both re-encodes per consumer
     * (wrong at scale for the rerank route) and drops the
     * index-at-rest modeling, so persist wins on both counts.
-    * (A/B toggle retained: -Dgraft.ann.matEncoded=lc|persist|none.)
     *
     * Lifecycle (same contract as Curation.dedupBarrier): the persisted
     * relation stays registered in the session's CacheManager for the
@@ -41,12 +40,7 @@ object QueriesExt4 {
     * both for hygiene and so the next logically-equal plan re-pays the
     * build its DuckDB twin re-pays. */
   private[graft] def matEncoded(df: DataFrame): DataFrame =
-    System.getProperty("graft.ann.matEncoded", "persist") match {
-      case "persist" => df.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case "none" => df
-      case _ => df.localCheckpoint(true)
-    }
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Interval join (SURVEY §7.5 extension): events land in the ±3-day
     * windows around the 20 peak-traffic days (busiest by event count).

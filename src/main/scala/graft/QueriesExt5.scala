@@ -83,10 +83,9 @@ object QueriesExt5 {
   }
 
   /** The SemDeDup kernel behind q_semdedup, with the plane count — the
-    * paper's cluster-count scale knob — as a parameter so the decade
-    * probe (tools/ScaleProbe2) can demonstrate it: more planes halve
-    * the expected bucket size per plane, bounding the within-bucket
-    * quadratic as the corpus grows. */
+    * paper's cluster-count scale knob — as a parameter: more planes
+    * halve the expected bucket size per plane, bounding the
+    * within-bucket quadratic as the corpus grows. */
   private[graft] def semDedupSurvivors(emb: DataFrame, planes: Int): DataFrame = {
     val dims = graft.similarity.Lsh.probeDims(emb, "embedding")
     val pm = graft.similarity.Lsh.md5PlaneMatrixInt(planes, dims)

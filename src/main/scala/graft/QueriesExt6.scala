@@ -307,11 +307,11 @@ object QueriesExt6 {
       .select(explode(QueriesCommon.tokenHashesCol("text")).as("tok"))
       .distinct()
     // corpus + doc-count scalars as a 1-row broadcast (single job).
-    // Counts-only pass: tokenCountFast (r15) replaces sizing the fused
+    // Counts-only pass: the TokenCount kernel (r15) replaces sizing the fused
     // hash kernel — same integers (see its proof), no per-token
     // hashing or array allocation in the stats pass.
     val stats = t(s, dir, "documents")
-      .select(QueriesCommon.tokenCountFast(col("text"))
+      .select(graft.functions.TextFunctions.tokenCount(col("text"))
         .cast("double").as("dl0"))
       .agg(count(lit(1)).cast("double").as("n"), avg("dl0").as("avgdl"))
     // Round 10 (Bm25Probe at 15.7 GiB, stage metrics: 0.5 GB shuffle,

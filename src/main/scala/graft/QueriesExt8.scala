@@ -50,8 +50,8 @@ object QueriesExt8 {
     * reports per-bin occupancy. One per-source window cumsum + one
     * aggregate. */
   def pack(docs: DataFrame, budget: Int = 512): DataFrame = {
-    // counts-only: tokenCountFast ≡ size(toksExpr) (proof at the def)
-    val n = QueriesCommon.tokenCountFast(col("text"))
+    // counts-only: TextFunctions.tokenCount ≡ size(toksExpr) (proof at the def)
+    val n = graft.functions.TextFunctions.tokenCount(col("text"))
     val w = Window.partitionBy("source").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs.select(col("source"), col("doc_id"), n.as("n_toks"))

@@ -1776,6 +1776,23 @@ object Cli {
     java.nio.file.Files.deleteIfExists(p)
   }
 
+  /** `run` under the root span, the reference's CLI shape
+    * (`export_vdf_cli.py:86-96`: start_as_current_span("…_cli_main"),
+    * errors recorded on the span, flush before exit); disabled by
+    * DISABLE_TELEMETRY_VECTORIO=1 exactly like the reference. */
+  def runTraced(spark: SparkSession, argv: Seq[String]): Int =
+    graft.telemetry.Spans.withSpan("graft_cli_main") {
+      graft.telemetry.Spans.setAttribute("argv", spanArgv(argv))
+      run(spark, argv)
+    }
+
+  /** argv as recorded on the root span: the token after `--api_key`
+    * becomes `***`, so the credential never reaches a span sink. */
+  private def spanArgv(argv: Seq[String]): String =
+    argv.indices.map(i =>
+      if (i > 0 && argv(i - 1) == "--api_key") "***" else argv(i))
+      .mkString(" ")
+
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
@@ -1788,14 +1805,7 @@ object Cli {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Root span around the whole run, the reference's CLI shape
-    // (`export_vdf_cli.py:86-96`: start_as_current_span("…_cli_main"),
-    // errors recorded on the span, flush before exit); disabled by
-    // DISABLE_TELEMETRY_VECTORIO=1 exactly like the reference.
-    val rc = graft.telemetry.Spans.withSpan("graft_cli_main") {
-      graft.telemetry.Spans.setAttribute("argv", args.mkString(" "))
-      run(spark, args.toSeq)
-    }
+    val rc = runTraced(spark, args.toSeq)
     spark.stop()
     if (rc != 0) sys.exit(rc)
   }

@@ -48,8 +48,8 @@ object Curation {
   /** One token count, shared by the quality bounds, the token budget,
     * and the packing bins — computed once per row and carried. The
     * allocation-free count form (r15): provably ≡ size(toksExpr), see
-    * QueriesCommon.tokenCountFast's proof. */
-  private def nTok: Column = QueriesCommon.tokenCountFast(col("text"))
+    * TextFunctions.tokenCount's proof. */
+  private def nTok: Column = TF.tokenCount(col("text"))
 
   /** Stage 1 — quality filter (q_quality_filter's keep rule): token
     * count in [20, 80] and stopword ratio ≤ 0.2. Map-only: one scan,

@@ -4,16 +4,24 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Per-job / per-stage wall-time breakdown of one named query: which
-  * job is the expensive one, and what its stages spend. */
+  * job is the expensive one, and what its stages spend. Runs the
+  * board's session shape (local[$SPARK_GRAFT_CPUS], shuffle.partitions
+  * = cpus, as Bench/Verify/PlanFiles) — the branch fan-out derives
+  * from the session's shuffle partitions, so stage and task counts
+  * only match the board's under the same core count.
+  *
+  * Usage: tools/run_main.sh graft.tools.JobProbe <dataDir> <q1,q2,...> */
 object JobProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = if (args.length > 1) args(1) else "q_tfidf_pairs"
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -39,11 +47,11 @@ object JobProbe {
       // this, a query with a persist barrier probed with the fill jobs
       // already warm, under-counting its bench-visible jobs)
       spark.catalog.clearCache()
-      Thread.sleep(300); lines.clear()
+      Bridge.drainListenerBus(spark.sparkContext); lines.clear()
       val t0 = System.nanoTime()
       fn(spark, dir).count()
       val total = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
+      Bridge.drainListenerBus(spark.sparkContext)
       lines.foreach(println)
       println(f"TOTAL $n $total%.2f s")
     }

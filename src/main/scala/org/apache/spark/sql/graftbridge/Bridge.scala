@@ -9,8 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * (`org.apache.spark.sql.classic.ExpressionUtils`); a library adding
   * native Catalyst expressions still needs them to expose a typed
   * Column API. This object lives inside the `org.apache.spark.sql`
-  * package solely to re-export those two calls — no other internals
-  * are touched. */
+  * package solely to re-export such package-private calls (below:
+  * the conversion pair, `ofRows`, `cloneSession`, the listener-bus
+  * drain) — no other internals are touched. */
 object Bridge {
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
@@ -34,4 +35,10 @@ object Bridge {
   def forkSession(spark: org.apache.spark.sql.SparkSession)
       : org.apache.spark.sql.SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** Block until every posted listener event has been delivered — the
+    * listener bus is `private[spark]`; a probe reading its own
+    * listener's counters needs them complete, not a fixed sleep. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

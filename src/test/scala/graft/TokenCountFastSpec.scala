@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.TextFunctions
 
-/** Pins the r15 counts-only optimization: tokenCountFast (one
+/** Pins the r15 counts-only optimization: TextFunctions.tokenCount
+  * (named tokenCountFast in the test names, its r15 name; one
   * allocation-free byte-scan kernel, [[graft.expressions.TokenCount]];
   * regexp_count is a separate compared form in tools/TokenCountProbe,
   * not this) must equal BOTH array-sizing
@@ -32,7 +34,7 @@ class TokenCountFastSpec extends SparkSpec {
     val withNull = edge.union(Seq.empty[String].toDF("text")
       .union(spark.sql("SELECT CAST(NULL AS STRING) AS text")))
     val c = withNull.select(
-      QueriesCommon.tokenCountFast(col("text")).as("fast"),
+      TextFunctions.tokenCount(col("text")).as("fast"),
       size(QueriesCommon.toksExpr).as("tower"),
       size(QueriesCommon.tokenHashesCol("text")).as("kernel"))
     val bad = c.filter(!(col("fast") <=> col("tower")) ||
@@ -48,7 +50,7 @@ class TokenCountFastSpec extends SparkSpec {
     // kernel's own null contract explicitly.
     assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
     val r = spark.sql("SELECT CAST(NULL AS STRING) AS text")
-      .select(QueriesCommon.tokenCountFast(col("text")).as("n"),
+      .select(TextFunctions.tokenCount(col("text")).as("n"),
         size(QueriesCommon.toksExpr).as("sz")).collect().head
     assert(r.isNullAt(0) && r.isNullAt(1))
   }
@@ -56,7 +58,7 @@ class TokenCountFastSpec extends SparkSpec {
   test("tokenCountFast matches on the sf0.001 corpus row-for-row") {
     val docs = QueriesCommon.table(spark, "/root/testdata/sf0.001", "documents")
     val n = docs.filter(
-      !(QueriesCommon.tokenCountFast(col("text")) <=>
+      !(TextFunctions.tokenCount(col("text")) <=>
         size(QueriesCommon.toksExpr))).count()
     assert(n == 0)
   }

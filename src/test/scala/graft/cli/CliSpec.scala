@@ -122,6 +122,17 @@ class CliSpec extends SparkSpec {
     assert(Cli.run(spark, Seq("bogus")) == 2)
   }
 
+  test("the root span records argv with the --api_key value masked") {
+    graft.telemetry.Spans.flush()
+    assert(Cli.runTraced(spark,
+      Seq("bogus", "--db", "qdrant", "--api_key", "s3cr3t")) == 2)
+    val spans = graft.telemetry.Spans.flush()
+    val root = spans.find(_.name == "graft_cli_main")
+    assert(root.flatMap(_.attributes.get("argv"))
+      .contains("bogus --db qdrant --api_key ***"))
+    assert(!spans.exists(_.attributes.values.exists(_.contains("s3cr3t"))))
+  }
+
   test("flag parser handles key-value and boolean flags") {
     val a = Cli.parseArgs(Seq("import", "--db", "mock", "--create_new", "--max_rows", "5"))
     assert(a.positional == List("import"))

@@ -79,31 +79,29 @@ class ScaleSpec extends SparkSpec {
         java.nio.file.Paths.get(s"$sf/$tbl.parquet"))
     val spine = Seq("q_join_agg", "q_semi_idlist", "q_anti_missing",
       "q_except_ids", "q_intersect_ids")
-    def run(q: String) = graft.SparkEntry.queries(q)(spark, dir)
-    // keep the spine joins real even at this tiny scale — the branch
-    // override property is how probe tools flip planner confs on the
-    // forked sessions (spark.conf.set would be shadowed)
-    System.setProperty(
-      "graft.branch.spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val before = spine.map(q => q -> run(q).collect().map(_.toString).toSeq)
-      graft.tools.BucketIngest.write(spark, dir, buckets = 4)
-      for ((q, plainRows) <- before) {
-        val routed = run(q)
-        val plan = routed.queryExecution.executedPlan.toString
-        // the layout carries the bucket metadata into the plan...
-        assert(plan.contains("SelectedBucketsCount") ||
-          plan.contains("Bucketed: true"), s"$q not reading buckets:\n$plan")
-        // ...and the join key never exchanges on the bucketed route
-        // `id` is the EXCEPT/INTERSECT spine's alias of the bucket key
-        val exchanges = "Exchange hashpartitioning\\((l_orderkey|o_orderkey|id)"
-          .r.findAllIn(plan).size
-        assert(exchanges == 0, s"$q exchanges on the bucketed route:\n$plan")
-        assert(routed.collect().map(_.toString).toSeq == plainRows,
-          s"$q diverged between plain and bucketed routes")
-      }
-    } finally System.clearProperty(
-      "graft.branch.spark.sql.autoBroadcastJoinThreshold")
+    // keep the spine joins real even at this tiny scale: the branch
+    // sessions fork from the caller's session and copy its conf, so a
+    // fresh session with broadcast joins off plans every spine query
+    // under that setting (the branch cache is keyed by the session)
+    val noBroadcast = spark.newSession()
+    noBroadcast.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def run(q: String) = graft.SparkEntry.queries(q)(noBroadcast, dir)
+    val before = spine.map(q => q -> run(q).collect().map(_.toString).toSeq)
+    graft.tools.BucketIngest.write(spark, dir, buckets = 4)
+    for ((q, plainRows) <- before) {
+      val routed = run(q)
+      val plan = routed.queryExecution.executedPlan.toString
+      // the layout carries the bucket metadata into the plan...
+      assert(plan.contains("SelectedBucketsCount") ||
+        plan.contains("Bucketed: true"), s"$q not reading buckets:\n$plan")
+      // ...and the join key never exchanges on the bucketed route
+      // `id` is the EXCEPT/INTERSECT spine's alias of the bucket key
+      val exchanges = "Exchange hashpartitioning\\((l_orderkey|o_orderkey|id)"
+        .r.findAllIn(plan).size
+      assert(exchanges == 0, s"$q exchanges on the bucketed route:\n$plan")
+      assert(routed.collect().map(_.toString).toSeq == plainRows,
+        s"$q diverged between plain and bucketed routes")
+    }
   }
 
   test("bucketed join plans without a shuffle (co-located)") {
