@@ -4,6 +4,8 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
+import scala.collection.immutable.ArraySeq
+
 /** One point on the wire: the shape all three REST dialects share
   * (Qdrant `{id, vector, payload}`, Pinecone `{id, values, metadata}`,
   * Chroma columnar `{ids[i], embeddings[i], metadatas[i]}`). */
@@ -222,14 +224,23 @@ trait WireDialect extends Serializable {
 }
 
 private[wire] object Decode {
+  /** A JSON number array as a primitive `Array[Double]`, wrapped without
+    * a copy — the scan reader hands that array to Catalyst as is. */
   def vec(v: Any): Seq[Double] = v match {
     case null => Seq.empty
-    case s: Seq[_] => s.map(_.asInstanceOf[Number].doubleValue())
+    case s: Seq[_] =>
+      val a = new Array[Double](s.size)
+      var i = 0
+      s.foreach { x => a(i) = x.asInstanceOf[Number].doubleValue(); i += 1 }
+      ArraySeq.unsafeWrapArray(a)
   }
+  /** Payload values stringified; a JSON `null` value drops its key (as
+    * the turbopuffer decoder and `WireCliConnector.toWireShape` do),
+    * never the string "null". */
   def pay(v: Any): Map[String, String] = v match {
     case null => Map.empty
     case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
-      .map { case (k, x) => k -> String.valueOf(x) }
+      .collect { case (k, x) if x != null => k -> String.valueOf(x) }
   }
 }
 

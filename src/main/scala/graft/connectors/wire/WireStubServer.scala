@@ -894,10 +894,15 @@ final class WireStubServer(tls: Boolean = false) {
 }
 
 /** Jackson helpers shared by the stub server and the wire clients —
-  * the same mapper stack `core/VdfMeta` uses. */
+  * the same mapper stack `core/VdfMeta` uses, on a factory that parses
+  * doubles with Jackson's bundled port of Lemire's correctly rounded
+  * fast float parser (a 1000×128 scroll page is ~128k doubles). */
 object WireJson {
   private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    import com.fasterxml.jackson.core.{JsonFactoryBuilder, StreamReadFeature}
+    val m = new com.fasterxml.jackson.databind.ObjectMapper(
+      new JsonFactoryBuilder()
+        .enable(StreamReadFeature.USE_FAST_DOUBLE_PARSER).build())
     m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
     m
   }

@@ -4,13 +4,17 @@ import java.util
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
+import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 import graft.connectors.UpsertPolicy
@@ -262,6 +266,44 @@ object WireScan {
     }
     out.toSeq
   }
+
+  /** One point as a Catalyst row of the pruned `fields`, built
+    * directly: a `UTF8String` id, the decoded primitive vector copied
+    * once into an `UnsafeArrayData`, and the payload as
+    * `ArrayBasedMapData` in the map's iteration order — the row the
+    * generic `CatalystTypeConverters` path builds, without boxing each
+    * element through it. */
+  def toRow(fields: Array[String], pt: WirePoint): InternalRow = {
+    val vals = new Array[Any](fields.length)
+    var i = 0
+    while (i < fields.length) {
+      vals(i) = fields(i) match {
+        case "id" => UTF8String.fromString(pt.id)
+        case "vector" => pt.vector match {
+          case null => null
+          case a: ArraySeq.ofDouble =>
+            UnsafeArrayData.fromPrimitiveArray(a.unsafeArray)
+          case v => UnsafeArrayData.fromPrimitiveArray(v.toArray)
+        }
+        case "payload" => pt.payload match {
+          case null => null
+          case m =>
+            val ks = new Array[Any](m.size)
+            val vs = new Array[Any](m.size)
+            var j = 0
+            m.foreach { case (k, v) =>
+              ks(j) = UTF8String.fromString(k)
+              vs(j) = UTF8String.fromString(v)
+              j += 1
+            }
+            new ArrayBasedMapData(new GenericArrayData(ks),
+              new GenericArrayData(vs))
+        }
+      }
+      i += 1
+    }
+    new GenericInternalRow(vals)
+  }
 }
 
 final case class WireIdPartition(ids: Seq[String]) extends InputPartition
@@ -300,8 +342,7 @@ final class WireScan(dialect: WireDialect, collection: String,
     val c = collection
     (partition: InputPartition) => {
       new PartitionReader[InternalRow] {
-        private val converter =
-          CatalystTypeConverters.createToCatalystConverter(schema)
+        private val fields = schema.fieldNames
         // the HTTP requests happen ON the executor, pruned flags on
         // the wire; pushed id sets use the targeted retrieve, pages
         // use the shrink-on-error range fetch
@@ -315,12 +356,7 @@ final class WireScan(dialect: WireDialect, collection: String,
         private var current: InternalRow = _
         override def next(): Boolean = {
           if (!it.hasNext) return false
-          val pt = it.next()
-          current = converter(Row.fromSeq(schema.fieldNames.toSeq.map {
-            case "id" => pt.id
-            case "vector" => pt.vector
-            case "payload" => pt.payload
-          })).asInstanceOf[InternalRow]
+          current = WireScan.toRow(fields, it.next())
           true
         }
         override def get(): InternalRow = current

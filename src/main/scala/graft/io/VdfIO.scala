@@ -123,7 +123,14 @@ object VdfIO {
     * the NamespaceMeta describing it. File sizing is declarative
     * (`maxRecordsPerFile`) instead of the reference's manual byte
     * buffering; at cluster scale the writer parallelism is the
-    * DataFrame's partitioning, untouched here. */
+    * DataFrame's partitioning, untouched here.
+    *
+    * One pass over the source: the row count and the min and max
+    * length of the non-null vectors ride the write action as an
+    * `Observation`. When min = max that length IS the first non-null
+    * vector's (F24), and no vector at all (all null, or no rows) gives
+    * -1; only mixed lengths fall back to [[resolveDims]], a second
+    * scan that picks the first non-null vector. */
   def writeNamespace(df: DataFrame, dir: String, indexName: String,
       namespace: String = "", maxRecordsPerFile: Long = 0L,
       vectorColumns: Seq[String] = Seq("vector"),
@@ -138,7 +145,11 @@ object VdfIO {
     // file-listing + footer pass per namespace that is a real second
     // pass at warehouse scale.
     val obs = org.apache.spark.sql.Observation()
-    val observed = df.observe(obs, count(lit(1)).as("rows"))
+    val vectorCol = vectorColumns.headOption.getOrElse("vector")
+    val len = when(col(vectorCol).isNotNull, size(col(vectorCol)))
+    val observed = df.observe(obs, count(lit(1)).as("rows"),
+      (if (!df.columns.contains(vectorCol)) Nil
+       else Seq(min(len).as("dims_min"), max(len).as("dims_max"))): _*)
     bucketBy match {
       case Some((key, buckets)) =>
         // warehouse layout at ingest: the namespace's files are
@@ -165,14 +176,20 @@ object VdfIO {
            writer.option("maxRecordsPerFile", maxRecordsPerFile)
          else writer).parquet(out)
     }
-    val n = obs.get("rows").asInstanceOf[Long]
-    val dims = resolveDims(df, vectorColumns.headOption.getOrElse("vector"))
+    val seen = obs.get
+    val n = seen("rows").asInstanceOf[Long]
+    val dims = (seen.getOrElse("dims_min", null),
+        seen.getOrElse("dims_max", null)) match {
+      case (null, _) => -1 // no vector column, or no non-null vector
+      case (lo, hi) if lo == hi => lo.asInstanceOf[Int]
+      case _ => resolveDims(df, vectorCol).getOrElse(-1)
+    }
     NamespaceMeta(
       namespace = namespace,
       index_name = indexName,
       total_vector_count = n,
       exported_vector_count = n,
-      dimensions = dims.getOrElse(-1),
+      dimensions = dims,
       model_name = modelName,
       vector_columns = vectorColumns.toList,
       data_path = dataPath,
@@ -267,7 +284,9 @@ object VdfIO {
 
   /** F24 dims resolution (`vdf_import_cls.py:152-187`): length of the
     * first non-null vector. Catalyst stops the scan at the first row
-    * (CollectLimit), mirroring the reference's short-circuit. */
+    * (CollectLimit), mirroring the reference's short-circuit; it is
+    * still a scan of its own, so `writeNamespace` calls it only as the
+    * fallback for mixed vector lengths. */
   def resolveDims(df: DataFrame, vectorCol: String): Option[Int] =
     if (!df.columns.contains(vectorCol)) None
     else df.where(col(vectorCol).isNotNull)

@@ -107,6 +107,22 @@ class CliWireSpec extends SparkSpec {
       Map("lang" -> "l1", "rank" -> "7"))))
   }
 
+  test("CLI export is one wire pass: one scroll per page, manifest dims from the write") {
+    val c = "one_pass"
+    seed(450, c)
+    val vdf = java.nio.file.Files.createTempDirectory("wire_vdf_pass").toString
+    http.requestLog.clear()
+    assert(Cli.run(spark, Seq("export", "--db", "qdrant",
+      "--db_root", http.url, "--collections", c, "--out", vdf,
+      "--batch_size", "200")) == 0)
+    // 450 rows in pages of 200: 200 + 200 + 50, and no re-scan for dims
+    val scrolls = http.requestLog.asScala
+      .count(_.contains(s"/collections/$c/points/scroll"))
+    assert(scrolls == 3, http.requestLog.asScala.mkString("\n"))
+    val ns = graft.io.VdfIO.readMeta(vdf).indexes(c).head
+    assert(ns.dimensions == 3 && ns.total_vector_count == 450L)
+  }
+
   test("CLI import --id_range subsets before the wire; create_new suffixes") {
     val c = "mig_sub"
     seed(100, c)

@@ -162,6 +162,34 @@ class VdfIOSpec extends SparkSpec {
     assert(VdfIO.resolveDims(allNull, "vector").isEmpty)
   }
 
+  test("writeNamespace records F24 dims from the write pass, equal to resolveDims") {
+    import spark.implicits._
+    val none = null.asInstanceOf[Array[Float]]
+    // one partition, so "first" is the Seq's order for both paths
+    def frame(vs: Array[Float]*) = vs.zipWithIndex
+      .map { case (v, i) => (i.toString, v) }.toDF("id", "vector")
+      .coalesce(1)
+    val cases = Seq(
+      "null first, then 3 dims" -> (frame(none, Array(1f, 2f, 3f)), 3),
+      "all vectors null" -> (frame(none, none), -1),
+      "empty frame" -> (frame(), -1),
+      // min 2 / max 3 disagree: the fallback scan picks the FIRST
+      // non-null vector (3), which neither bound alone would give
+      "mixed 3 and 2 dims" ->
+        (frame(none, Array(1f, 2f, 3f), Array(1f, 2f)), 3))
+    val dir = tmp()
+    cases.zipWithIndex.foreach { case ((name, (df, want)), i) =>
+      val ns = VdfIO.writeNamespace(df, dir, s"ix$i")
+      assert(ns.dimensions == want, name)
+      assert(ns.dimensions == VdfIO.resolveDims(df, "vector").getOrElse(-1),
+        name)
+    }
+    // no vector column at all: -1, as resolveDims' None
+    val bare = VdfIO.writeNamespace(Seq(("1", "t")).toDF("id", "title"),
+      dir, "bare")
+    assert(bare.dimensions == -1 && bare.total_vector_count == 1L)
+  }
+
   test("unionWithSchemaMerge null-pads missing columns (O3)") {
     import spark.implicits._
     val a = Seq(("1", "x")).toDF("id", "a")
