@@ -51,6 +51,7 @@ class FunctionsSpec extends SparkSpec {
     assert(one[scala.collection.Seq[String]](TextFunctions.tokens(lit(""))).isEmpty)
     assert(one[scala.collection.Seq[String]](TextFunctions.tokens(lit("   "))).isEmpty)
     assert(one[scala.collection.Seq[String]](TextFunctions.tokens(lit(" a  b "))) == Seq("a", "b"))
+    assert(one[scala.collection.Seq[String]](TextFunctions.tokens(lit("\tfoo"))) == Seq("foo"))
   }
 
   test("token counts") {
