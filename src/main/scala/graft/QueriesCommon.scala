@@ -386,13 +386,11 @@ object QueriesCommon {
   def eventHourEpoch(events: DataFrame): Column =
     expr(s"((${eventTsMicrosSql(events)}) DIV 3600000000) * 3600")
 
-  /** The ONE tokenizing expression the text queries share — the Spark
-    * twin of the oracle SQL's `regexp_split_to_array(trim(lower(text)),
-    * '\s+')`-with-empty-guard construction (and of
-    * `Dedup.wordTokens`). Single-sourced so a tokenization change
-    * can't silently diverge one query from its oracle. */
+  /** The lowercased tokens the text queries share:
+    * `TextFunctions.tokens(lower(text))` as Spark SQL text, the twin of
+    * the oracle's `TextFunctions.tokensOracleSql("lower(text)")`. */
   def toksSqlFor(textCol: String): String =
-    s"filter(split(trim(lower($textCol)), '\\\\s+'), x -> x != '')"
+    graft.functions.TextFunctions.tokensSql(s"lower($textCol)")
 
   val toksSql: String = toksSqlFor("text")
 

@@ -203,10 +203,6 @@ object QueriesExt {
     "q_ann_lsh" -> (qAnnLsh(_, _)))
 
   private val stopList = TF.stopwordsSqlLiteral
-  private val toksExpr =
-    "CASE WHEN len(trim(text)) = 0 THEN []::VARCHAR[] ELSE regexp_split_to_array(trim(text), '\\s+') END"
-  private val toksLowerExpr =
-    "CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[] ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END"
 
   val oracleSql: Map[String, String] = Map(
     "q_json_extract" ->
@@ -234,18 +230,18 @@ object QueriesExt {
       """SELECT doc_id, concat_ws(' ', lang, source, CAST(n_chars AS VARCHAR)) AS joined
         |FROM documents ORDER BY doc_id""".stripMargin,
     "q_token_stats" ->
-      s"""SELECT doc_id, len($toksExpr) AS n_tok,
-        |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS n_bpe
+      s"""SELECT doc_id, len(${TF.tokensOracleSql("text")}) AS n_tok,
+        |  len(regexp_extract_all(text, '${TF.BpeishRegex}')) AS n_bpe
         |FROM documents ORDER BY doc_id""".stripMargin,
     "q_quality" ->
       s"""WITH b AS (
-        |  SELECT doc_id, text, $toksExpr AS toks FROM documents),
+        |  SELECT doc_id, text, ${TF.tokensOracleSql("text")} AS toks FROM documents),
         |f AS (
         |  SELECT doc_id,
         |    CASE WHEN len(toks) = 0 THEN 0.0
         |         ELSE len(list_filter(toks, t -> list_contains($stopList, t)))::DOUBLE / len(toks) END AS stop_ratio,
         |    CASE WHEN len(text) = 0 THEN 0.0
-        |         ELSE len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE / len(text) END AS punct_ratio,
+        |         ELSE len(regexp_extract_all(text, '${TF.PunctRegex}'))::DOUBLE / len(text) END AS punct_ratio,
         |    CASE WHEN len(text) = 0 THEN 0.0
         |         ELSE len(regexp_extract_all(text, '[A-Za-z]'))::DOUBLE / len(text) END AS alpha_ratio,
         |    least(len(text)::DOUBLE / 500.0, 1.0) AS len_score
@@ -255,7 +251,7 @@ object QueriesExt {
         |   + greatest(1.0 - punct_ratio * 4.0, 0.0)) / 4.0 AS quality
         |FROM f ORDER BY doc_id""".stripMargin,
     "q_lang_id" ->
-      s"""WITH b AS (SELECT doc_id, lang, $toksLowerExpr AS toks FROM documents),
+      s"""WITH b AS (SELECT doc_id, lang, ${TF.tokensOracleSql("lower(text)")} AS toks FROM documents),
         |sc AS (SELECT doc_id, lang,
         |  len(list_filter(toks, t -> list_contains(['the','and','of','is','with'], t))) AS s_en,
         |  len(list_filter(toks, t -> list_contains(['el','la','los','que','con'], t))) AS s_es,
@@ -263,7 +259,7 @@ object QueriesExt {
         |  len(list_filter(toks, t -> list_contains(['le','les','des','est','avec'], t))) AS s_fr
         |  FROM b)
         |SELECT doc_id,
-        |  CASE WHEN greatest(s_en, s_es, s_de, s_fr) = 0 THEN 'und'
+        |  CASE WHEN coalesce(greatest(s_en, s_es, s_de, s_fr), 0) = 0 THEN 'und'
         |       WHEN s_fr = greatest(s_en, s_es, s_de, s_fr) THEN 'fr'
         |       WHEN s_es = greatest(s_en, s_es, s_de, s_fr) THEN 'es'
         |       WHEN s_en = greatest(s_en, s_es, s_de, s_fr) THEN 'en'
@@ -271,7 +267,7 @@ object QueriesExt {
         |  lang
         |FROM sc ORDER BY doc_id""".stripMargin,
     "q_fingerprint" ->
-      """SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+      s"""SELECT doc_id, md5(trim(regexp_replace(lower(text), '${TF.SepRunRegex}', ' ', 'g'))) AS fp
         |FROM documents ORDER BY doc_id""".stripMargin,
     "q_dedup_exact" ->
       """SELECT md5(substr(text, 1, 40)) AS fp, min(doc_id) AS keep_id, count(*) AS n
@@ -328,9 +324,8 @@ object QueriesExt {
         |SELECT q_id, vec_id, round(sim, 6) AS sim FROM r WHERE rn <= 5
         |ORDER BY q_id, vec_id""".stripMargin,
     "q_ngram_jaccard" ->
-      """WITH b AS (SELECT doc_id,
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS toks
+      s"""WITH b AS (SELECT doc_id,
+        |    ${TF.tokensOracleSql("lower(text)")} AS toks
         |  FROM documents),
         |sh AS (SELECT doc_id,
         |    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]

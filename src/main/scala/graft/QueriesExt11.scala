@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.similarity.{Ivf, IvfPq, Knn, Pq}
+import graft.functions.{TextFunctions => TF}
 
 /** Round-6 continuation: the two retrieval patterns of the hybrid /
   * multi-vector search APIs the reference moves data between —
@@ -317,9 +318,8 @@ object QueriesExt11 {
     // tie-breaks); the dense CTEs are q_cosine_topk's form at k=10 for
     // query ids < 5; fusion = 1/(60+rank) summed over present legs.
     "q_hybrid_rrf" ->
-      """WITH tok AS (SELECT doc_id, unnest(
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END) AS tok
+      s"""WITH tok AS (SELECT doc_id, unnest(
+        |    ${TF.tokensOracleSql("lower(text)")}) AS tok
         |  FROM documents),
         |dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY 1),
         |stats AS (SELECT count(*) AS n,

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.{TextFunctions => TF}
 
 /** Round-6 continuation: the data-mixture half of a training-data
   * pipeline. The reference moves corpora between stores and re-embeds
@@ -396,8 +397,7 @@ object QueriesExt12 {
         |GROUP BY label, pos ORDER BY label, pos""".stripMargin,
     "q_split_nodup" ->
       s"""WITH RECURSIVE b AS (SELECT doc_id,
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END AS toks
+        |    ${TF.tokensOracleSql("lower(text)")} AS toks
         |  FROM documents),
         |sh AS (SELECT doc_id,
         |    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
@@ -507,11 +507,10 @@ object QueriesExt12 {
         |  FROM documents)
         |WHERE rn <= 40 ORDER BY rn""".stripMargin,
     "q_token_budget" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT source, doc_id,
         |    (CAST(substr(source, 4) AS INT) % 3 + 1) * 1000 AS budget,
-        |    len(CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END) AS toks
+        |    len(${TF.tokensOracleSql("lower(text)")}) AS toks
         |  FROM documents),
         |c AS (SELECT source, budget, toks,
         |    sum(toks) OVER (PARTITION BY source
@@ -526,11 +525,10 @@ object QueriesExt12 {
     // gates against the SAME SQL — the oracle is the spec, the kernel
     // only changes which rows pay a sort
     "q_token_budget_salted" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT source, doc_id,
         |    (CAST(substr(source, 4) AS INT) % 3 + 1) * 1000 AS budget,
-        |    len(CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END) AS toks
+        |    len(${TF.tokensOracleSql("lower(text)")}) AS toks
         |  FROM documents),
         |c AS (SELECT source, budget, toks,
         |    sum(toks) OVER (PARTITION BY source

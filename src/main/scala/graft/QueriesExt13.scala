@@ -41,10 +41,8 @@ object QueriesExt13 {
     * verbatim (same tokenization, same md5 constructions, same coins). */
   private val curatedCte =
     s"""WITH b AS (SELECT doc_id, source, text,
-      |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-      |         ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END AS toks,
-      |    CASE WHEN len(trim(text)) = 0 THEN []::VARCHAR[]
-      |         ELSE regexp_split_to_array(trim(text), '\\s+') END AS rtoks
+      |    ${TF.tokensOracleSql("lower(text)")} AS toks,
+      |    ${TF.tokensOracleSql("text")} AS rtoks
       |  FROM documents),
       |q AS (SELECT doc_id, source, text, toks, len(toks) AS n_tok,
       |    CASE WHEN len(rtoks) = 0 THEN 0.0

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Bpe
+import graft.functions.{Bpe, TextFunctions => TF}
 import graft.similarity.Kmeans
 
 /** Round-13 additions: the two remaining corpus-scale TRAINING
@@ -118,8 +118,8 @@ object QueriesExt14 {
     val vocab = graft.functions.Bpe.routeVocab(
       Bpe.tokenizeVocab(words, merges), Some(learned.nWords), words)
     docs.select(col("doc_id"), col("source"),
-        explode(split(trim(col("text")), "\\s+")).as("word"))
-      .filter(col("word") =!= "" && !col("word").contains(Bpe.Sep))
+        explode(TF.tokens(col("text"))).as("word"))
+      .filter(!col("word").contains(Bpe.Sep))
       .join(vocab, Seq("word"))
       .groupBy("source")
       .agg(countDistinct("doc_id").as("n_docs"),
@@ -215,9 +215,9 @@ object QueriesExt14 {
 
   /** The word-frequency CTE (same filters as `Bpe.wordFreq`). */
   private val bpeWf: String =
-    """WITH wf AS MATERIALIZED (SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
-      |  FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w FROM documents)
-      |  WHERE w <> '' AND position(chr(1) IN w) = 0 GROUP BY w)""".stripMargin
+    s"""WITH wf AS MATERIALIZED (SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
+      |  FROM (SELECT unnest(${TF.tokensOracleSql("text")}) AS w FROM documents)
+      |  WHERE position(chr(1) IN w) = 0 GROUP BY w)""".stripMargin
 
   /** wf + w0 prologue shared by the BPE merge oracles: word frequency
     * plus the wrapped symbol string (`Bpe.wrapCol`). */
@@ -265,8 +265,8 @@ object QueriesExt14 {
          |  ) GROUP BY token),
          |dw2 AS (SELECT doc_id, source, wp1, w FROM
          |  (SELECT doc_id, source, generate_subscripts(ws, 1) AS wp1, unnest(ws) AS w FROM
-         |    (SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS ws FROM documents$docFilter))
-         |  WHERE w <> '' AND position(chr(1) IN w) = 0),
+         |    (SELECT doc_id, source, ${TF.tokensOracleSql("text")} AS ws FROM documents$docFilter))
+         |  WHERE position(chr(1) IN w) = 0),
          |tkn AS (SELECT doc_id, source, wp1, generate_subscripts(toks, 1) AS tp1, unnest(toks) AS token FROM
          |  (SELECT dw2.doc_id, dw2.source, dw2.wp1, tokv.toks FROM dw2 JOIN tokv ON dw2.w = tokv.word))""".stripMargin
 
@@ -343,11 +343,11 @@ object QueriesExt14 {
           .mkString(" UNION ALL ") + " ORDER BY rank"),
     "q_bpe_encode" ->
       (bpeProlog(carryWord = true) + bpeMergeSteps(8, carryWord = true) +
-        """,
+        s""",
           |tok AS (SELECT word, CAST(len(string_split(sw[2:length(sw)-1], chr(1)||chr(1))) AS BIGINT) AS n_tok FROM w8),
           |dw AS (SELECT doc_id, source, w FROM
-          |  (SELECT doc_id, source, unnest(regexp_split_to_array(trim(text), '\s+')) AS w FROM documents)
-          |  WHERE w <> '' AND position(chr(1) IN w) = 0)
+          |  (SELECT doc_id, source, unnest(${TF.tokensOracleSql("text")}) AS w FROM documents)
+          |  WHERE position(chr(1) IN w) = 0)
           |SELECT source, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
           |  CAST(count(*) AS BIGINT) AS n_words, CAST(sum(n_tok) AS BIGINT) AS n_tokens
           |FROM dw JOIN tok ON dw.w = tok.word GROUP BY source ORDER BY source""".stripMargin))

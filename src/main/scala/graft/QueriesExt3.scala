@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, DupClusters}
 import graft.ops.{AsofJoin, Profiling, Sessions}
+import graft.functions.{TextFunctions => TF}
 
 /** Batch 4 of the driver-contract queries: graph/temporal/profiling
   * operators a large-scale training-data pipeline needs on top of the
@@ -293,9 +294,8 @@ object QueriesExt3 {
 
   val oracleSql: Map[String, String] = Map(
     "q_dup_clusters" ->
-      """WITH RECURSIVE b AS (SELECT doc_id,
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS toks
+      s"""WITH RECURSIVE b AS (SELECT doc_id,
+        |    ${TF.tokensOracleSql("lower(text)")} AS toks
         |  FROM documents),
         |sh AS (SELECT doc_id,
         |    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
@@ -394,9 +394,8 @@ object QueriesExt3 {
         |      FROM embeddings)
         |GROUP BY label, pos ORDER BY label, pos""".stripMargin,
     "q_contamination" ->
-      """WITH b AS (SELECT doc_id,
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS toks
+      s"""WITH b AS (SELECT doc_id,
+        |    ${TF.tokensOracleSql("lower(text)")} AS toks
         |  FROM documents),
         |sh AS (SELECT doc_id,
         |    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
@@ -411,9 +410,8 @@ object QueriesExt3 {
         |WHERE shared >= 3 AND doc_id <> probe_id
         |ORDER BY doc_id, probe_id""".stripMargin,
     "q_tfidf" ->
-      """WITH tok AS (SELECT doc_id, unnest(
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END) AS tok
+      s"""WITH tok AS (SELECT doc_id, unnest(
+        |    ${TF.tokensOracleSql("lower(text)")}) AS tok
         |  FROM documents),
         |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok
         |       WHERE doc_id < 10 GROUP BY 1, 2),
@@ -431,9 +429,8 @@ object QueriesExt3 {
         |  FROM documents)
         |WHERE rn <= 3 ORDER BY lang, rn""".stripMargin,
     "q_vocab" ->
-      """WITH tok AS (SELECT doc_id, unnest(
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END) AS tok
+      s"""WITH tok AS (SELECT doc_id, unnest(
+        |    ${TF.tokensOracleSql("lower(text)")}) AS tok
         |  FROM documents)
         |SELECT tok, count(*) AS occurrences, count(DISTINCT doc_id) AS doc_freq
         |FROM tok GROUP BY tok

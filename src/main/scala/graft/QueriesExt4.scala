@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.ops.RangeJoin
 import graft.similarity.Pq
+import graft.functions.{TextFunctions => TF}
 
 /** Round-3 query additions: range/interval join, multi-dimensional
   * aggregation (cube, pivot), exact statistical aggregates, an
@@ -201,9 +202,7 @@ object QueriesExt4 {
     * QueriesExt5's banded-pair query so both gates see one construction. */
   private[graft] def md5Simhash16(docs: DataFrame): DataFrame = {
     val tok = docs
-      .select(col("doc_id"),
-        explode(split(trim(lower(col("text"))), "\\s+")).as("tok"))
-      .filter(col("tok") =!= "")
+      .select(col("doc_id"), explode(QueriesCommon.toksExpr).as("tok"))
       .withColumn("hx", substring(md5(col("tok")), 1, 4))
     val votes = (0 until 16).map { j =>
       sum(expr(
@@ -295,11 +294,11 @@ object QueriesExt4 {
     * used by q_simhash_oracle here and q_simhash_pairs (QueriesExt5) so
     * both gates run one construction. */
   private[graft] val simhash16Cte: String =
-    """tok AS (SELECT doc_id, unnest(
-      |    regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
+    s"""tok AS (SELECT doc_id, unnest(
+      |    ${TF.tokensOracleSql("lower(text)")}) AS tok
       |  FROM documents),
       |h AS (SELECT doc_id, substr(md5(tok), 1, 4) AS hx
-      |      FROM tok WHERE tok <> ''),
+      |      FROM tok),
       |b AS (SELECT doc_id, j,
       |    CASE WHEN ((instr('0123456789abcdef', substr(hx, (j // 4) + 1, 1)) - 1)
       |               >> (3 - (j % 4))) & 1 = 1 THEN 1 ELSE -1 END AS vote
@@ -374,9 +373,8 @@ object QueriesExt4 {
       s"""WITH $simhash16Cte
         |SELECT doc_id, simhash16 FROM fp ORDER BY doc_id""".stripMargin,
     "q_minhash_oracle" ->
-      """WITH b AS (SELECT doc_id,
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS toks
+      s"""WITH b AS (SELECT doc_id,
+        |    ${TF.tokensOracleSql("lower(text)")} AS toks
         |  FROM documents),
         |sh AS (SELECT doc_id,
         |    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]

@@ -272,8 +272,7 @@ object QueriesExt5 {
         |ORDER BY id_a, id_b""".stripMargin,
     "q_quality_filter" ->
       s"""WITH b AS (SELECT doc_id,
-        |    CASE WHEN len(trim(text)) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
+        |    ${TF.tokensOracleSql("text")} AS toks
         |  FROM documents),
         |f AS (SELECT doc_id, len(toks) AS n_tok,
         |    CASE WHEN len(toks) = 0 THEN 0.0
@@ -289,17 +288,15 @@ object QueriesExt5 {
         |FROM f ORDER BY doc_id""".stripMargin,
     "q_strip_stopwords" ->
       s"""WITH b AS (SELECT doc_id, text,
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END AS toks
+        |    ${TF.tokensOracleSql("lower(text)")} AS toks
         |  FROM documents),
         |c AS (SELECT doc_id, text,
-        |    array_to_string(list_filter(toks, t -> NOT list_contains($stopList, t)), ' ') AS clean_text
+        |    CASE WHEN toks IS NOT NULL THEN coalesce(array_to_string(
+        |      list_filter(toks, t -> NOT list_contains($stopList, t)), ' '), '') END AS clean_text
         |  FROM b)
         |SELECT doc_id, clean_text,
-        |  (CASE WHEN len(trim(text)) = 0 THEN 0
-        |        ELSE len(regexp_split_to_array(trim(text), '\\s+')) END
-        |   - CASE WHEN len(trim(clean_text)) = 0 THEN 0
-        |          ELSE len(regexp_split_to_array(trim(clean_text), '\\s+')) END) AS n_removed
+        |  (len(${TF.tokensOracleSql("text")})
+        |   - len(${TF.tokensOracleSql("clean_text")})) AS n_removed
         |FROM c ORDER BY doc_id""".stripMargin,
     "q_dedup_survivors" ->
       """WITH d AS (SELECT doc_id, lang, n_chars,
@@ -309,9 +306,8 @@ object QueriesExt5 {
         |FROM d JOIN k ON d.fp = k.fp AND d.doc_id = k.doc_id
         |ORDER BY d.doc_id""".stripMargin,
     "q_repetition" ->
-      """WITH b AS (SELECT doc_id,
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS toks
+      s"""WITH b AS (SELECT doc_id,
+        |    ${TF.tokensOracleSql("lower(text)")} AS toks
         |  FROM documents),
         |tc AS (SELECT doc_id, tok, count(*) AS c
         |       FROM (SELECT doc_id, unnest(toks) AS tok FROM b) GROUP BY 1, 2),
@@ -341,10 +337,10 @@ object QueriesExt5 {
         s"CAST(coalesce(sum(CASE WHEN idx = $i THEN sgn ELSE 0 END), 0) AS BIGINT) AS e$i")
         .mkString(",\n        |    ")
       s"""WITH tok AS (SELECT doc_id, unnest(
-        |    regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
+        |    ${TF.tokensOracleSql("lower(text)")}) AS tok
         |  FROM documents),
         |h AS (SELECT doc_id, substr(md5(tok), 1, 5) AS hx
-        |      FROM tok WHERE tok <> ''),
+        |      FROM tok),
         |v AS (SELECT doc_id,
         |    ((instr('0123456789abcdef', substr(hx, 1, 1)) - 1) * 4096 +
         |     (instr('0123456789abcdef', substr(hx, 2, 1)) - 1) * 256 +

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.{TextFunctions => TF}
 
 /** Training-data-pipeline operators behind the DuckDB oracle gate,
   * each a distinct op family not yet covered (round 3 + round 4):
@@ -393,9 +394,8 @@ object QueriesExt6 {
 
   val oracleSql: Map[String, String] = Map(
     "q_lm_score" ->
-      """WITH d AS (SELECT doc_id,
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS toks
+      s"""WITH d AS (SELECT doc_id,
+        |    ${TF.tokensOracleSql("lower(text)")} AS toks
         |  FROM documents),
         |bg AS (SELECT doc_id, unnest(list_zip(toks[:-2], toks[2:])) AS p FROM d),
         |b AS (SELECT doc_id, p[1] AS w1, p[2] AS w2 FROM bg),
@@ -409,9 +409,8 @@ object QueriesExt6 {
         |JOIN c1 ON b.w1 = c1.w1 CROSS JOIN v
         |GROUP BY 1 ORDER BY doc_id""".stripMargin,
     "q_bm25" ->
-      """WITH tok AS (SELECT doc_id, unnest(
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END) AS tok
+      s"""WITH tok AS (SELECT doc_id, unnest(
+        |    ${TF.tokensOracleSql("lower(text)")}) AS tok
         |  FROM documents),
         |dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY 1),
         |stats AS (SELECT count(*) AS n,
@@ -437,9 +436,8 @@ object QueriesExt6 {
         |FROM r WHERE rn <= 10
         |ORDER BY query_id, doc_id""".stripMargin,
     "q_winnow" ->
-      """WITH b AS (SELECT doc_id,
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS toks
+      s"""WITH b AS (SELECT doc_id,
+        |    ${TF.tokensOracleSql("lower(text)")} AS toks
         |  FROM documents),
         |g AS (SELECT doc_id, len(toks) - 2 AS ng,
         |    generate_subscripts(grams, 1) - 1 AS pos, unnest(grams) AS gram
@@ -485,9 +483,8 @@ object QueriesExt6 {
         |    '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g') AS redacted
         |FROM p ORDER BY doc_id""".stripMargin,
     "q_tfidf_pairs" ->
-      """WITH tok AS (SELECT doc_id, unnest(
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END) AS tok
+      s"""WITH tok AS (SELECT doc_id, unnest(
+        |    ${TF.tokensOracleSql("lower(text)")}) AS tok
         |  FROM documents),
         |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok
         |       WHERE doc_id < 100 GROUP BY 1, 2),

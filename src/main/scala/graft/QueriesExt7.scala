@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.{TextFunctions => TF}
 
 /** Round-3 continuation batch: four more operator families behind the
   * DuckDB oracle gate, each one a pipeline capability not yet covered:
@@ -30,8 +31,6 @@ object QueriesExt7 {
   // heavy per-row kernels sit on this one (see QueriesCommon.fannedTable)
   private def ft(s: SparkSession, dir: String, name: String): DataFrame =
     QueriesCommon.fannedTable(s, dir, name)
-
-  private def tokens(d: DataFrame): DataFrame = QueriesCommon.tokens(d)
 
   /** Exact repeated-span statistics over word 8-grams — delegates to
     * `Dedup.dupSpanStats` (grams shuffle as xxhash64 longs via a
@@ -106,7 +105,7 @@ object QueriesExt7 {
   /** Entropy kernel over any (doc_id, text) frame (spec-tested on
     * hand-built docs; the sf corpus goes through the oracle gate). */
   def entropyOf(docs: DataFrame): DataFrame =
-    tokens(docs)
+    QueriesCommon.tokens(docs)
       .select(col("doc_id"), explode(col("toks")).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
       .groupBy("doc_id")
@@ -138,9 +137,8 @@ object QueriesExt7 {
 
   val oracleSql: Map[String, String] = Map(
     "q_dup_excise" ->
-      """WITH b AS (SELECT doc_id,
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS toks
+      s"""WITH b AS (SELECT doc_id,
+        |    ${TF.tokensOracleSql("lower(text)")} AS toks
         |  FROM documents),
         |tok AS (SELECT doc_id, unnest(toks) AS tok,
         |          generate_subscripts(toks, 1) - 1 AS t FROM b),
@@ -165,9 +163,8 @@ object QueriesExt7 {
         |FROM documents d LEFT JOIN ka USING (doc_id) LEFT JOIN ca USING (doc_id)
         |ORDER BY d.doc_id""".stripMargin,
     "q_dup_spans" ->
-      """WITH b AS (SELECT doc_id,
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS toks
+      s"""WITH b AS (SELECT doc_id,
+        |    ${TF.tokensOracleSql("lower(text)")} AS toks
         |  FROM documents),
         |g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks) - 6),
         |        i -> array_to_string(toks[i:i+7], ' '))) AS gram
@@ -198,9 +195,8 @@ object QueriesExt7 {
          |FROM orders ORDER BY z, o_orderkey LIMIT 50""".stripMargin
     },
     "q_token_entropy" ->
-      """WITH tok AS (SELECT doc_id, unnest(
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END) AS tok
+      s"""WITH tok AS (SELECT doc_id, unnest(
+        |    ${TF.tokensOracleSql("lower(text)")}) AS tok
         |  FROM documents),
         |c AS (SELECT doc_id, tok, count(*) AS c FROM tok GROUP BY 1, 2)
         |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,

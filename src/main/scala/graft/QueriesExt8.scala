@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.{TextFunctions => TF}
 
 /** Round-3 continuation batch 2: corpus reshaping operators —
   *
@@ -22,14 +23,12 @@ object QueriesExt8 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     QueriesCommon.table(s, dir, name)
 
-  private def tokens(d: DataFrame): DataFrame = QueriesCommon.tokens(d)
-
   /** Overlapping fixed-size chunks: a window of `size` tokens starts at
     * every `stride` position while the start is inside the doc; trailing
     * windows may be short (slice clamps at the end). Emits
     * (doc_id, chunk_id, n_tokens, fingerprint). */
   def chunk(docs: DataFrame, width: Int = 32, stride: Int = 24): DataFrame =
-    tokens(docs)
+    QueriesCommon.tokens(docs)
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(1, size(toks), $stride), st -> slice(toks, st, $width))"))
@@ -70,9 +69,8 @@ object QueriesExt8 {
 
   val oracleSql: Map[String, String] = Map(
     "q_chunk" ->
-      """WITH b AS (SELECT doc_id,
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN []::VARCHAR[]
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS toks
+      s"""WITH b AS (SELECT doc_id,
+        |    ${TF.tokensOracleSql("lower(text)")} AS toks
         |  FROM documents),
         |s AS (SELECT doc_id, toks, range(1, len(toks) + 1, 24) AS sts
         |  FROM b WHERE len(toks) > 0),
@@ -82,9 +80,8 @@ object QueriesExt8 {
         |  md5(array_to_string(toks[st:st+31], ' ')) AS fp
         |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
     "q_pack" ->
-      """WITH n AS (SELECT source, doc_id,
-        |    CASE WHEN len(trim(lower(text))) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(lower(text)), '\s+')) END AS n_toks
+      s"""WITH n AS (SELECT source, doc_id,
+        |    len(${TF.tokensOracleSql("lower(text)")}) AS n_toks
         |  FROM documents),
         |c AS (SELECT source, doc_id, n_toks,
         |    CAST(((sum(n_toks) OVER (PARTITION BY source ORDER BY doc_id

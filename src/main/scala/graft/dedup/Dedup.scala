@@ -83,12 +83,12 @@ object Dedup {
     docs.groupBy(fp.as("fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n"))
 
-  /** THE tokenization every kernel in this file shares (and the Scala
-    * twin of the SQL `filter(split(trim(lower(text)), '\s+'), ...)`
-    * the oracle queries use) — one definition so the string, hashed,
-    * and positional-gram paths can never drift. */
+  /** THE tokenization every kernel in this file shares: the JVM form
+    * of `QueriesCommon.toksExpr`, `TextFunctions.tokens(lower(text))`,
+    * so the string, hashed, and positional-gram paths can never
+    * drift. */
   private def wordTokens(text: String): Array[String] =
-    text.toLowerCase.trim.split("\\s+").filter(_.nonEmpty)
+    graft.functions.TextFunctions.splitTokens(text.toLowerCase)
 
   /** The k-token window starting at `i`, joined with single spaces. */
   private def windowAt(toks: Array[String], i: Int, k: Int): String = {
@@ -423,10 +423,7 @@ object Dedup {
     val enc = org.apache.spark.sql.Encoders.row(schema)
     in.map { r =>
       val text = if (r.isNullAt(1)) "" else r.getString(1)
-      val toks = {
-        val t = text.toLowerCase.trim
-        if (t.isEmpty) Array.empty[String] else t.split("\\s+")
-      }
+      val toks = wordTokens(text)
       val votes = new Array[Int](64)
       toks.foreach { tok =>
         // identical to the SQL xxhash64(tok): Spark's XxHash64, seed 42

@@ -7,40 +7,29 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.TextFunctions
 
 /** Static tokenize-and-hash kernel for [[TokenXxHashes]] /
   * [[BigramXxHashes]], shaped for codegen (Scala object → static
   * forwarders, so generated Java calls it directly).
   *
   * The SQL formulation of the bigram-LM pipeline —
-  * `transform(filter(split(trim(lower(text)), '\s+'), x -> x != ''),
-  * x -> xxhash64(x))` and the tail-zip built on it
-  * ([[graft.QueriesCommon.bigramsFromToksSql]]) — evaluates as a stack
-  * of interpreted higher-order functions: a regex `Pattern` walk, one
-  * `UTF8String` allocation per token (twice, for the two slices of the
-  * zip), and per-element lambda dispatch, none of it inside
-  * whole-stage codegen. At 15.7 GiB that kernel was ~42 s of
-  * q_lm_score's ~60 s executor CPU (LmProbe, round 10). This kernel is
-  * the byte-scan twin: lowercase once (`UTF8String.toLowerCase`, the
-  * exact `Lower` kernel), then a single pass over the UTF-8 bytes.
-  *
-  * Equivalence argument (spec-asserted on adversarial inputs against
-  * the SQL form, the same pinning contract Md5Bucket uses):
-  *  - Java's `\s` is exactly the ASCII bytes 0x09–0x0D and 0x20; every
-  *    byte of a multi-byte UTF-8 sequence is ≥ 0x80, so a byte-level
-  *    separator scan can never split inside a code point and matches
-  *    the regex run-split exactly.
-  *  - `split(str, '\s+', -1)` emits an empty leading element when the
-  *    string starts with a separator run and an empty trailing element
-  *    when it ends with one; `filter(_ != '')` drops both — i.e. the
-  *    composite yields precisely the non-empty byte ranges between
-  *    separator runs, which is what the scan emits. `trim` only strips
-  *    leading/trailing 0x20, a subset of the separator set, so it is a
-  *    semantic no-op under the scan.
-  *  - Per-token hash is `XXH64.hashUTF8String(tok, 42L)` over a
-  *    ZERO-COPY view (`UTF8String.fromAddress`) — the very method
-  *    Spark's `xxhash64(...)` calls with its default seed 42, so hash
-  *    values are bit-identical to the SQL pipeline's.
+  * `transform(tokens(lower(text)), x -> xxhash64(x))` and the tail-zip
+  * built on it ([[graft.QueriesCommon.bigramsFromToksSql]]) —
+  * evaluates as a stack of interpreted higher-order functions: a regex
+  * `Pattern` walk, one `UTF8String` allocation per token (twice, for
+  * the two slices of the zip), and per-element lambda dispatch, none
+  * of it inside whole-stage codegen. At 15.7 GiB that kernel was ~42 s
+  * of q_lm_score's ~60 s executor CPU (LmProbe, round 10). This kernel
+  * is the byte-scan twin: lowercase once (`UTF8String.toLowerCase`,
+  * the exact `Lower` kernel), then a single pass over the UTF-8 bytes
+  * that emits the maximal runs of non-separator bytes
+  * ([[graft.functions.TextFunctions.isSep]], the one token
+  * definition). Per-token hash is `XXH64.hashUTF8String(tok, 42L)`
+  * over a ZERO-COPY view (`UTF8String.fromAddress`) — the very method
+  * Spark's `xxhash64(...)` calls with its default seed 42, so hash
+  * values are bit-identical to the SQL pipeline's (TokenHashSpec pins
+  * it on adversarial inputs, the contract Md5Bucket uses).
   *
   * The hashes feed grouping (bigram/unigram counts, vocab distinct) —
   * the reference's CCNet-style scorer groups on token identity
@@ -50,11 +39,6 @@ import org.apache.spark.unsafe.types.UTF8String
 object TokenHashUtil {
   /** Spark's xxhash64 default seed. */
   final val Seed = 42L
-
-  /** Java-regex `\s`: 0x09 (tab), 0x0A (LF), 0x0B (VT), 0x0C (FF),
-    * 0x0D (CR), 0x20 (space). */
-  private def isSep(b: Byte): Boolean =
-    b == 0x20 || (b >= 0x09 && b <= 0x0d)
 
   /** xxhash64-seed-42 of each whitespace-delimited token of lower(s),
     * in document order. */
@@ -67,10 +51,10 @@ object TokenHashUtil {
     var cnt = 0
     var i = 0
     while (i < n) {
-      while (i < n && isSep(Platform.getByte(base, off + i))) i += 1
+      while (i < n && TextFunctions.isSep(Platform.getByte(base, off + i))) i += 1
       if (i < n) {
         val start = i
-        while (i < n && !isSep(Platform.getByte(base, off + i))) i += 1
+        while (i < n && !TextFunctions.isSep(Platform.getByte(base, off + i))) i += 1
         if (cnt == out.length) out = java.util.Arrays.copyOf(out, cnt * 2)
         out(cnt) = XXH64.hashUTF8String(
           UTF8String.fromAddress(base, off + start, i - start), Seed)
@@ -87,8 +71,7 @@ object TokenHashUtil {
     * no hashing, and no array — counts maximal non-separator byte
     * runs, allocation-free. Case mapping is count-neutral (no char's
     * lowercase adds or removes whitespace) so skipping `toLowerCase`
-    * is exact; the byte-level separator argument above covers the
-    * rest. ≡ size(toksExpr) ≡ size(tokenHashes) on every input
+    * is exact. ≡ size(tokens(s)) ≡ size(tokenHashes) on every input
     * (TokenCountFastSpec). */
   def tokenCount(s: UTF8String): Int = {
     val base = s.getBaseObject
@@ -97,10 +80,10 @@ object TokenHashUtil {
     var cnt = 0
     var i = 0
     while (i < n) {
-      while (i < n && isSep(Platform.getByte(base, off + i))) i += 1
+      while (i < n && TextFunctions.isSep(Platform.getByte(base, off + i))) i += 1
       if (i < n) {
         cnt += 1
-        while (i < n && !isSep(Platform.getByte(base, off + i))) i += 1
+        while (i < n && !TextFunctions.isSep(Platform.getByte(base, off + i))) i += 1
       }
     }
     cnt
@@ -152,7 +135,7 @@ case class TokenXxHashes(child: Expression) extends UnaryExpression
   * identities (BM25's avgdl stats, token budgets, packing bins, the
   * curation n_tok denomination): one allocation-free byte scan, fully
   * codegen'd. See [[TokenHashUtil.tokenCount]] for the equivalence
-  * argument; TokenCountFastSpec pins it against both array forms. */
+  * argument; TokenCountFastSpec pins it against every token form. */
 case class TokenCount(child: Expression) extends UnaryExpression
     with Serializable {
   override def prettyName: String = "graft_token_count"

@@ -127,12 +127,12 @@ object Bpe {
   }
 
   /** Corpus → (word, freq): THE corpus-scale pass (one exchange, with
-    * map-side partial counts). Whitespace pre-tokenization; empty and
+    * map-side partial counts). The words are `TextFunctions.tokens`;
     * SEP-containing words are dropped on both the Spark and oracle
     * sides. */
   def wordFreq(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(split(trim(col(textCol)), "\\s+")).as("word"))
-      .filter(col("word") =!= "" && !col("word").contains(Sep))
+    docs.select(explode(TextFunctions.tokens(col(textCol))).as("word"))
+      .filter(!col("word").contains(Sep))
       .groupBy("word").agg(count(lit(1)).as("freq"))
 
   /** ·c1··c2··…·cn· — the wrapped symbol string of a word. */
@@ -169,7 +169,7 @@ object Bpe {
 
   /** Whole-document BPE token count as ONE pure column — no explode,
     * no join: the sum over the doc's words of each word's token count
-    * (same empty/SEP word filters as `wordFreq`). Higher-order
+    * (same words and SEP filter as `wordFreq`). Higher-order
     * functions evaluate interpreted, so this is the right form ONLY
     * when the merge table is small (an oracle gate, a handful of
     * merges); [[docTokenCountFastCol]] is the same contract as one
@@ -178,8 +178,7 @@ object Bpe {
     * shape. */
   def docTokenCountCol(text: Column, merges: Seq[Merge]): Column = {
     val words = org.apache.spark.sql.functions.filter(
-      split(trim(text), "\\s+"),
-      w => w =!= lit("") && !w.contains(Sep))
+      TextFunctions.tokens(text), w => !w.contains(Sep))
     aggregate(words, lit(0L), (acc, w) => acc + tokenCountCol(w, merges))
   }
 
@@ -363,8 +362,8 @@ object Bpe {
     // limit-probe job a second time over the same vocabulary
     val vocab = routeVocab(vocab0, vocabRows, words)
     val dw = docs.select(keyCols.map(col) :+
-        posexplode(split(trim(col(textCol)), "\\s+")).as(Seq("word_pos", "word")): _*)
-      .filter(col("word") =!= "" && !col("word").contains(Sep))
+        posexplode(TextFunctions.tokens(col(textCol))).as(Seq("word_pos", "word")): _*)
+      .filter(!col("word").contains(Sep))
     val toks = dw.join(vocab, Seq("word"))
       .select(keyCols.map(col) :+ col("word_pos") :+
         posexplode(col("toks")).as(Seq("tok_pos", "token")): _*)
@@ -499,8 +498,8 @@ object Bpe {
     val vocab0 = tokenizeVocab(words, merges)
     val vocab = routeVocab(vocab0, vocabRows, words)
     val dw = docs.select(keyCols.map(col) :+
-        explode(split(trim(col(textCol)), "\\s+")).as("word"): _*)
-      .filter(col("word") =!= "" && !col("word").contains(Sep))
+        explode(TextFunctions.tokens(col(textCol))).as("word"): _*)
+      .filter(!col("word").contains(Sep))
     dw.join(vocab, Seq("word"))
       .groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("n_words"), sum(col("n_tok")).as("n_tokens"))

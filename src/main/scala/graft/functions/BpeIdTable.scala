@@ -84,9 +84,9 @@ final class BpeIdTable(val table: BpeMergeTable, val ids: Array[(String, Long)])
 
   /** Whole-document token-ID sequence in document order, as one
     * byte-scan kernel call — the id-emitting sibling of
-    * [[BpeMergeTable.docTokenCount]] (identical word-split semantics:
-    * Java-regex `\s` byte runs, SEP-containing words skipped — see
-    * that method's equivalence argument). Called from generated code
+    * [[BpeMergeTable.docTokenCount]] (identical word split:
+    * `TextFunctions.tokens` as non-separator byte runs, SEP-containing
+    * words skipped). Called from generated code
     * (BpeDocTokenIds's doGenCode). */
   def docTokenIds(text: UTF8String): ArrayData = {
     val base = text.getBaseObject
@@ -96,11 +96,11 @@ final class BpeIdTable(val table: BpeMergeTable, val ids: Array[(String, Long)])
     var m = 0
     var i = 0
     while (i < n) {
-      while (i < n && BpeMergeTable.isSep(Platform.getByte(base, off + i))) i += 1
+      while (i < n && TextFunctions.isSep(Platform.getByte(base, off + i))) i += 1
       if (i < n) {
         val start = i
         var hasSepChar = false
-        while (i < n && !BpeMergeTable.isSep(Platform.getByte(base, off + i))) {
+        while (i < n && !TextFunctions.isSep(Platform.getByte(base, off + i))) {
           if (Platform.getByte(base, off + i) == 0x01) hasSepChar = true
           i += 1
         }

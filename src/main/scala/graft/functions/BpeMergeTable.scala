@@ -151,14 +151,11 @@ final class BpeMergeTable(val merges: Array[Bpe.Merge]) extends Serializable {
   }
 
   /** [[Bpe.docTokenCountCol]]'s contract over a whole document as one
-    * byte-scan: whitespace-run word split (Java-regex `\s` is exactly
-    * the ASCII bytes 0x09–0x0D and 0x20, and every byte of a multi-byte
-    * UTF-8 sequence is ≥ 0x80, so the byte scan can never split inside
-    * a code point and matches `split(trim(text), '\s+')` + drop-empties
-    * exactly — the TokenHashUtil equivalence argument, spec-pinned
-    * there on adversarial inputs), SEP-containing words skipped (U+0001
-    * is the single byte 0x01), token counts summed. Called from
-    * generated code (BpeDocTokenCount's doGenCode). */
+    * byte-scan: the words are `TextFunctions.tokens(text)`, scanned as
+    * maximal runs of non-separator bytes ([[TextFunctions.isSep]]),
+    * SEP-containing words skipped (U+0001 is the single byte 0x01),
+    * token counts summed. Called from generated code
+    * (BpeDocTokenCount's doGenCode). */
   def docTokenCount(text: UTF8String): Long = {
     val base = text.getBaseObject
     val off = text.getBaseOffset
@@ -166,11 +163,11 @@ final class BpeMergeTable(val merges: Array[Bpe.Merge]) extends Serializable {
     var total = 0L
     var i = 0
     while (i < n) {
-      while (i < n && isSep(Platform.getByte(base, off + i))) i += 1
+      while (i < n && TextFunctions.isSep(Platform.getByte(base, off + i))) i += 1
       if (i < n) {
         val start = i
         var hasSepChar = false
-        while (i < n && !isSep(Platform.getByte(base, off + i))) {
+        while (i < n && !TextFunctions.isSep(Platform.getByte(base, off + i))) {
           if (Platform.getByte(base, off + i) == 0x01) hasSepChar = true
           i += 1
         }
@@ -247,10 +244,6 @@ object BpeMergeTable {
       fresh
     }
   }
-
-  /** Java-regex `\s` bytes (see TokenHashUtil). */
-  private[functions] def isSep(b: Byte): Boolean =
-    b == 0x20 || (b >= 0x09 && b <= 0x0d)
 
   /** Minimal open-addressed int set (linear probe, power-of-2 capacity
     * ≥ 2× elements, Fibonacci smear — short-string hashCodes cluster

@@ -13,50 +13,88 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Whitespace tokens (empty input → empty array, not [""]). */
-  def tokens(c: Column): Column =
-    when(length(trim(c)) === 0, array().cast("array<string>"))
-      .otherwise(split(trim(c), "\\s+"))
+  /** THE token definition: a token is a maximal run of characters
+    * outside Java regex `\s`, the separators HT LF VT FF CR
+    * (0x09–0x0D) and SP (0x20). The set is written here once; every
+    * form the tree needs is rendered from it: the byte/char predicate
+    * [[isSep]] the kernels and JVM loops scan with, the Column form
+    * [[tokens]], the Spark SQL text [[tokensSql]] and the DuckDB
+    * oracle fragment [[tokensOracleSql]]. No form spells `\s`: DuckDB's
+    * RE2 `\s` leaves out VT. */
+  private final val SepLo = 0x09
+  private final val SepHi = 0x0d
+  private final val SepSpace = 0x20
 
-  /** Whitespace token count (a cheap proxy for BPE token counts; the
-    * regex variant below approximates subword splits): `size(tokens(c))`
-    * and `size(QueriesCommon.toksExpr)` WITHOUT materializing the token
-    * array. The count-only byte-scan kernel
-    * ([[graft.expressions.TokenCount]] — no lowercase, no hashing, no
-    * token allocations, whole-stage codegen) serves the counts-ONLY
-    * passes (BM25's avgdl stats, token budgets, packing bins, curation
-    * n_tok). Measured per-row CPU (tools/TokenCountProbe, r15:
-    * ×32-replicated sf0.1 text, cached, local[1], min-of-5 over two
-    * runs): interpreted filter/split tower 0.048–0.053 s,
-    * `regexp_count(c,'\S+')` 0.028–0.030 s, sizing the fused hash
-    * kernel 0.028–0.034 s, this kernel 0.025–0.031 s — ~1.8× under the
-    * tower it replaces at the toksExpr sites, and never worse than
-    * (plus allocation-free vs) the alternatives at the kernel-size
-    * sites; row-for-row equal everywhere.
-    *
-    * Equality argument (all inputs, not just the probe corpus): the
-    * non-empty elements of `split(s, '\s+')` are exactly the maximal
-    * runs of non-whitespace in s (separators are \s+ matches; a
-    * leading separator contributes one leading "" element and a
-    * trailing separator one trailing "" element — Spark's split uses
-    * limit -1, which KEEPS trailing empties, unlike Java's
-    * String.split — and the x != '' filter drops both; interior
-    * empties cannot occur under the + quantifier). `trim` strips only
-    * edge spaces — removing no \S run — and no character's lowercase
-    * mapping adds or removes whitespace, so `trim`/`lower` drop out of
-    * the COUNT even though they shape the token TEXT. Hence
-    * size(filter(split(trim(lower(c)), '\s+'), x != '')) ≡ the
-    * non-whitespace-run count for every c (both null on null); the
-    * kernel's byte-level separator scan matches Java `\s` exactly
-    * (TokenHashUtil's argument). TokenCountFastSpec pins all of it on
-    * the adversarial edge set. Null contract: the kernel returns null
-    * for null text, equal to size(...) under Spark 4's default ANSI
-    * mode; a deployment setting spark.sql.ansi.enabled=false flips the
-    * replaced size(...) forms to legacy sizeOfNull = -1 while the
-    * kernel stays null — the engine ships (and the spec asserts) the
-    * ANSI default, so the equivalence claim is scoped to it. Anything
-    * consuming token identities still needs toksExpr /
-    * tokenHashesCol. */
+  /** Separator test for a UTF-16 char or a UTF-8 byte. Every byte of a
+    * multi-byte UTF-8 sequence is ≥ 0x80 (negative as a `Byte`), so a
+    * byte scan never splits inside a code point. */
+  def isSep(c: Int): Boolean = c == SepSpace || (c >= SepLo && c <= SepHi)
+
+  /** The separator set as a regex character-class body,
+    * `\x09-\x0D\x20`, which Java regex and RE2 read alike. */
+  private val SepClass = f"\\x$SepLo%02X-\\x$SepHi%02X\\x$SepSpace%02X"
+
+  /** One separator run (the whitespace that [[fingerprint]] and
+    * [[charShingles]] collapse to one space). */
+  val SepRunRegex: String = s"[$SepClass]+"
+
+  /** One punctuation character: neither ASCII alphanumeric nor a
+    * separator. */
+  val PunctRegex: String = s"[^A-Za-z0-9$SepClass]"
+
+  /** One BPE-ish unit: a letter run, a digit, or a punctuation
+    * character. */
+  val BpeishRegex: String = s"[A-Za-z]+|[0-9]|$PunctRegex"
+
+  /** Whitespace tokens, in order (null on null, `[]` on empty or
+    * whitespace-only text): split on separator runs, then drop the ""
+    * a separator at either edge leaves. Both steps are codegen'd and
+    * keep the non-null element type. Case folding is the caller's
+    * `lower(...)`. */
+  def tokens(c: Column): Column =
+    array_remove(split(c, SepRunRegex), lit(""))
+
+  /** [[tokens]] of the Spark SQL expression `e`, as Spark SQL text (the
+    * parser unescapes backslashes, so they are doubled). */
+  def tokensSql(e: String): String =
+    s"array_remove(split($e, '${SepRunRegex.replace("\\", "\\\\")}'), '')"
+
+  /** [[tokens]] of the DuckDB expression `e`, as DuckDB SQL text: the
+    * oracle's fragment, every match of one token (DuckDB string
+    * literals keep backslashes). */
+  def tokensOracleSql(e: String): String =
+    s"regexp_extract_all($e, '[^$SepClass]+')"
+
+  /** [[tokens]] on the JVM, for kernels that work on Scala strings. */
+  def splitTokens(s: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    val n = s.length
+    var i = 0
+    while (i < n) {
+      while (i < n && isSep(s.charAt(i))) i += 1
+      if (i < n) {
+        val start = i
+        while (i < n && !isSep(s.charAt(i))) i += 1
+        out += s.substring(start, i)
+      }
+    }
+    out.result()
+  }
+
+  /** Token count without building the token array: `size(tokens(c))`,
+    * as the allocation-free byte-scan kernel
+    * [[graft.expressions.TokenCount]] (no lowercase, no hashing, no
+    * token allocations, whole-stage codegen). It serves the
+    * counts-only passes (BM25's avgdl stats, token budgets, packing
+    * bins, curation n_tok); measured in r15 at ~1.8× less per-row CPU
+    * than the interpreted split tower it replaced. Case mapping adds
+    * or removes no separator, so `size(tokens(lower(c)))` is the same
+    * count. TokenCountFastSpec pins the kernel against every token
+    * form on the edge set. Null contract: the kernel returns null for
+    * null text, equal to `size(...)` under Spark 4's default ANSI
+    * mode; with spark.sql.ansi.enabled=false `size` returns the legacy
+    * -1 while the kernel stays null, so the equality is scoped to the
+    * ANSI default the engine ships (and the spec asserts). */
   def tokenCount(c: Column): Column =
     org.apache.spark.sql.graftbridge.Bridge.column(
       graft.expressions.TokenCount(
@@ -66,7 +104,7 @@ object TextFunctions {
     * separately, approximating a byte-pair-encoding tokenizer's unit
     * count without a vocab. */
   def bpeishTokenCount(c: Column): Column =
-    size(regexp_extract_all(c, lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"), lit(0)))
+    size(regexp_extract_all(c, lit(BpeishRegex), lit(0)))
 
   /** The canonical stopword list. Public on purpose: the oracle SQL in
     * the Queries files derives its `['the',...]` literal from this, so
@@ -78,22 +116,12 @@ object TextFunctions {
   def stopwordsSqlLiteral: String =
     defaultStopwords.map(w => s"'$w'").mkString("[", ",", "]")
 
-  /** Fraction of tokens that are stopwords (quality signal).
-    *
-    * Single-evaluation form (r16): the split tower used to appear
-    * THREE times (emptiness test, numerator filter, denominator), and
-    * higher-order functions evaluate interpreted — no codegen, no
-    * common-subexpression elimination — so every consumer paid the
-    * regex split 3× per row. Now [[tokens]] is referenced exactly once
-    * (inside the numerator's filter) and the emptiness test and
-    * denominator ride the codegen'd [[tokenCount]] kernel, which is
-    * ≡ size(tokens(c)) for every input (proof at [[tokenCount]]).
-    * Value-identical case by case:
-    * null text → tokens null → size(filter(null)) null, kernel null →
-    * when(null…) falls to otherwise → null/null = null (as before);
-    * empty/whitespace-only → kernel 0 → 0.0 (as before); else
-    * numerator and denominator are the same ints as the old form,
-    * cast and divided identically. */
+  /** Fraction of tokens that are stopwords (quality signal); 0.0 when
+    * there are no tokens, null on null text. [[tokens]] is evaluated
+    * once, inside the numerator's filter (higher-order functions run
+    * interpreted, without common-subexpression elimination); the
+    * emptiness test and the denominator ride the codegen'd
+    * [[tokenCount]] kernel. */
   def stopwordRatio(c: Column, stopwords: Seq[String] = defaultStopwords): Column = {
     val stopArr = array(stopwords.map(lit): _*)
     val nStop = size(filter(tokens(c), t => array_contains(stopArr, t)))
@@ -106,7 +134,7 @@ object TextFunctions {
   def punctRatio(c: Column): Column =
     when(length(c) === 0, lit(0.0))
       .otherwise(
-        size(regexp_extract_all(c, lit("[^A-Za-z0-9\\s]"), lit(0))).cast("double") /
+        size(regexp_extract_all(c, lit(PunctRegex), lit(0))).cast("double") /
           length(c).cast("double"))
 
   /** Fraction of characters that are alphabetic. */
@@ -128,21 +156,11 @@ object TextFunctions {
 
   /** N-gram-heuristic language ID over a small built-in stopword table.
     * Scores each language by distinctive-function-word hits; emits the
-    * argmax or "und" when nothing matches. Pure column expression.
-    *
-    * Single-evaluation form (r16): the old shape built one
-    * `size(filter(toks, …))` per language, and since higher-order
-    * functions evaluate interpreted (no CSE), the `tokens(lower(c))`
-    * split tower ran FOUR times per row. All four counters now fold in
-    * ONE `aggregate` pass over one evaluation of the token array, with
-    * the argmax in the aggregate's finish lambda. Value identity:
-    * per-language hit counts are the same ints (filter-then-size vs
-    * fold-and-add over the same elements); the argmax compares the
-    * same (score, lang) structs with the same ordering; null text →
-    * token array null → aggregate null, where the old form's null
-    * scores made `best.score > 0` null and fell through to "und" — the
-    * outer coalesce restores exactly that. LangIdSpec pins new ≡ old
-    * on the edge set (incl. null) and the corpus. */
+    * argmax or "und" when nothing matches. Pure column expression: all
+    * four counters fold in ONE `aggregate` pass over one evaluation of
+    * the token array, with the argmax in the finish lambda; null text
+    * gives a null aggregate, which the outer coalesce maps to "und".
+    * LangIdSpec pins it on the edge set (incl. null) and the corpus. */
   def langIdHeuristic(c: Column): Column = {
     val markers: Seq[(String, Seq[String])] = Seq(
       "en" -> Seq("the", "and", "of", "is", "with"),
@@ -171,11 +189,11 @@ object TextFunctions {
   /** Canonical document fingerprint: md5 of lowercased,
     * whitespace-collapsed text. */
   def fingerprint(c: Column): Column =
-    md5(trim(regexp_replace(lower(c), "\\s+", " ")))
+    md5(trim(regexp_replace(lower(c), SepRunRegex, " ")))
 
   /** Character k-shingles of the normalized text. */
   def charShingles(c: Column, k: Int): Column = {
-    val s = trim(regexp_replace(lower(c), "\\s+", " "))
+    val s = trim(regexp_replace(lower(c), SepRunRegex, " "))
     when(length(s) < k, array(s))
       .otherwise(array_distinct(
         transform(sequence(lit(0), length(s) - lit(k)),

@@ -39,7 +39,7 @@ object Reembed {
   final class HashingEmbedder(val dimensions: Int) extends Embedder {
     def embed(texts: Seq[String]): Seq[Array[Float]] = texts.map { t =>
       val v = new Array[Float](dimensions)
-      if (t != null) t.toLowerCase.split("\\s+").filter(_.nonEmpty).foreach { tok =>
+      if (t != null) graft.functions.TextFunctions.splitTokens(t.toLowerCase).foreach { tok =>
         val h = scala.util.hashing.MurmurHash3.stringHash(tok)
         val idx = math.floorMod(h, dimensions)
         v(idx) += (if (h < 0) -1f else 1f)
@@ -66,7 +66,7 @@ object Reembed {
       texts.map { t =>
         val v = new Array[Float](dimensions)
         if (t != null) {
-          t.toLowerCase.split("\\s+").filter(_.nonEmpty).foreach { tok =>
+          graft.functions.TextFunctions.splitTokens(t.toLowerCase).foreach { tok =>
             val d = md.digest(tok.getBytes("UTF-8"))
             // first 4 nibbles = bytes 0-1; 5th nibble = high nibble of byte 2
             val h16 = ((d(0) & 0xff) << 8) | (d(1) & 0xff)
