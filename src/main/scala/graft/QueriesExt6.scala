@@ -234,7 +234,8 @@ object QueriesExt6 {
     // The bigram kernel as ONE codegen'd expression (tokenize + hash +
     // tail-zip fused, expressions/TokenHashExpressions.scala): the
     // interpreted HOF tower it replaces was ~42 s of ~60 s executor
-    // CPU at 15.7 GiB even after tokenize-once (LmProbe, round 10).
+    // CPU at 15.7 GiB even after tokenize-once (measured in round 10
+    // with a probe main since retired).
     // doc_id is a bare reference, so co-selecting it with the explode
     // is ExtractGenerator-safe (nothing non-cheap is lifted above the
     // Generate — the q_bm25 trap).
@@ -292,10 +293,11 @@ object QueriesExt6 {
     // explode: mixing a computed scalar with explode(...) in one
     // select makes ExtractGenerator lift it into the Project ABOVE
     // the Generate with its inputs retained — the tokenizer re-runs
-    // PER EXPLODED TOKEN (~dl× per doc; Bm25Probe measured ~330 s of
-    // ~345 s CPU at 15.7 GiB before round 10 pinned it). Here dl
-    // derives from the materialized array, and the final select
-    // carries only bare references through the Generate.
+    // PER EXPLODED TOKEN (~dl× per doc; a round-10 probe main, since
+    // retired, measured ~330 s of ~345 s CPU at 15.7 GiB before round
+    // 10 pinned it). Here dl derives from the materialized array, and
+    // the final select carries only bare references through the
+    // Generate.
     val toks = docs
       .select(col("doc_id"),
         QueriesCommon.tokenHashesCol("text").as("__harr"))
@@ -310,13 +312,16 @@ object QueriesExt6 {
     // corpus + doc-count scalars as a 1-row broadcast (single job).
     // Counts-only pass: the TokenCount kernel (r15) replaces sizing the fused
     // hash kernel — same integers (see its proof), no per-token
-    // hashing or array allocation in the stats pass.
+    // hashing or array allocation in the stats pass. A null-text doc
+    // counts in n with length 0, as in the oracle: `avg` alone would
+    // skip its null dl0.
     val stats = t(s, dir, "documents")
       .select(graft.functions.TextFunctions.tokenCount(col("text"))
         .cast("double").as("dl0"))
-      .agg(count(lit(1)).cast("double").as("n"), avg("dl0").as("avgdl"))
-    // Round 10 (Bm25Probe at 15.7 GiB, stage metrics: 0.5 GB shuffle,
-    // zero spill, ~340 s CPU). Two findings:
+      .agg(count(lit(1)).cast("double").as("n"),
+        avg(coalesce(col("dl0"), lit(0.0))).as("avgdl"))
+    // Round 10 (a probe main, since retired, at 15.7 GiB; stage
+    // metrics: 0.5 GB shuffle, zero spill, ~340 s CPU). Two findings:
     //  - The dominant cost was dl RECOMPUTATION: co-selecting
     //    size(split(text)) with the explode made ExtractGenerator lift
     //    it above the Generate with `text` retained, re-running the

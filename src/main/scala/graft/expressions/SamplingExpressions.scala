@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * directly. One thread-local digest instance — `MessageDigest
   * .getInstance` per row would dominate the hash itself. */
 object Md5BucketUtil {
-  private val md = new ThreadLocal[java.security.MessageDigest] {
+  private[expressions] val md = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }

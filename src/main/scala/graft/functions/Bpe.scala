@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Byte-pair-encoding tokenizer INDUCTION at corpus scale — learn a
   * BPE merge table from the corpus itself (Sennrich et al. 2016, the
@@ -268,9 +269,10 @@ object Bpe {
     // subquery, verbatim) instead of a separate `base.count()` driver
     // action: the id table is always built alongside other work on the
     // same word table, and at interactive scale each extra action costs
-    // a full job round-trip (r15 measure-first finding — the BPE gates
-    // spent more wall in driver job floors than in compute). The
-    // alphabet-sized aggregate adds one cheap subtree, not an exchange.
+    // a full job round-trip (measured in round 15 with a probe main
+    // since retired: the BPE gates spent more wall in driver job floors
+    // than in compute). The alphabet-sized aggregate adds one cheap
+    // subtree, not an exchange.
     val nBaseDf = base.agg(count(lit(1)).as("__n_base"))
     val mergeIds = merges.sortBy(_.rank)
       .map(m => (m.left + m.right, m.rank.toLong))
@@ -542,14 +544,33 @@ object Bpe {
     * [[routeVocab]] treats negatives as unknown, never as "fits". */
   final case class Learned(merges: Seq[Merge], nWords: Long)
 
+  /** [[learn]] returning [[Learned]]. A vocab whose estimated trainer
+    * footprint is at most `smallCollectBytes` reaches the driver in one
+    * collect job; a larger one streams partition by partition. */
   def learnWithStats(words: DataFrame, numMerges: Int,
       collectCap: Long = 20000000L, checkpointEvery: Int = 16,
-      minFreq: Long = 1L): Learned = {
+      minFreq: Long = 1L, smallCollectBytes: Long = 256L << 20): Learned = {
     require(numMerges >= 0, s"numMerges must be >= 0, got $numMerges")
     require(minFreq >= 1, s"minFreq must be >= 1, got $minFreq")
     if (numMerges == 0) return Learned(Seq.empty, -1L)
     val pruned =
       if (minFreq > 1L) words.filter(col("freq") >= minFreq) else words
+    // The word table is read by the route's stats job and then by the
+    // collect, the per-partition stream or every distributed round
+    // before its first checkpoint. Uncached, each read re-runs the
+    // corpus tokenize-and-aggregate pass behind it; cached, the stats
+    // job fills the cache and the corpus is read once. A table the
+    // caller cached stays as the caller left it.
+    val own = words.storageLevel == StorageLevel.NONE
+    if (own) pruned.persist(StorageLevel.MEMORY_AND_DISK)
+    try learnPruned(pruned, numMerges, collectCap, checkpointEvery,
+      smallCollectBytes)
+    finally if (own) pruned.unpersist()
+  }
+
+  private def learnPruned(pruned: DataFrame, numMerges: Int,
+      collectCap: Long, checkpointEvery: Int,
+      smallCollectBytes: Long): Learned = {
     // heap-headroom guard, LENGTH-AWARE: the driver trainer's working
     // set scales with symbols, not just words — per word ~24 bytes per
     // symbol (array slot + occurrence-index int + pair-count/heap share)
@@ -575,14 +596,12 @@ object Bpe {
       // one Spark job PER PARTITION (its memory contract — only one
       // partition of Rows held at a time), which is exactly right for
       // the multi-GB production point but pays P job round-trips at
-      // interactive scale, where the whole table is kilobytes (r15
-      // measure-first finding: the 8-merge gates' learn wall was
-      // dominated by these fetch jobs, not by merging). The cutoff
-      // keeps the collect's transient Row array well under the same
-      // heap budget the route guard already prices (collect ≈ 3× the
-      // trainer's steady-state bytes while both are alive).
-      val smallCollectBytes =
-        java.lang.Long.getLong("graft.bpe.smallCollectBytes", 256L << 20)
+      // interactive scale, where the whole table is kilobytes (measured
+      // in round 15: the 8-merge gates' learn wall was dominated by
+      // these fetch jobs, not by merging). The `smallCollectBytes`
+      // cutoff keeps the collect's transient Row array well under the
+      // same heap budget the route guard already prices (collect ≈ 3×
+      // the trainer's steady-state bytes while both are alive).
       val it =
         if (needBytes * 3 <= headroom && needBytes <= smallCollectBytes)
           pruned.select(col("word"), col("freq").cast("long"))

@@ -8,8 +8,10 @@ import org.apache.spark.sql.functions._
   * shingling, MinHash and SimHash signatures.
   *
   * Everything is expressed as Spark SQL expressions (higher-order
-  * functions over arrays + xxhash64/md5) so it is fully distributed,
-  * deterministic across runs, and needs no Python/JVM UDF round-trip.
+  * functions over arrays + xxhash64/md5, and the codegen'd byte-scan
+  * kernels of `graft.expressions` for the per-row counts) so it is
+  * fully distributed, deterministic across runs, and needs no
+  * Python/JVM UDF round-trip.
   */
 object TextFunctions {
 
@@ -117,14 +119,17 @@ object TextFunctions {
     defaultStopwords.map(w => s"'$w'").mkString("[", ",", "]")
 
   /** Fraction of tokens that are stopwords (quality signal); 0.0 when
-    * there are no tokens, null on null text. [[tokens]] is evaluated
-    * once, inside the numerator's filter (higher-order functions run
-    * interpreted, without common-subexpression elimination); the
-    * emptiness test and the denominator ride the codegen'd
-    * [[tokenCount]] kernel. */
+    * there are no tokens, null on null text. Tokens are matched
+    * byte-for-byte against the list, without case folding. Both counts
+    * are codegen'd byte scans of the text: the numerator is the
+    * [[graft.expressions.StopwordCount]] kernel and the denominator
+    * [[tokenCount]], so no token array is built. TokenCountFastSpec
+    * pins the ratio against
+    * `size(filter(tokens(c), array_contains(stop, _))) / size(tokens(c))`. */
   def stopwordRatio(c: Column, stopwords: Seq[String] = defaultStopwords): Column = {
-    val stopArr = array(stopwords.map(lit): _*)
-    val nStop = size(filter(tokens(c), t => array_contains(stopArr, t)))
+    import org.apache.spark.sql.graftbridge.Bridge
+    val nStop = Bridge.column(
+      graft.expressions.StopwordCount(Bridge.expression(c), stopwords))
     val nTok = tokenCount(c)
     when(nTok === 0, lit(0.0))
       .otherwise(nStop.cast("double") / nTok.cast("double"))

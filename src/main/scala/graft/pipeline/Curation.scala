@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.QueriesCommon
 import graft.functions.{TextFunctions => TF}
 
 /** The COMPOSED training-data curation pipeline: the individual
@@ -28,8 +27,9 @@ import graft.functions.{TextFunctions => TF}
   *     agg-plus-self-join that re-executes the upstream subtree;
   *   - the ONE structural second pass — LSH candidate derivation, a
   *     dedup being inherently self-referential — is a column-pruned
-  *     (doc_id, text) branch with a fully map-side signature (see
-  *     [[lshDropIds]]), not a materialization of the carried frame;
+  *     (doc_id, text) branch whose signature is one codegen'd kernel
+  *     per row (see [[lshDropIds]]), not a materialization of the
+  *     carried frame;
   *   - everything between exchanges is map-side: the quality verdict,
   *     the fp coin, the budget filter each run inside the stage that
   *     already owns the rows.
@@ -103,39 +103,30 @@ object Curation {
   def nearDedupLsh(df: DataFrame): DataFrame =
     df.join(lshDropIds(df), Seq("doc_id"), "left_anti")
 
-  /** The ids the LSH rule drops. The whole signature is MAP-SIDE — the
-    * per-doc minhash is an array fold over the doc's own shingles, not
-    * an explode + re-aggregate (which would shuffle every shingle row
-    * on doc_id before the band pass) — so the only exchange candidate
-    * derivation pays is the narrow (band, v) window over
-    * (doc_id, band, v) triples. The anti-join back to the carried
-    * frame is the one structural cost of ANY dedup stage: the drop
-    * set derives from the same corpus it filters, so the candidate
-    * branch re-scans (doc_id, text) — column-pruned recompute, the
-    * right trade at scale against materializing the full upstream
-    * frame. No explicit distinct on the drop ids: a left-anti only
-    * consults existence, and each id repeats at most 4× (once per
-    * band) — a distinct would add a doc_id exchange to shrink a
-    * build side the join dedups anyway. */
+  /** The ids the LSH rule drops. The signature is MAP-SIDE: the
+    * [[graft.expressions.Md5MinhashBands]] kernel scans each doc's
+    * lowercased text once and emits its 4 band keys (the q_minhash_oracle md5
+    * signature: 8 minhashes over the distinct word 3-shingles of
+    * lower(text), banded 4×2; a doc under 3 tokens is one whole-doc
+    * shingle, an empty one `""`), so the shingles never become rows
+    * or arrays and the only exchange candidate derivation pays is the
+    * narrow (band, v) window over (doc_id, band, v) triples. Null text
+    * has no bands; `posexplode_outer` gives it one null key, so
+    * null-text docs share one bucket as they do under the SQL form
+    * (4 null band values). The anti-join back to the carried frame is
+    * the one structural cost of ANY dedup stage: the drop set derives
+    * from the same corpus it filters, so the candidate branch re-scans
+    * (doc_id, text) — column-pruned recompute, the right trade at
+    * scale against materializing the full upstream frame. No explicit
+    * distinct on the drop ids: a left-anti only consults existence,
+    * and each id repeats at most 4× (once per band) — a distinct
+    * would add a doc_id exchange to shrink a build side the join
+    * dedups anyway. */
   private[graft] def lshDropIds(df: DataFrame): DataFrame = {
-    val toks = QueriesCommon.toksExpr
-    // distinct 3-shingles (q_minhash_oracle construction: docs under 3
-    // tokens collapse to one whole-doc shingle; empty docs to [""])
-    val shs = when(size(col("__toks")) < 3,
-        array(array_join(col("__toks"), " ")))
-      .otherwise(expr(
-        "array_distinct(transform(sequence(1, size(__toks) - 2), " +
-          "i -> array_join(slice(__toks, i, 3), ' ')))"))
-    val mhCols = (0 until 8).map(i => expr(
-      s"array_min(transform(__shs, x -> md5(concat('$i:', x))))").as(s"mh$i"))
-    val bands = df.select(col("doc_id"), toks.as("__toks"))
-      .select(col("doc_id"), shs.as("__shs"))
-      .select(col("doc_id") +: mhCols: _*)
-      .select(col("doc_id"), posexplode(array(
-        concat(col("mh0"), col("mh1")), concat(col("mh2"), col("mh3")),
-        concat(col("mh4"), col("mh5")), concat(col("mh6"), col("mh7"))))
-        .as(Seq("band", "v")))
-    bands
+    import org.apache.spark.sql.graftbridge.Bridge
+    val bands = Bridge.column(
+      graft.expressions.Md5MinhashBands(Bridge.expression(lower(col("text")))))
+    df.select(col("doc_id"), posexplode_outer(bands).as(Seq("band", "v")))
       .withColumn("__mn", min(col("doc_id")).over(
         Window.partitionBy("band", "v")))
       .filter(col("__mn") < col("doc_id"))

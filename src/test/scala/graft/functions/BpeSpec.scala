@@ -70,22 +70,65 @@ class BpeSpec extends SparkSpec {
   }
 
   test("learn routes: one-job collect equals toLocalIterator streaming") {
-    // r15: vocabularies under graft.bpe.smallCollectBytes fetch in ONE
-    // collect job; past it the per-partition toLocalIterator stream
-    // takes over (bounded driver memory). Force the streaming route on
-    // the same corpus and pin the learned merges equal — the fetch
-    // route must never change results.
+    // vocabularies under `smallCollectBytes` fetch in ONE collect job;
+    // past it the per-partition toLocalIterator stream takes over
+    // (bounded driver memory). Force the streaming route on the same
+    // corpus and pin the learned merges equal — the fetch route must
+    // never change results.
     val viaCollect = Bpe.learn(wordsDf, 6)
-    val prev = System.getProperty("graft.bpe.smallCollectBytes")
-    System.setProperty("graft.bpe.smallCollectBytes", "0")
-    try {
-      val viaStream = Bpe.learn(wordsDf, 6)
-      assert(viaCollect == viaStream)
-      assert(viaCollect.size == 6)
-    } finally {
-      if (prev == null) System.clearProperty("graft.bpe.smallCollectBytes")
-      else System.setProperty("graft.bpe.smallCollectBytes", prev)
+    val viaStream = Bpe.learnWithStats(wordsDf, 6, smallCollectBytes = 0L).merges
+    assert(viaCollect == viaStream)
+    assert(viaCollect.size == 6)
+  }
+
+  /** Input rows of each stage that completed while `body` ran. */
+  private def stageInputRows(body: => Unit): Seq[Long] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val sc = spark.sparkContext
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        rows.add(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
     }
+    Bridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try { body; Bridge.drainListenerBus(sc) }
+    finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    rows.asScala.toSeq
+  }
+
+  test("learnWithStats reads the corpus once, on the collect and the distributed route") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("bpecorpus").toString
+    val n = 3000L
+    (0L until n).map(i => (i, s"ab${i % 17} xab${i % 5} b${i % 3}aa"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+    val docs = spark.read.parquet(dir)
+    // a stage that scanned the corpus read all n rows; reads of the
+    // cached word table count its column batches, far fewer than n
+    def corpusReads(collectCap: Long): Seq[Long] = {
+      var learned: Bpe.Learned = null
+      val reads = stageInputRows {
+        learned = Bpe.learnWithStats(Bpe.wordFreq(docs, "text"), 4,
+          collectCap = collectCap)
+      }
+      assert(learned.merges.size == 4)
+      reads.filter(_ >= n)
+    }
+    assert(corpusReads(20000000L) == Seq(n))
+    assert(corpusReads(0L) == Seq(n))
+    // the table learnWithStats cached is released; a table the caller
+    // cached stays cached
+    val words = Bpe.wordFreq(docs, "text")
+    Bpe.learnWithStats(words, 2)
+    assert(words.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    words.persist()
+    try {
+      Bpe.learnWithStats(words, 2)
+      assert(words.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally words.unpersist()
   }
 
   test("learnWithStats count and docTokenIdsLong vocabRows routing") {
