@@ -5,6 +5,8 @@ import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
+import scala.collection.immutable.ArraySeq
+
 /** A gRPC-SHAPED framed binary dialect — the transport the reference
   * PREFERS for its two flagship stores (Pinecone
   * `pinecone_export.py:9` imports the gRPC client; Qdrant
@@ -62,10 +64,14 @@ object GrpcFraming {
   def writeStringField(o: DataOutputStream, f: Int, s: String): Unit =
     writeBytesField(o, f, s.getBytes(StandardCharsets.UTF_8))
   /** proto3 `repeated double`, packed: length-delimited run of 8-byte
-    * little-endian IEEE doubles. */
+    * little-endian IEEE doubles. An `ArraySeq.ofDouble` goes in as one
+    * bulk put of its primitive array, unboxed. */
   def writePackedDoubles(o: DataOutputStream, f: Int, xs: Seq[Double]): Unit = {
     val buf = ByteBuffer.allocate(xs.size * 8).order(ByteOrder.LITTLE_ENDIAN)
-    xs.foreach(buf.putDouble)
+    xs match {
+      case a: ArraySeq.ofDouble => buf.asDoubleBuffer().put(a.unsafeArray)
+      case _ => xs.foreach(buf.putDouble)
+    }
     writeBytesField(o, f, buf.array())
   }
   def readPackedDoubles(b: Array[Byte]): Seq[Double] = {

@@ -2,8 +2,8 @@ package graft.connectors.wire
 
 import java.util
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -130,8 +130,6 @@ final class WireWriterFactory(dialect: WireDialect, collection: String,
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      private val toScala =
-        CatalystTypeConverters.createToScalaConverter(WireVdb.Schema)
       private val buf = scala.collection.mutable.ArrayBuffer[WirePoint]()
       private def flush(): Unit = if (buf.nonEmpty) {
         // the reference's shrink loop at the wire: a 429/500/413 shrinks
@@ -142,10 +140,7 @@ final class WireWriterFactory(dialect: WireDialect, collection: String,
         buf.clear()
       }
       override def write(record: InternalRow): Unit = {
-        val r = toScala(record.copy()).asInstanceOf[Row]
-        buf += WirePoint(r.getString(0),
-          Option(r.getSeq[Double](1)).getOrElse(Seq.empty),
-          Option(r.getMap[String, String](2)).map(_.toMap).getOrElse(Map.empty))
+        buf += WireWriterFactory.toPoint(record)
         if (buf.size >= batchSize) flush()
       }
       override def commit(): WriterCommitMessage = {
@@ -154,6 +149,34 @@ final class WireWriterFactory(dialect: WireDialect, collection: String,
       override def abort(): Unit = buf.clear()
       override def close(): Unit = ()
     }
+}
+
+object WireWriterFactory {
+  /** One [[WirePoint]] read straight off a `Schema` row, the write-side
+    * twin of `WireScan.toRow`: the vector is one primitive copy
+    * (`ArraySeq.ofDouble`, which `GrpcFraming.writePackedDoubles` puts
+    * without boxing), so the row is never copied or converted to a
+    * Scala `Row`. A null vector or payload reads as empty; a null
+    * payload value stays null. */
+  def toPoint(r: InternalRow): WirePoint = {
+    val payload = if (r.isNullAt(2)) Map.empty[String, String] else {
+      val m = r.getMap(2)
+      val ks = m.keyArray()
+      val vs = m.valueArray()
+      val b = Map.newBuilder[String, String]
+      var j = 0
+      while (j < m.numElements()) {
+        b += ks.getUTF8String(j).toString ->
+          (if (vs.isNullAt(j)) null else vs.getUTF8String(j).toString)
+        j += 1
+      }
+      b.result()
+    }
+    WirePoint(r.getUTF8String(0).toString,
+      if (r.isNullAt(1)) Seq.empty
+      else ArraySeq.unsafeWrapArray(r.getArray(1).toDoubleArray()),
+      payload)
+  }
 }
 
 final class WireScanBuilder(dialect: WireDialect, collection: String,

@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructField, StructType}
 
 import graft.core.{Constants, NamespaceMeta, VdfMeta}
 
@@ -24,8 +24,14 @@ import scala.jdk.CollectionConverters._
   * manifest, the consolidate/write-new-then-SWAP lifecycle, version
   * bumps — is a local/shared-filesystem artifact, exactly like the
   * reference's (the Python tool writes local dirs; `java.nio` rename
-  * semantics are what makes the swap atomic-adjacent). The QUERY and
-  * WAREHOUSE paths are filesystem-agnostic: parquet scans, the
+  * semantics are what makes the swap atomic-adjacent). So its parquet
+  * writes ([[writeParquet]]: `writeNamespace`'s plain branch and
+  * `consolidate`) put `file:` paths through [[LocalFs]]: they fork no
+  * `chmod` per file and directory and leave no `.crc` sidecars, like
+  * the reference's pyarrow-written dirs. Vector columns
+  * (`array<float>`/`array<double>`) are written PLAIN: random vector
+  * doubles never dictionary-encode, so the attempt is skipped. The
+  * QUERY and WAREHOUSE paths are filesystem-agnostic: parquet scans, the
   * `_bucketed` layouts and their sidecars/fingerprints, the IVF-PQ
   * index layouts, and the at-scale gate statistic all go through the
   * Hadoop FS API and accept `hdfs://`-style URIs. A 100 TB deployment
@@ -123,7 +129,9 @@ object VdfIO {
     * the NamespaceMeta describing it. File sizing is declarative
     * (`maxRecordsPerFile`) instead of the reference's manual byte
     * buffering; at cluster scale the writer parallelism is the
-    * DataFrame's partitioning, untouched here.
+    * DataFrame's partitioning, untouched here. Without `bucketBy` the
+    * files go through [[writeParquet]]: vector columns PLAIN-encoded,
+    * and a local write forks nothing and leaves no `.crc` files.
     *
     * One pass over the source: the row count and the min and max
     * length of the non-null vectors ride the write action as an
@@ -170,11 +178,7 @@ object VdfIO {
             s"maxRecordsPerFile=$maxRecordsPerFile has no effect under " +
             s"bucketBy — one file per bucket ($buckets)")
         graft.ops.Scale.writeBucketedDir(observed, out, key, buckets)
-      case None =>
-        val writer = observed.write.mode(SaveMode.Overwrite)
-        (if (maxRecordsPerFile > 0)
-           writer.option("maxRecordsPerFile", maxRecordsPerFile)
-         else writer).parquet(out)
+      case None => writeParquet(observed, out, maxRecordsPerFile)
     }
     val seen = obs.get
     val n = seen("rows").asInstanceOf[Long]
@@ -195,6 +199,34 @@ object VdfIO {
       data_path = dataPath,
       metric = metric,
       schema_dict_str = Some(df.schema.json))
+  }
+
+  /** The `array<float>` / `array<double>` columns: VDF's vector columns. */
+  private def vectorFields(df: DataFrame): Seq[StructField] =
+    df.schema.fields.toSeq.filter(_.dataType match {
+      case ArrayType(FloatType | DoubleType, _) => true
+      case _ => false
+    })
+
+  /** The one parquet write of VDF data files (overwrite `out`).
+    *  - `parquet.enable.dictionary#<c>.list.element=false` per
+    *    `array<float>`/`array<double>` column `c`: the dictionary
+    *    writer hashes every double, then falls back to PLAIN anyway.
+    *    Other columns (ids, payload, int8 `array<tinyint>` codes) keep
+    *    parquet's default.
+    *  - `fs.file.impl` = [[LocalFs]], uncached: only this write's
+    *    Hadoop conf and only the `file:` scheme see it. */
+  private def writeParquet(df: DataFrame, out: String,
+      maxRecordsPerFile: Long = 0L): Unit = {
+    val plainVectors = vectorFields(df).map(f =>
+      s"parquet.enable.dictionary#${f.name}.list.element" -> "false")
+    val writer = df.write.mode(SaveMode.Overwrite)
+      .option("fs.file.impl", classOf[LocalFs].getName)
+      .option("fs.file.impl.disable.cache", "true")
+      .options(plainVectors.toMap)
+    (if (maxRecordsPerFile > 0)
+       writer.option("maxRecordsPerFile", maxRecordsPerFile)
+     else writer).parquet(out)
   }
 
   /** Write a whole dataset: every (index, namespace) frame + manifest.
@@ -250,14 +282,7 @@ object VdfIO {
     val df = spark.read.option("mergeSchema", "true")
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", "*.parquet").parquet(dir)
-    val vecCols = df.schema.fields.collect {
-      case f if (f.dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType |
-          org.apache.spark.sql.types.DoubleType, _) => true
-        case _ => false
-      }) => f.name
-    }.toList
+    val vecCols = vectorFields(df).map(_.name).toList
     val dims = vecCols.headOption.flatMap(resolveDims(df, _)).getOrElse(-1)
     val n = df.count()
     val ns = NamespaceMeta(
@@ -319,8 +344,7 @@ object VdfIO {
       val bytes = listParquetFiles(src).map(Files.size).sum
       val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileSizeBytes).toInt)
       val tmp = s"${ns.data_path}__compact"
-      df.repartition(nFiles).write.mode(SaveMode.Overwrite)
-        .parquet(Paths.get(dir, tmp).toString)
+      writeParquet(df.repartition(nFiles), Paths.get(dir, tmp).toString)
       swapDataPath(dir, ns.data_path, tmp)
       ns.copy(schema_dict_str = Some(df.schema.json)).withExtrasFrom(ns)
     }

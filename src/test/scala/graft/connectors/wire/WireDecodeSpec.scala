@@ -11,7 +11,8 @@ import org.scalacheck.rng.Seed
 /** The wire scan's decode path: JSON payload nulls, the direct
   * Catalyst rows `WireScan.toRow` builds against the generic
   * `CatalystTypeConverters` rows, and doubles through the shared
-  * mapper's fast parser. */
+  * mapper's fast parser. On the write side, the points
+  * `WireWriterFactory.toPoint` reads off a row against the converter's. */
 class WireDecodeSpec extends SparkSpec {
 
   test("a JSON null payload value drops its key, never the string \"null\"") {
@@ -57,6 +58,50 @@ class WireDecodeSpec extends SparkSpec {
         val direct = unsafe(WireScan.toRow(schema.fieldNames, pt)).copy()
         val generic = unsafe(converterRow(schema, pt)).copy()
         assert(direct == generic, s"${names.mkString(",")} / ${pt.id}")
+      }
+    }
+  }
+
+  /** The point the writer built before `toPoint`: the row copied and
+    * converted to a Scala `Row`. */
+  private def converterPoint(record: InternalRow): WirePoint = {
+    val r = CatalystTypeConverters.createToScalaConverter(WireVdb.Schema)(
+      record.copy()).asInstanceOf[Row]
+    WirePoint(r.getString(0),
+      Option(r.getSeq[Double](1)).getOrElse(Seq.empty),
+      Option(r.getMap[String, String](2)).map(_.toMap).getOrElse(Map.empty))
+  }
+
+  test("WireWriterFactory.toPoint equals the CatalystTypeConverters point, doubles bit for bit") {
+    import java.lang.Double.{doubleToRawLongBits, longBitsToDouble}
+    import scala.collection.immutable.ArraySeq
+    val rows = Seq(
+      Row("p1", Seq(Double.NaN, -0.0, Double.PositiveInfinity,
+        Double.NegativeInfinity, Double.MinPositiveValue,
+        longBitsToDouble(0x000FFFFFFFFFFFFFL), 0.0, 1.5),
+        Map("lang" -> "en", "z" -> "ü")),
+      Row("p2", null, Map("a" -> "b", "nul" -> null)),
+      Row("p3", Seq.empty[Double], null),
+      Row("p4", Seq(2.0), Map.empty[String, String]),
+      Row("ü-ид-\uD83D\uDE00", Seq(-1.0, 3e-310), (1 to 6).map(i =>
+        s"k$i" -> s"v$i").toMap))
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(
+      WireVdb.Schema)
+    val unsafe = UnsafeProjection.create(WireVdb.Schema)
+    for (row <- rows) {
+      val generic = toCatalyst(row).asInstanceOf[InternalRow]
+      val want = converterPoint(generic)
+      for (record <- Seq(generic, unsafe(generic))) {
+        val got = WireWriterFactory.toPoint(record)
+        assert(got.id == want.id)
+        assert(got.vector.map(doubleToRawLongBits) ==
+          want.vector.map(doubleToRawLongBits), got.id)
+        assert(got.payload == want.payload, got.id)
+        if (!row.isNullAt(1)) assert(got.vector.isInstanceOf[ArraySeq.ofDouble])
+        // the packed gRPC field is the same bytes as the boxed form's
+        def packed(v: Seq[Double]) = GrpcFraming.message(
+          GrpcFraming.writePackedDoubles(_, 2, v)).toSeq
+        assert(packed(got.vector) == packed(want.vector.toList), got.id)
       }
     }
   }

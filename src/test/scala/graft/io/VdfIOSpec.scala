@@ -111,8 +111,18 @@ class VdfIOSpec extends SparkSpec {
   }
 
   test("writeVdf → readVdf round trip preserves rows and manifest shape") {
+    import java.lang.Float.{floatToRawIntBits, intBitsToFloat}
     val dir = tmp()
-    val df = points(100)
+    // NaN, ±Inf, −0.0 and subnormals in rows 0 and 1 (4 dims, like the rest)
+    val edges = Map(
+      "0" -> Array(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity,
+        -0.0f),
+      "1" -> Array(Float.MinPositiveValue, -Float.MinPositiveValue,
+        intBitsToFloat(0x007fffff), 0.0f)) // 0x007fffff: largest subnormal
+    val df = edges.foldLeft(points(100)) { case (d, (id, v)) =>
+      d.withColumn("vector",
+        when(col("id") === id, typedLit(v)).otherwise(col("vector")))
+    }
     val meta = VdfIO.writeVdf(Map(("idx1", "") -> df), dir,
       author = "test", exportedFrom = "mock")
     assert(meta.indexes("idx1").head.total_vector_count == 100L)
@@ -122,6 +132,96 @@ class VdfIOSpec extends SparkSpec {
     val back = VdfIO.readVdf(spark, dir)(("idx1", ""))
     assert(back.count() == 100L)
     assert(back.columns.toSet == Set("id", "vector", "title"))
+    def bits(d: org.apache.spark.sql.DataFrame) = d.select("id", "vector")
+      .collect().map(r => r.getString(0) ->
+        r.getSeq[Float](1).map(floatToRawIntBits)).toMap
+    val want = bits(df)
+    assert(want("0") == edges("0").toSeq.map(floatToRawIntBits))
+    assert(bits(back) == want)
+  }
+
+  /** Column chunks of every part file under `out`: path → (has a
+    * dictionary page, uses a dictionary encoding), over all row groups. */
+  private def chunkEncodings(out: String): Map[String, (Boolean, Boolean)] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    val chunks = VdfIO.listParquetFiles(out).flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), conf))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      finally r.close()
+    }
+    assert(chunks.nonEmpty)
+    chunks.groupBy(_.getPath.toDotString).map { case (path, cs) =>
+      path -> (cs.exists(_.hasDictionaryPage),
+        cs.exists(_.getEncodings.asScala.exists(_.usesDictionary)))
+    }
+  }
+
+  test("writeNamespace writes float and double vector columns PLAIN; other columns keep the dictionary") {
+    import spark.implicits._
+    val dir = tmp()
+    // few distinct values, so a dictionary WOULD pay on every column
+    val df = (0 until 200).map(i => (i.toString,
+        Array.tabulate(4)(j => ((i + j) % 5).toDouble),
+        Array.tabulate(4)(j => ((i * j) % 3).toFloat),
+        Seq.tabulate(4)(j => ((i + j) % 2).toByte), // array<tinyint>
+        s"t${i % 3}"))
+      .toDF("id", "vector", "vector32", "codes", "title")
+    assert(df.schema("codes").dataType.catalogString == "array<tinyint>")
+    VdfIO.writeNamespace(df, dir, "idx",
+      vectorColumns = Seq("vector", "vector32"))
+    val enc = chunkEncodings(s"$dir/idx")
+    for (c <- Seq("vector.list.element", "vector32.list.element"))
+      assert(enc(c) == ((false, false)), s"$c: (dictionary page, encoding)")
+    // int8 codes and strings keep parquet's default
+    for (c <- Seq("codes.list.element", "title"))
+      assert(enc(c) == ((true, true)), s"$c: (dictionary page, encoding)")
+    assert(spark.read.parquet(s"$dir/idx").count() == 200L)
+  }
+
+  test("a local VDF write leaves no .crc files and the parent's file and directory modes") {
+    import java.nio.file.{Files, Path}
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.permission.FsPermission
+    import scala.jdk.CollectionConverters._
+    val dir = tmp()
+    VdfIO.writeNamespace(points(30).repartition(3), dir, "idx", "ns")
+    val umask = FsPermission.getUMask(spark.sessionState.newHadoopConf())
+    val fileMode = FsPermission.getFileDefault.applyUMask(umask).toString
+    val dirMode = FsPermission.getDirDefault.applyUMask(umask).toString
+    if (umask.toShort == Integer.parseInt("022", 8))
+      assert((fileMode, dirMode) == (("rw-r--r--", "rwxr-xr-x")))
+    val walk = Files.walk(java.nio.file.Paths.get(dir, "idx"))
+    val all: Seq[Path] = try walk.iterator().asScala.toVector finally walk.close()
+    assert(!all.exists(_.getFileName.toString.endsWith(".crc")),
+      all.mkString(", "))
+    def mode(p: Path) =
+      PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    val (dirs, files) = all.partition(Files.isDirectory(_))
+    assert(files.count(_.toString.endsWith(".parquet")) == 3)
+    files.foreach(f => assert(mode(f) == fileMode, f))
+    dirs.foreach(d => assert(mode(d) == dirMode, d))
+  }
+
+  test("LocalFs.setPermission sets exactly the 9 mode bits") {
+    import java.nio.file.Files
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.permission.FsPermission
+    val fs = new LocalFs
+    fs.initialize(java.net.URI.create("file:///"),
+      new org.apache.hadoop.conf.Configuration(false))
+    val base = java.nio.file.Paths.get(tmp())
+    val targets = Seq(Files.createFile(base.resolve("f")),
+      Files.createDirectory(base.resolve("d")))
+    for (p <- targets; m <- Seq("0000", "0600", "0644", "0700", "0755", "0777")) {
+      val perm = new FsPermission(Integer.parseInt(m, 8).toShort)
+      fs.setPermission(new org.apache.hadoop.fs.Path(p.toUri), perm)
+      assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(p)) ==
+        perm.toString, s"$p $m")
+    }
   }
 
   test("joinVectorsMetadata: full outer with collision rename (vdb_export_cls.py:74-84)") {
