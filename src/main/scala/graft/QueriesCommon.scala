@@ -11,7 +11,7 @@ object QueriesCommon {
   // analogue of a catalog's table metadata. Without it every
   // `spark.read.parquet` call pays a footer-read schema-inference job
   // (~0.2 s and 2 Spark jobs per table at local scale, measured by
-  // tools/FloorProbe: q_semi_idlist 0.87 s → 0.38 s with schemas
+  // the retired FloorProbe main: q_semi_idlist 0.87 s → 0.38 s with schemas
   // supplied). The test parquet is immutable within a run, and at
   // cluster scale a real deployment would resolve schemas from a
   // metastore the same way.
@@ -34,7 +34,7 @@ object QueriesCommon {
   // writes gigabytes — runtime coalescing, skew splitting, and
   // broadcast conversion all need the observed sizes — and pure
   // overhead when the entire input is a few megabytes and the static
-  // plan is already correct (tools/FloorProbe: q_semi_idlist
+  // plan is already correct (the retired FloorProbe main: q_semi_idlist
   // 0.93 s → 0.33 s, q_join_agg 0.95 s → 0.46 s with AQE off at
   // sf0.1). Gate it on total input bytes — the same statistic a
   // catalog-backed cost model consults — so small interactive inputs
@@ -230,11 +230,11 @@ object QueriesCommon {
     // zipper/SHJ probe consults exactly the build keys the bloom
     // approximates — so the injected filter is pure overhead there.
     // Measured on q_semi_idlist's bucketed route at 15.7 GiB
-    // (ClusterTailProbe, round 11): the bloom build serialized a
+    // (the retired ClusterTailProbe main, round 11): the bloom build serialized a
     // 2.9 s ONE-TASK SinglePartition merge stage (~35% of the wall)
     // plus a per-row might_contain in the probe stage. The plain
     // (shuffled) route keeps injection — there it prunes ~80% of the
-    // fact exchange (BloomProbe, BASELINE §e).
+    // fact exchange (the retired BloomProbe main, BASELINE §e).
     s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled",
       (!noRuntimeFilter).toString)
     // Runtime bloom-filter injection (InjectRuntimeFilter) in the
@@ -244,7 +244,7 @@ object QueriesCommon {
     // second would keep the filter off at ANY scale for a probe side
     // that grows with the fact table (q_semi_idlist's urgent-orders
     // probe is ~38 MB at 1.4 GiB). Three interleaved A/B pairs at
-    // 1.4 GiB (tools/BloomProbe, BASELINE.md §e): 8.65→2.51 s,
+    // 1.4 GiB (the retired BloomProbe main, BASELINE.md §e): 8.65→2.51 s,
     // 4.14→2.24 s, 2.97→1.98 s — the bloom prunes ~80% of the fact
     // rows BEFORE the semi-join exchange, and the bloom build (an
     // aggregate over the already-scanned probe) costs far less than
@@ -260,7 +260,7 @@ object QueriesCommon {
     // table and crossed it, silently turning injection off exactly
     // where it pays most (the judge's q_semi_idlist finding). Raise
     // the creation gate to 1 GB, but cap the FILTER ITSELF at 16 MB
-    // (maxNumBits 2^27): tools/BloomProbe at 15.7 GiB measured an
+    // (maxNumBits 2^27): the retired BloomProbe main at 15.7 GiB measured an
     // exactly-sized 80 MB bloom SLOWER than none (30.7 vs 20.7 s —
     // 504M might_contain probes into a filter 8× larger than L3 are
     // DRAM misses), while the L3-resident 16 MB cap at ~5 bits/key
@@ -298,7 +298,7 @@ object QueriesCommon {
       s.conf.set("spark.sql.optimizer.runtime.bloomFilter.numBits", "8388608")
     }
     // Shuffled-hash over sort-merge in the at-scale branch (round 7,
-    // tools/ShjProbe at 15.7 GiB): the q_join_agg spine's SMJ sorts
+    // the retired ShjProbe main at 15.7 GiB): the q_join_agg spine's SMJ sorts
     // spill in one JVM (75.9 s min-of-2) where the hash build streams
     // the fact side unsorted (26.9 s — 2.8×; alternating same-window
     // passes). preferSortMergeJoin=false only changes picks where a
@@ -415,7 +415,7 @@ object QueriesCommon {
     * expression references its input FOUR times, higher-order
     * functions evaluate interpreted (no codegen subexpression
     * elimination), so inlining the tokenizer re-runs the regex split
-    * 4× per document (LmProbe at 15.7 GiB: the bigram map phase was
+    * 4× per document (the retired LmProbe main at 15.7 GiB: the bigram map phase was
     * ~60% of q_lm_score's CPU). A column reference is free to repeat;
     * CollapseProject keeps the non-cheap toks alias in its own
     * projection because it is used more than once. */
@@ -430,7 +430,7 @@ object QueriesCommon {
     * to `transform(toksSqlFor(c), x -> xxhash64(x))`
     * (TokenHashSpec pins it on adversarial inputs, the Md5Bucket
     * contract) — the interpreted HOF stack was ~70% of q_lm_score's
-    * executor CPU at 15.7 GiB (LmProbe, round 10). */
+    * executor CPU at 15.7 GiB (the retired LmProbe main, round 10). */
   def tokenHashesCol(textCol: String): Column = {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.expressions.TokenXxHashes(

@@ -333,7 +333,7 @@ object QueriesExt12 {
     * materializes n×dims intermediate rows and hash-aggregates on
     * n×dims (label,pos) keys, where the aggregator folds each vector
     * into one array buffer (measured 1.0–1.2× at 1M×128 across
-    * windows, `tools/CentroidProbe` — modest in one JVM; the
+    * windows, the retired CentroidProbe main — modest in one JVM; the
     * structural win is the absent n×dims hash table, which is what
     * spills first under executor memory pressure). Only the
     * ~|labels| aggregated rows posexplode for the long-format output

@@ -131,7 +131,8 @@ object QueriesExt2 {
     // network on a cluster). Here the l_returnflag = 'R' filter
     // already collapses multiplicity to ~1.8× (16.0M rows / 8.85M keys
     // at 1.4 GiB), and the alternating-arm A/B on the plain route
-    // (tools/IdSetOpProbe, docs/artifacts/idsetop_plain_r13.txt)
+    // (the retired IdSetOpProbe main,
+    // docs/artifacts/idsetop_plain_r13.txt)
     // measured the distinct 29% SLOWER for the anti (1.22 → 1.57 s
     // min-of-3) and ~neutral for the semi (2.28 → 2.15 s): the added
     // hash aggregate costs more than the 1.8× exchange shrink is

@@ -73,8 +73,8 @@ object QueriesExt5 {
     * (16M nominal buckets) bounds the plane-projection cost per row.
     * What auto-scaling CANNOT shrink is true near-dup groups: an ×84
     * replica profile keeps 84 copies per bucket by construction —
-    * those pairs are the answer, not overhead (SemDedupPlanesProbe
-    * separates the two terms). */
+    * those pairs are the answer, not overhead (the retired
+    * SemDedupPlanesProbe main separated the two terms). */
   private[graft] def semDedupPlanes(n: Long): Int = {
     val m = (n + 4095) / 4096
     val extra =

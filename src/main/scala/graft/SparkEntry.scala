@@ -210,7 +210,8 @@ object SparkEntry {
     // fork also plans WITHOUT runtime bloom injection: the co-located
     // semi needs no filter, and the injected one measured as a 2.9 s
     // single-task bloom-merge stage + a per-row might_contain (~45%
-    // of this query's wall at 15.7 GiB — ClusterTailProbe, round 11).
+    // of this query's wall at 15.7 GiB — the retired
+    // ClusterTailProbe main, round 11).
     val fact = if (bucketed) li.hint("merge") else li
     fact.join(urgent, col("l_orderkey") === col("o_orderkey"), "left_semi")
       .groupBy("l_returnflag")

@@ -23,16 +23,16 @@ object Cli {
   /** Connector registry. Real vector-DB SDKs are not reachable from
     * this environment (zero egress); `mock` is the reference
     * implementation of the exporter/importer contract, and new
-    * connectors register here. */
-  def exporters(root: String): Map[String, VdbExporter] =
-    Map("mock" -> new MockVdb(root))
-  def importers(root: String): Map[String, VdbImporter] =
-    Map("mock" -> new MockVdb(root))
+    * connectors register here, each built from its `--db_root`. */
+  val exporters: Map[String, String => VdbExporter] =
+    Map("mock" -> (root => new MockVdb(root)))
+  val importers: Map[String, String => VdbImporter] =
+    Map("mock" -> (root => new MockVdb(root)))
 
   /** Wire-transport connectors (r8; milvus r9): `--db
-    * qdrant|pinecone|chroma` speaks the service's REST dialect and
-    * `--db grpc|milvus` the framed binary transport, with `--db_root`
-    * the base URL / host:port —
+    * qdrant|pinecone|chroma|…` speaks the service's REST dialect and
+    * `--db milvus` gRPC over HTTP/2, with `--db_root` the base URL or
+    * the gRPC endpoint (host:port | h2://host:port | h2s://host:port) —
     * every fetch/upsert is real wire traffic through the DSv2 stack.
     * Export needs `--collections a,b` (the common dialect surface has
     * no listing call — same selection flags as the reference's
@@ -93,12 +93,14 @@ object Cli {
         |                      qdrant|pinecone|chroma|lancedb|kdbai (REST,
         |                      DSv2 offset scan), astra|turbopuffer|weaviate
         |                      (REST, cursor-token chains), vertex (REST,
-        |                      list-then-hydrate), grpc|milvus (framed
-        |                      binary); fetches are real wire traffic with
+        |                      list-then-hydrate), milvus (gRPC over
+        |                      HTTP/2); fetches are real wire traffic with
         |                      pruning + paging on the wire; API keys from
         |                      each service's env var (PINECONE_API_KEY,
-        |                      QDRANT_API_KEY, ...)
-        |  --db_root DIR       connector root / base URL / host:port
+        |                      QDRANT_API_KEY, ZILLIZ_CLOUD_TOKEN, ...)
+        |  --db_root DIR       connector root / base URL; for milvus
+        |                      host:port or h2://host:port (cleartext) or
+        |                      h2s://host:port (TLS)
         |  --collections A,B   collection names (wire dialects only — no
         |                      common enumeration call)
         |  --endpoint_id E     vertex only: index-endpoint id (default:
@@ -123,10 +125,12 @@ object Cli {
         |  --db DB             connector: mock, or a wire transport —
         |                      qdrant|pinecone|chroma|lancedb|kdbai|astra|
         |                      turbopuffer|weaviate|vertex (REST) /
-        |                      grpc|milvus (framed binary); wire upserts
+        |                      milvus (gRPC over HTTP/2); wire upserts
         |                      batch with the shrink-on-fault policy; API
         |                      keys from env vars
-        |  --db_root DIR       connector root / base URL / host:port
+        |  --db_root DIR       connector root / base URL; for milvus
+        |                      host:port or h2://host:port (cleartext) or
+        |                      h2s://host:port (TLS)
         |  --dir VDF_DIR       input VDF directory
         |  --index I           import only this index
         |  --id_range LO:HI    keep ids in [LO, HI] (inclusive)
@@ -579,6 +583,14 @@ object Cli {
     }
   }
 
+  /** A `--db` that names no connector: usage error, with the list. */
+  private def unknownDb(cmd: String, db: String): Int = {
+    val names = exporters.keys.toSeq.sorted ++
+      graft.connectors.wire.WireCliConnector.DialectNames.toSeq.sorted
+    System.err.println(s"$cmd: unknown --db '$db' (${names.mkString("|")})")
+    2
+  }
+
   /** export_vdf: scan every index of the source DB → VDF dir (§3.1). */
   private def cmdExport(spark: SparkSession, a: Args): Int = {
     val db = a.flags.getOrElse("db", "mock")
@@ -587,7 +599,8 @@ object Cli {
         require(a.flags.get("collections").exists(_.nonEmpty),
           s"--db $db needs --collections a,b (wire dialects don't enumerate)")
         wireConnector(db, a)
-      } else exporters(a.flags("db_root"))(db)
+      } else exporters.getOrElse(db, return unknownDb("export", db))(
+        a.flags("db_root"))
     val out = a.flags("out")
     val frames = exp.indexNames.map(ix => (ix, "") -> exp.scan(spark, ix)).toMap
     // record each index's distance metric so import doesn't silently
@@ -616,7 +629,8 @@ object Cli {
     val imp: VdbImporter =
       if (graft.connectors.wire.WireCliConnector.DialectNames(db))
         wireConnector(db, a)
-      else importers(a.flags("db_root"))(db)
+      else importers.getOrElse(db, return unknownDb("import", db))(
+        a.flags("db_root"))
     val dir = a.flags("dir")
     val meta = VdfIO.readMeta(dir)
     val idCol = meta.idColumnOrDefault
@@ -1256,10 +1270,10 @@ object Cli {
     var out = df.select(col("doc_id"), col("source"),
       col("n_tok").cast("long").as("n_tok"))
     packN.flatten.foreach { n => out = Curation.packAssign(out, n) }
-    out
+    // VdfIO's local parquet writer: no forked chmod, no .crc sidecars
+    VdfIO.writeParquet(out
       .withColumnRenamed("doc_id", idCol)
-      .withColumnRenamed("source", srcCol)
-      .write.mode("overwrite").parquet(a.flags("out"))
+      .withColumnRenamed("source", srcCol), a.flags("out"))
     deduped.unpersist(false)
     val counts = obs.toList.map { case (n, o) =>
       n -> o.get("rows").asInstanceOf[Long] }

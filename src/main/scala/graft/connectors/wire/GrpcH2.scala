@@ -1,7 +1,7 @@
 package graft.connectors.wire
 
 import java.io.{ByteArrayOutputStream, IOException}
-import java.nio.charset.StandardCharsets
+import java.nio.ByteBuffer
 import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, TimeUnit}
 
 import io.netty.bootstrap.{Bootstrap, ServerBootstrap}
@@ -12,13 +12,10 @@ import io.netty.channel.socket.SocketChannel
 import io.netty.channel.socket.nio.{NioServerSocketChannel, NioSocketChannel}
 import io.netty.handler.codec.http2.{DefaultHttp2DataFrame, DefaultHttp2Headers, DefaultHttp2HeadersFrame, Http2DataFrame, Http2FrameCodecBuilder, Http2HeadersFrame, Http2MultiplexHandler, Http2StreamChannelBootstrap, Http2StreamFrame}
 
-/** REAL gRPC-over-HTTP/2 — the transport the reference's flagship
-  * connectors actually dial (`pinecone_export.py:9`,
-  * `qdrant_export.py:34-39` `prefer_grpc=True`, Milvus gRPC-native
-  * `milvus_export.py:85-87`) — built directly on Netty's HTTP/2 codec
-  * (`netty-codec-http2`, on the Spark classpath; grpc-java is NOT in
-  * the offline sandbox cache, which is exactly why round 10 shipped
-  * the length-prefixed TLV stand-in).
+/** REAL gRPC-over-HTTP/2 — the one gRPC transport, the one the
+  * reference's Milvus connector dials (`milvus_export.py:85-87`) —
+  * built directly on Netty's HTTP/2 codec (`netty-codec-http2`, on the
+  * Spark classpath; grpc-java is not in the offline build).
   *
   * This is the gRPC wire protocol, not a sketch of it:
   *
@@ -33,13 +30,11 @@ import io.netty.handler.codec.http2.{DefaultHttp2DataFrame, DefaultHttp2Headers,
   *    format);
   *  - response = HEADERS (`:status 200`) + DATA + TRAILERS with
   *    `grpc-status`, mapped into the same [[WireHttpError]] fault
-  *    taxonomy both transports share. Errors can also arrive
+  *    taxonomy the REST dialects speak. Errors can also arrive
   *    trailers-only (the grpc convention for failed-before-payload).
   *
-  * Cleartext HTTP/2 with prior knowledge (the `grpc --plaintext`
-  * form); the method rides `:path` and auth rides `authorization` —
-  * the two places the TLV fallback had to approximate with payload
-  * fields 15/14. */
+  * Endpoints follow one rule ([[endpoint]]): cleartext HTTP/2 with
+  * prior knowledge (the `grpc --plaintext` form) or TLS with ALPN. */
 object GrpcH2Client {
   // DAEMON event-loop threads: the client group is a process-lifetime
   // singleton with no close hook, and netty's default (non-daemon)
@@ -55,10 +50,24 @@ object GrpcH2Client {
     * an N-page scan must ride ~1 connection, N streams. */
   val dials = new java.util.concurrent.atomic.AtomicLong()
 
-  /** `endpoint` is `host:port` (cleartext prior-knowledge h2) or
-    * `tls:host:port` (TLS with real endpoint identification — the
-    * gRPC default deployment; trust from the same
-    * `graft.wire.truststore` knob every other transport uses). */
+  /** The one endpoint rule, from a dialect's URL to the internal form
+    * [[call]] takes:
+    *  - `h2://host:port` and a bare `host:port` → `host:port`,
+    *    cleartext prior-knowledge h2 (`grpc --plaintext`; a real
+    *    Milvus on :19530 answers it);
+    *  - `h2s://host:port` → `tls:host:port`, TLS with ALPN `h2` and
+    *    real endpoint identification, trust from the
+    *    `graft.wire.truststore` knob the HTTPS dialects use;
+    *  - any other `scheme://` is refused. */
+  def endpoint(url: String): String =
+    if (url.startsWith("h2://")) url.stripPrefix("h2://")
+    else if (url.startsWith("h2s://")) "tls:" + url.stripPrefix("h2s://")
+    else if (!url.contains("://")) url
+    else throw new IllegalArgumentException(s"unsupported gRPC endpoint " +
+      s"'$url': use host:port or h2://host:port (cleartext) or " +
+      "h2s://host:port (TLS)")
+
+  /** Dials `endpoint`, given in the internal form [[endpoint]] returns. */
   private def connect(endpoint: String): Channel = {
     val tls = endpoint.startsWith("tls:")
     val Array(h, p) = endpoint.stripPrefix("tls:").split(":", 2)
@@ -417,18 +426,21 @@ object GrpcH2StubServer {
 }
 
 object GrpcH2 {
-  /** Framed-bytes helpers for the DATA payloads (the 5-byte gRPC
-    * prefix both directions). */
+  /** The gRPC message prefix DATA frames carry, both directions: flag
+    * byte (0 = uncompressed) + u32 big-endian length + payload. */
   def frame(payload: Array[Byte]): Array[Byte] =
-    GrpcFraming.message(o => GrpcFraming.writeFrame(o, payload))
-  def unframe(framed: Array[Byte]): Array[Byte] =
-    GrpcFraming.readFrame(new java.io.DataInputStream(
-      new java.io.ByteArrayInputStream(framed)))
+    ByteBuffer.allocate(5 + payload.length)
+      .put(0.toByte).putInt(payload.length).put(payload).array()
+  def unframe(framed: Array[Byte]): Array[Byte] = {
+    require(framed.length >= 5 && framed(0) == 0,
+      s"not an uncompressed gRPC message (${framed.length} bytes)")
+    val n = ByteBuffer.wrap(framed, 1, 4).getInt
+    require(framed.length - 5 >= n,
+      s"truncated gRPC message: $n bytes announced, ${framed.length - 5} sent")
+    java.util.Arrays.copyOfRange(framed, 5, 5 + n)
+  }
 
   /** Strip a `Bearer ` prefix from an authorization header value. */
   def bearer(auth: Option[String]): Option[String] =
     auth.map(a => if (a.startsWith("Bearer ")) a.substring(7) else a)
-
-  private[wire] def utf8(s: String): Array[Byte] =
-    s.getBytes(StandardCharsets.UTF_8)
 }

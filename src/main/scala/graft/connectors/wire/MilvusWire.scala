@@ -1,7 +1,6 @@
 package graft.connectors.wire
 
-import java.io.{DataInputStream, DataOutputStream}
-import java.net.{InetSocketAddress, ServerSocket, Socket}
+import java.io.DataOutputStream
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -9,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.connectors.PaginatedScan
 import graft.core.Metric
 
-/** Milvus over the framed binary transport — the reference's
-  * most-used connector whose NATIVE protocol is gRPC
+/** Milvus over gRPC-over-HTTP/2 — the reference's most-used connector
+  * whose NATIVE protocol is gRPC
   * (`export_vdf/milvus_export.py:85-87` dials `connections.connect`,
   * `:117-158` exports via `query_iterator` batches over collections
   * whose schema is a VARCHAR primary key + one dtype-100/101 vector
@@ -31,12 +30,16 @@ import graft.core.Metric
   *    `len(res) == 0` closes the iterator), via
   *    `PaginatedScan.byContinuation` on one executor per collection.
   *
-  * Message framing reuses [[GrpcFraming]] (5-byte gRPC prefix +
-  * protobuf-style TLV payloads). Milvus-flavored fields: the schema
-  * surface (describe → pk name, vector field name, dtype 101 =
-  * FLOAT_VECTOR, dim, metric_type) and columnar-ish FieldData rows.
-  * Auth rides field 14 (gRPC `authorization` metadata), key sourced
-  * from ZILLIZ_CLOUD_TOKEN (`milvus_export.py:60-65`).
+  * Every call is one unary RPC on [[GrpcH2Client]]'s one HTTP/2
+  * connection per endpoint: the method rides `:path`
+  * ([[MilvusWire.h2Path]]), the payload is a protobuf-style TLV message
+  * ([[GrpcFraming]]), and the token rides the `authorization` header,
+  * key sourced from ZILLIZ_CLOUD_TOKEN (`milvus_export.py:60-65`).
+  * `hostPort` is `host:port` or `h2://host:port` (cleartext) or
+  * `h2s://host:port` (TLS); [[GrpcH2Client.endpoint]] refuses any other
+  * scheme. Milvus-flavored fields: the schema surface (describe → pk
+  * name, vector field name, dtype 101 = FLOAT_VECTOR, dim, metric_type)
+  * and columnar-ish FieldData rows.
   */
 final case class MilvusWire(hostPort: String,
     token: Option[String] = None) extends WireDialect
@@ -44,39 +47,12 @@ final case class MilvusWire(hostPort: String,
   import GrpcFraming._
   import MilvusWire._
 
-  // Transport by scheme: `h2://host:port` dials REAL gRPC-over-HTTP/2
-  // ([[GrpcH2Client]] — one multiplexed connection per endpoint, the
-  // method as `:path`, auth as a real `authorization` header);
-  // `tls://` / bare host:port ride the framed TCP pool
-  // ([[FramedChannelPool]], one keep-alive channel per exchange, the
-  // reference's one-connection-per-process shape
-  // `milvus_export.py:85-87`), with the method on payload field 15 and
-  // auth on field 14 — the TLV stand-ins for what HTTP/2 carries as
-  // headers. The protobuf request/response payloads are IDENTICAL on
-  // both transports.
-  private val h2 = hostPort.startsWith("h2://") ||
-    hostPort.startsWith("h2s://")
-  // h2s:// = gRPC's default deployment: HTTP/2 over TLS with ALPN
-  private def h2Endpoint: String =
-    if (hostPort.startsWith("h2s://"))
-      "tls:" + hostPort.stripPrefix("h2s://")
-    else hostPort.stripPrefix("h2://")
+  private val endpoint = GrpcH2Client.endpoint(hostPort)
 
-  private def call(method: Int, idempotent: Boolean = true)(
+  private def call(method: Int)(
       build: DataOutputStream => Unit): Map[Int, Seq[Any]] = {
-    val rspBytes =
-      if (h2)
-        GrpcH2.unframe(GrpcH2Client.call(h2Endpoint,
-          MilvusWire.h2Path(method), GrpcH2.frame(message(build)), token))
-      else {
-        val payload = message { o =>
-          token.foreach(writeStringField(o, 14, _))
-          writeVarintField(o, 15, method)
-          build(o)
-        }
-        FramedChannelPool.exchange(hostPort, payload, idempotent)
-      }
-    val rsp = readMessage(rspBytes)
+    val rsp = readMessage(GrpcH2.unframe(GrpcH2Client.call(endpoint,
+      h2Path(method), GrpcH2.frame(message(build)), token)))
     val status = rsp.get(1).flatMap(_.headOption)
       .map(_.asInstanceOf[Long].toInt).getOrElse(0)
     if (status != 0)
@@ -91,9 +67,7 @@ final case class MilvusWire(hostPort: String,
     * dynamic field on, metric from the VDF manifest
     * (`milvus_import.py:111-150`). */
   override def create(c: String, dims: Int, metric: Metric): Unit = {
-    // NOT idempotent: a stale-channel re-send of a create the server
-    // already applied surfaces ALREADY_EXISTS — propagate instead
-    call(MCreate, idempotent = false) { o =>
+    call(MCreate) { o =>
       writeStringField(o, 2, c)
       writeVarintField(o, 9, dims)
       writeStringField(o, 10,
@@ -202,7 +176,7 @@ final case class MilvusWire(hostPort: String,
 }
 
 object MilvusWire {
-  /** Method ids on the framed transport. */
+  /** Method ids: the keys of [[h2Path]], and what the stub dispatches on. */
   val MCreate = 1
   val MCount = 2
   val MQuery = 3
@@ -211,8 +185,7 @@ object MilvusWire {
   val MDescribe = 6
   val MIterate = 7
 
-  /** The same methods as real gRPC `:path`es (the H2 transport routes
-    * by path, never by a payload field). Names follow the
+  /** The methods as real gRPC `:path`es. Names follow the
     * MilvusService RPCs these calls correspond to; QueryIterator is
     * the reference's client-side iterator loop surfaced as one RPC
     * name on the stub. */
@@ -239,13 +212,13 @@ object MilvusWire {
 final case class MilvusSchema(pkField: String, vectorField: String,
     dtype: Int, dim: Int, metricType: String)
 
-/** Stub server half: Milvus-flavored methods over the same framed
-  * transport, with the fault-injection surface the other stubs have so
-  * specs assert identical shrink behavior. Iterator state is
-  * server-side (real Milvus holds a query cursor); tokens are opaque
-  * to the client. */
-final class MilvusStubServer(port: Int = 0,
-    tls: Option[WireTls.KeyMaterial] = None) {
+/** Stub server half: the Milvus methods behind [[GrpcH2StubServer]]
+  * (`new GrpcH2StubServer(stub.dispatchH2)`), with the
+  * fault-injection surface the REST stub has so specs assert the same
+  * shrink behavior. Iterator state is server-side (real Milvus holds a
+  * query cursor); tokens are opaque to the client. The class holds
+  * only the store: the HTTP/2 server owns the socket. */
+final class MilvusStubServer {
   import GrpcFraming._
   import MilvusWire._
 
@@ -254,7 +227,7 @@ final class MilvusStubServer(port: Int = 0,
 
   private val store = new java.util.LinkedHashMap[String, Col]()
   val requestLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  /** `method collection token=…` per request — field-14 metadata. */
+  /** `milvus m<method> <collection> token=<bearer | ->` per request. */
   val authLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   private val writeFails = new java.util.concurrent.atomic.AtomicInteger(0)
   @volatile private var writeFailStatus = 14
@@ -269,70 +242,19 @@ final class MilvusStubServer(port: Int = 0,
     readFailStatus = status; readFails.set(n)
   }
 
-  // port 0 (default) = ephemeral; a fixed port lets the pool specs
-  // restart the server in place to stale the parked channels. With
-  // key material the accept socket speaks TLS and hostPort carries
-  // the tls:// scheme the framed channels dial.
-  private val server: ServerSocket = tls match {
-    case Some(km) => WireTls.serverContext(km.keyStore, km.password)
-      .getServerSocketFactory.createServerSocket()
-    case None => new ServerSocket()
-  }
-  server.bind(new InetSocketAddress("127.0.0.1", port))
-  val hostPort: String =
-    s"${if (tls.isDefined) "tls://" else ""}127.0.0.1:${server.getLocalPort}"
+  /** Drop every collection. */
+  def stop(): Unit = synchronized(store.clear())
 
-  /** TCP connections ACCEPTED — with keep-alive clients this must stay
-    * ≪ the request count (the reuse assertion in MilvusWireSpec). */
-  val connections = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  // cached pool: keep-alive connections occupy a thread while open, so
-  // a fixed-8 pool would starve new connections behind idle ones
-  private val pool = java.util.concurrent.Executors.newCachedThreadPool()
-  @volatile private var running = true
-  // accepted sockets, so stop() can sever live keep-alive connections
-  // too (the pool specs restart the stub to stale parked channels —
-  // a stop that leaves handler threads serving old sockets would keep
-  // the "dead" connections answering)
-  private val open = new java.util.concurrent.ConcurrentLinkedQueue[Socket]()
-  private val acceptor = new Thread(() => {
-    while (running) {
-      try {
-        val sock = server.accept()
-        open.add(sock)
-        pool.execute(() => handle(sock))
-      } catch { case _: Exception if !running => }
-    }
-  }, "milvus-stub-acceptor")
-  acceptor.setDaemon(true)
-  acceptor.start()
-
-  def stop(): Unit = {
-    running = false
-    server.close()
-    open.forEach(s => try s.close() catch { case _: Exception => () })
-    pool.shutdown()
-  }
-
-  /** One request → one framed response, transport-agnostic: the
-    * gRPC-over-HTTP/2 stub ([[GrpcH2StubServer]]) routes a real
-    * `:path` + `authorization` header into the SAME dispatch the TCP
-    * acceptor uses — h2Method maps the path back to the method id and
-    * the bearer token is re-injected as field 14 so authLog records
-    * one shape for both transports. Unknown path → 501 → grpc
-    * UNIMPLEMENTED in the trailers. */
+  /** One unary call: the `:path` picks the method (unknown path → 501
+    * → UNIMPLEMENTED in the trailers), the bearer token of the
+    * `authorization` header goes to [[authLog]], and the return value
+    * is the framed response message. */
   def dispatchH2(path: String, auth: Option[String],
       framedReq: Array[Byte]): Array[Byte] = {
-    val method = MilvusWire.h2Method.getOrElse(path,
+    val method = h2Method.getOrElse(path,
       throw WireHttpError(501, s"unimplemented path $path"))
-    val base = readMessage(GrpcH2.unframe(framedReq))
-    val req = base ++ Map[Int, Seq[Any]](
-      15 -> Seq(method.toLong),
-      14 -> GrpcH2.bearer(auth).toSeq.map(t =>
-        t.getBytes(StandardCharsets.UTF_8)))
-    val bos = new java.io.ByteArrayOutputStream()
-    serve(req, new DataOutputStream(bos))
-    bos.toByteArray
+    val req = readMessage(GrpcH2.unframe(framedReq))
+    GrpcH2.frame(message(o => serve(method, GrpcH2.bearer(auth), req, o)))
   }
 
   def collectionSize(c: String): Int = synchronized {
@@ -353,11 +275,6 @@ final class MilvusStubServer(port: Int = 0,
         .map(e => WirePoint(e.getKey, e.getValue._1, e.getValue._2))
     }
 
-  private def respond(out: DataOutputStream)(build: DataOutputStream => Unit)
-      : Unit = writeFrame(out, message(build))
-  private def respondStatus(out: DataOutputStream, status: Int): Unit =
-    respond(out)(o => writeVarintField(o, 1, status))
-
   private def str(f: Map[Int, Seq[Any]], field: Int): String =
     new String(f(field).head.asInstanceOf[Array[Byte]], StandardCharsets.UTF_8)
   private def num(f: Map[Int, Seq[Any]], field: Int, dflt: Long = 0): Long =
@@ -371,60 +288,38 @@ final class MilvusStubServer(port: Int = 0,
         if (wantPay) p.payload else Map.empty),
       withVector = wantVec, withPayload = wantPay, field = 3))
 
-  private def handle(sock: Socket): Unit = try {
-    connections.incrementAndGet()
-    val in = new DataInputStream(sock.getInputStream)
-    val out = new DataOutputStream(sock.getOutputStream)
-    // keep-alive: serve frames until the client closes the connection
-    while (true) {
-      val req =
-        try readMessage(readFrame(in))
-        catch {
-          case _: java.io.EOFException | _: java.net.SocketException =>
-            return
-        }
-      serve(req, out)
-    }
-  } catch {
-    case _: Exception => // connection dropped mid-frame
-  } finally sock.close()
-
-  private def serve(req: Map[Int, Seq[Any]],
-      out: DataOutputStream): Unit = {
-    val method = num(req, 15)
+  /** Writes the response message of one call to `o`: field 1 is the
+    * status (0 OK), the rest the method's result fields. */
+  private def serve(method: Int, token: Option[String],
+      req: Map[Int, Seq[Any]], o: DataOutputStream): Unit = {
     val c = str(req, 2)
-    authLog.add(s"milvus m$method $c token=" +
-      req.get(14).flatMap(_.headOption)
-        .map(b => new String(b.asInstanceOf[Array[Byte]],
-          StandardCharsets.UTF_8)).getOrElse("-"))
-    method.toInt match {
+    authLog.add(s"milvus m$method $c token=${token.getOrElse("-")}")
+    def ok(): Unit = writeVarintField(o, 1, 0)
+    def fail(status: Int): Unit = writeVarintField(o, 1, status)
+    method match {
       case MCreate =>
         val dims = num(req, 9).toInt
         val mt = str(req, 10)
         requestLog.add(s"milvus create $c dims=$dims metric=$mt")
         ensure(c, dims, mt)
-        respondStatus(out, 0)
+        ok()
 
       case MCount =>
         requestLog.add(s"milvus count $c")
-        respond(out) { o =>
-          writeVarintField(o, 1, 0)
-          writeVarintField(o, 2, collectionSize(c))
-        }
+        ok()
+        writeVarintField(o, 2, collectionSize(c))
 
       case MDescribe =>
         requestLog.add(s"milvus describe $c")
-        val col = synchronized(Option(store.get(c)))
-        col match {
-          case None => respondStatus(out, 5) // NOT_FOUND
-          case Some(cc) => respond(out) { o =>
-            writeVarintField(o, 1, 0)
+        synchronized(Option(store.get(c))) match {
+          case None => fail(5) // NOT_FOUND
+          case Some(cc) =>
+            ok()
             writeStringField(o, 5, "id")
             writeStringField(o, 6, "vector")
             writeVarintField(o, 7, DtypeFloatVector)
             writeVarintField(o, 8, cc.dims)
             writeStringField(o, 9, cc.metricType)
-          }
         }
 
       case MQuery =>
@@ -435,14 +330,12 @@ final class MilvusStubServer(port: Int = 0,
         requestLog.add(s"milvus query $c offset=$off limit=$limit " +
           s"want_vector=$wantVec want_payload=$wantPay")
         if (readFails.getAndUpdate(n => math.max(0, n - 1)) > 0)
-          respondStatus(out, readFailStatus)
+          fail(readFailStatus)
         else {
           val pts = page(c, off, limit)
-          respond(out) { o =>
-            writeVarintField(o, 1, 0)
-            writePoints(o, pts, wantVec, wantPay)
-            writeVarintField(o, 4, pts.size)
-          }
+          ok()
+          writePoints(o, pts, wantVec, wantPay)
+          writeVarintField(o, 4, pts.size)
         }
 
       case MIterate =>
@@ -454,16 +347,14 @@ final class MilvusStubServer(port: Int = 0,
         requestLog.add(s"milvus iterate $c token=${tok.getOrElse("-")} " +
           s"batch=$batch")
         if (readFails.getAndUpdate(n => math.max(0, n - 1)) > 0)
-          respondStatus(out, readFailStatus)
+          fail(readFailStatus)
         else {
           // server-side cursor: the token encodes progress opaquely
           val off = tok.map(_.stripPrefix("it").toInt).getOrElse(0)
           val pts = page(c, off, batch)
-          respond(out) { o =>
-            writeVarintField(o, 1, 0)
-            writePoints(o, pts, wantVec, wantPay = true)
-            writeStringField(o, 11, s"it${off + pts.size}")
-          }
+          ok()
+          writePoints(o, pts, wantVec, wantPay = true)
+          writeStringField(o, 11, s"it${off + pts.size}")
         }
 
       case MRetrieve =>
@@ -474,7 +365,7 @@ final class MilvusStubServer(port: Int = 0,
         requestLog.add(s"milvus retrieve $c n=${ids.size} " +
           s"want_vector=$wantVec want_payload=$wantPay")
         if (readFails.getAndUpdate(n => math.max(0, n - 1)) > 0)
-          respondStatus(out, readFailStatus)
+          fail(readFailStatus)
         else {
           val pts = synchronized {
             val col = store.get(c)
@@ -482,10 +373,8 @@ final class MilvusStubServer(port: Int = 0,
             ids.flatMap(id => Option(col.rows.get(id))
               .map(v => WirePoint(id, v._1, v._2)))
           }
-          respond(out) { o =>
-            writeVarintField(o, 1, 0)
-            writePoints(o, pts, wantVec, wantPay)
-          }
+          ok()
+          writePoints(o, pts, wantVec, wantPay)
         }
 
       case MUpsert =>
@@ -493,21 +382,21 @@ final class MilvusStubServer(port: Int = 0,
           readPoint(b.asInstanceOf[Array[Byte]]))
         requestLog.add(s"milvus upsert $c n=${pts.size}")
         if (writeFails.getAndUpdate(n => math.max(0, n - 1)) > 0)
-          respondStatus(out, writeFailStatus)
+          fail(writeFailStatus)
         else if (pts.size > maxUpsertBatch)
-          respondStatus(out, 8) // RESOURCE_EXHAUSTED
+          fail(8) // RESOURCE_EXHAUSTED
         else {
           ensure(c, pts.headOption.map(_.vector.size).getOrElse(0), "COSINE")
           synchronized {
             val col = store.get(c)
             pts.foreach(p => col.rows.put(p.id, (p.vector, p.payload)))
           }
-          respondStatus(out, 0)
+          ok()
         }
 
       case m =>
         requestLog.add(s"milvus unknown method $m")
-        respondStatus(out, 12) // UNIMPLEMENTED
+        fail(12) // UNIMPLEMENTED
     }
   }
 }

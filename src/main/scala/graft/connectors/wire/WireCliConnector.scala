@@ -9,8 +9,8 @@ import graft.core.{Constants, Metric}
 
 /** The CLI half of the wire connectors: one class implementing BOTH
   * the exporter and importer contracts over any [[WireDialect]]
-  * (qdrant / pinecone / chroma REST, the gRPC-shaped framed
-  * transport, or milvus), so `graft export --db qdrant --db_root
+  * (qdrant / pinecone / chroma and the other REST dialects, or milvus
+  * over gRPC/HTTP/2), so `graft export --db qdrant --db_root
   * http://…` and `graft import --db pinecone …` run the reference's
   * flagship use case — migrate a collection between vector DBs
   * through a VDF directory — with every fetch and upsert as real wire
@@ -175,7 +175,7 @@ object WireCliConnector {
   /** CLI dialect names routed to the wire connector. */
   val DialectNames: Set[String] =
     Set("qdrant", "pinecone", "chroma", "lancedb", "kdbai", "vertex",
-      "grpc", "milvus") ++ CursorNames
+      "milvus") ++ CursorNames
 
   /** Shape an arbitrary VDF frame into the wire row
     * (id string, vector array<double>, payload map<string,string>):

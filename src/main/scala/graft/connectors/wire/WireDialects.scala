@@ -34,8 +34,8 @@ final case class WireHttpError(code: Int, body: String)
 object WireHttpError {
   /** The one retryable/fatal split every wire retry loop consults:
     * throttling (429) and server-side transients (5xx) retry; 501 Not
-    * Implemented is carved out because it is permanent — the framed
-    * transports map gRPC UNIMPLEMENTED onto it, and shrinking a batch
+    * Implemented is carved out because it is permanent — the gRPC
+    * transport maps UNIMPLEMENTED onto it, and shrinking a batch
     * can never make an unimplemented method appear. */
   def retryable(code: Int): Boolean =
     code == 429 || (code >= 500 && code != 501)
@@ -147,9 +147,9 @@ private[wire] object WireHttp {
   * `weaviate_export.py:38-43` → WEAVIATE_API_KEY,
   * `milvus_export.py:60-65` → ZILLIZ_CLOUD_TOKEN). Header names are
   * each service's public API shape: Pinecone `Api-Key`, Qdrant
-  * `api-key`, Astra `Token`, bearer tokens for the rest; the framed
-  * binary transports carry the token as a request metadata field (the
-  * gRPC `authorization` metadata). No secret ever lives in code —
+  * `api-key`, Astra `Token`, bearer tokens for the rest; milvus's gRPC
+  * calls carry it as the `authorization: Bearer` header of every
+  * HTTP/2 stream. No secret ever lives in code —
   * absent env var = unauthenticated client, exactly like the
   * reference's skip-on-empty prompt. */
 object WireAuth {
@@ -163,8 +163,7 @@ object WireAuth {
     "weaviate" -> "WEAVIATE_API_KEY",
     "milvus" -> "ZILLIZ_CLOUD_TOKEN",
     "lancedb" -> "LANCEDB_API_KEY",
-    "kdbai" -> "KDBAI_API_KEY",
-    "grpc" -> "GRAFT_GRPC_TOKEN")
+    "kdbai" -> "KDBAI_API_KEY")
 
   /** Source a dialect's key from the environment (injectable for
     * tests — the JVM can't set real env vars). Empty values count as
@@ -499,11 +498,10 @@ object WireDialect {
     case "chroma" => ChromaWire(base, apiKey)
     case "lancedb" => LanceDbWire(base, apiKey)
     case "kdbai" => KdbaiWire(base, apiKey)
-    // framed binary (gRPC-shaped) transports: base is host:port
-    case "grpc" => GrpcWire(base, apiKey)
+    // gRPC over HTTP/2: base is host:port | h2://host:port | h2s://host:port
     case "milvus" => MilvusWire(base, apiKey)
     case other => throw new IllegalArgumentException(
       s"unknown wire dialect '$other' " +
-        "(qdrant|pinecone|chroma|lancedb|kdbai|grpc|milvus)")
+        "(qdrant|pinecone|chroma|lancedb|kdbai|milvus)")
   }
 }

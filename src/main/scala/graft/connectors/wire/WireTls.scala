@@ -75,9 +75,9 @@ object WireTls {
   }
 
   /** Client context from the `graft.wire.truststore` /
-    * `graft.wire.truststorePass` properties — the trust the framed
-    * transports' `tls://` channels dial with; platform roots when the
-    * knob is unset (the public-CA case). */
+    * `graft.wire.truststorePass` properties — the trust `h2s://` gRPC
+    * endpoints dial with; platform roots when the knob is unset (the
+    * public-CA case). */
   def clientContextFromProps(): SSLContext = {
     val ts = System.getProperty("graft.wire.truststore", "")
     if (ts.isEmpty) SSLContext.getDefault

@@ -169,7 +169,7 @@ case class L2DistanceSq(left: Expression, right: Expression)
   * JVM's huge-method bytecode limit, HotSpot refuses to JIT it, and
   * the "codegen'd" assignment runs as interpreted bytecode —
   * measured ~200× slower at 2M×64/k=64: 420 s vs 2 s per pass
-  * (KmeansProbe caught it — 32 cores pegged for minutes per pass
+  * (the retired KmeansProbe main caught it — 32 cores pegged for minutes per pass
   * inside `project_doConsume`; docs/artifacts/kmeans_probe_r13c.txt).
   * This expression is one k×dim loop over two flat reference arrays —
   * a few hundred bytecodes regardless of k, always JIT-compiled.

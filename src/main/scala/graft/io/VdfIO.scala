@@ -25,8 +25,8 @@ import scala.jdk.CollectionConverters._
   * bumps — is a local/shared-filesystem artifact, exactly like the
   * reference's (the Python tool writes local dirs; `java.nio` rename
   * semantics are what makes the swap atomic-adjacent). So its parquet
-  * writes ([[writeParquet]]: `writeNamespace`'s plain branch and
-  * `consolidate`) put `file:` paths through [[LocalFs]]: they fork no
+  * writes ([[writeParquet]]: `writeNamespace`'s plain branch,
+  * `consolidate`, and `graft curate --out`) put `file:` paths through [[LocalFs]]: they fork no
   * `chmod` per file and directory and leave no `.crc` sidecars, like
   * the reference's pyarrow-written dirs. Vector columns
   * (`array<float>`/`array<double>`) are written PLAIN: random vector
@@ -208,7 +208,8 @@ object VdfIO {
       case _ => false
     })
 
-  /** The one parquet write of VDF data files (overwrite `out`).
+  /** The one local parquet write of VDF data files and `graft curate
+    * --out` (overwrite `out`).
     *  - `parquet.enable.dictionary#<c>.list.element=false` per
     *    `array<float>`/`array<double>` column `c`: the dictionary
     *    writer hashes every double, then falls back to PLAIN anyway.
@@ -216,7 +217,7 @@ object VdfIO {
     *    parquet's default.
     *  - `fs.file.impl` = [[LocalFs]], uncached: only this write's
     *    Hadoop conf and only the `file:` scheme see it. */
-  private def writeParquet(df: DataFrame, out: String,
+  private[graft] def writeParquet(df: DataFrame, out: String,
       maxRecordsPerFile: Long = 0L): Unit = {
     val plainVectors = vectorFields(df).map(f =>
       s"parquet.enable.dictionary#${f.name}.list.element" -> "false")

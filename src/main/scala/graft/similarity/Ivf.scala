@@ -78,7 +78,8 @@ object Ivf {
     * nlist dot loops into one generated method; past the JVM's
     * huge-method limit (~nlist ≥ 30ish at 64 dims) HotSpot stopped
     * JIT-compiling it and assignment ran interpreted — ~200× slower
-    * at k=64 (caught by KmeansProbe, see the expression's scaladoc).
+    * at k=64 (caught by the retired KmeansProbe main, see the expression's
+    * scaladoc).
     * Score math, tie-breaks, and null semantics are identical
     * (spec-pinned against the old formulation; the q_ann_* /
     * q_kmeans_* oracle gates re-prove it end-to-end). Centroids must

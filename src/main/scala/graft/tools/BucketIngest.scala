@@ -9,7 +9,8 @@ import graft.ops.Scale
   * SPINE tables (lineitem, orders) bucketed by orderkey under
   * `<dir>/_bucketed/…`, the layout `QueriesCommon.bucketedTable` routes
   * the shipped q_join_agg / q_semi_idlist / q_anti_missing over. This
-  * is the productized form of round-9's BucketSpineProbe: the probes
+  * is the productized form of round-9's BucketSpineProbe (a probe main
+  * since retired): the probes
   * established that the whole single-JVM residue of those spines at
   * 15.7 GiB is the orderkey exchange itself (zero spill, shuffle at its
   * semantic minimum), and a cluster removes that exchange by LAYOUT —

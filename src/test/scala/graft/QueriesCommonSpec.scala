@@ -62,7 +62,7 @@ class QueriesCommonSpec extends SparkSpec {
       // at-scale branch widens the runtime bloom-filter gates so a
       // probe side that grows with the fact table still injects, and
       // sizes the fallback filter from the branch's size class
-      // (BloomProbe A/B, BASELINE.md §e, docs/artifacts/bloom15_r9.txt)
+      // (the retired BloomProbe main's A/B, BASELINE.md §e, docs/artifacts/bloom15_r9.txt)
       assert(branch.conf.get(
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold") == "1GB")
       // the tiny test dir sits in size class 0: 4M expected keys,

@@ -277,6 +277,30 @@ class CliSpec extends SparkSpec {
       "--min_tokens", "50", "--max_tokens", "10")) == 2)
   }
 
+  test("curate --out: VdfIO's local writer, no .crc sidecars, the library pipeline's rows") {
+    import spark.implicits._
+    val in = tmp() + "/docs"
+    (0L until 60L).map { i =>
+      val text =
+        if (i % 10 == 8) (0 until 30).map(j => s"dup$j").mkString(" ")
+        else (0 until 30).map(j => s"t${i}x$j").mkString(" ")
+      (i, s"src${i % 3}", text)
+    }.toDF("doc_id", "source", "text").write.parquet(in)
+    val out = tmp() + "/curated"
+    assert(Cli.run(spark, Seq("curate", "--in", in, "--out", out)) == 0)
+    val files = new java.io.File(out).list().toSeq
+    assert(files.exists(_.endsWith(".parquet")), files.mkString(","))
+    assert(!files.exists(_.endsWith(".crc")), files.mkString(","))
+    val docs = spark.read.parquet(in)
+    val want = graft.pipeline.Curation.keepSplit(
+        graft.pipeline.Curation.nearDedupLsh(
+          graft.pipeline.Curation.exactDedup(
+            graft.pipeline.Curation.qualityFilter(docs))), "train")
+      .select(col("doc_id"), col("source"), col("n_tok").cast("long"))
+      .collect().toSet
+    assert(spark.read.parquet(out).collect().toSet == want && want.nonEmpty)
+  }
+
   test("curate --follow: incremental runs drain only new files; fp_index rejects prior-run fingerprints") {
     import spark.implicits._
     val in = tmp() + "/docs_follow"

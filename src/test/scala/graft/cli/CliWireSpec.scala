@@ -10,22 +10,22 @@ import scala.jdk.CollectionConverters._
   * a collection between vector DBs through a VDF directory, driven by
   * the CLI — `graft export --db qdrant` (REST scroll through the DSv2
   * scan) → VDF parquet + manifest → `graft import --db pinecone`
-  * (shrink-batched upserts) and `--db grpc` (framed binary transport).
+  * (shrink-batched upserts) and `--db milvus` (gRPC over HTTP/2).
   * Every fetch/upsert is real wire traffic against the stub servers. */
 class CliWireSpec extends SparkSpec {
 
   private var http: WireStubServer = _
-  private var grpc: GrpcStubServer = _
+  private var milvus: MilvusH2Stub = _
 
   override def beforeAll(): Unit = {
     super.beforeAll()
     http = new WireStubServer
-    grpc = new GrpcStubServer
+    milvus = new MilvusH2Stub
   }
 
   override def afterAll(): Unit = {
     if (http != null) http.stop()
-    if (grpc != null) grpc.stop()
+    if (milvus != null) milvus.stop()
     super.afterAll()
   }
 
@@ -60,23 +60,14 @@ class CliWireSpec extends SparkSpec {
       "--db_root", http.url, "--dir", vdf)) == 0)
     assert(http.collectionSize(c) == 450) // pinecone side shares the store
 
-    // and into the framed binary transport
-    assert(Cli.run(spark, Seq("import", "--db", "grpc",
-      "--db_root", grpc.hostPort, "--dir", vdf)) == 0)
-    assert(grpc.collectionSize(c) == 450)
-    assert(grpc.requestLog.asScala.exists(_.startsWith(s"grpc upsert $c")))
-
-    // and over REAL gRPC-over-HTTP/2: the h2:// scheme routes the
-    // same milvus dialect through GrpcH2Client (round 11)
-    val mh2 = new MilvusStubServer()
-    val h2srv = new GrpcH2StubServer(mh2.dispatchH2)
-    try {
-      assert(Cli.run(spark, Seq("import", "--db", "milvus",
-        "--db_root", s"h2://${h2srv.hostPort}", "--dir", vdf)) == 0)
-      assert(mh2.collectionSize(c) == 450)
-      assert(h2srv.requestLog.asScala.exists(_.startsWith(
-        "/milvus.proto.milvus.MilvusService/Upsert")))
-    } finally { h2srv.stop(); mh2.stop() }
+    // and into milvus over gRPC/HTTP/2: a bare host:port --db_root
+    // dials cleartext h2 (`grpc --plaintext`)
+    assert(Cli.run(spark, Seq("import", "--db", "milvus",
+      "--db_root", milvus.hostPort, "--dir", vdf)) == 0)
+    assert(milvus.collectionSize(c) == 450)
+    assert(milvus.requestLog.asScala.exists(_.startsWith(s"milvus upsert $c")))
+    assert(milvus.h2.requestLog.asScala.exists(_.startsWith(
+      "/milvus.proto.milvus.MilvusService/Upsert")))
 
     // the cursor-token transports import the same VDF dir; a second
     // export round-trips back out of each cursor scan. The stub's
@@ -97,9 +88,11 @@ class CliWireSpec extends SparkSpec {
       assert(back2 == 450, s"$db round-trip lost rows: $back2")
     }
 
-    // data fidelity: read the grpc side back through the DSv2 scan and
-    // compare id/vector/payload against the seed
-    val back = WireVdb.read(spark, "grpc", grpc.hostPort, c).collect()
+    // data fidelity: read the milvus side back through the DSv2 scan
+    // (the h2:// form of the same endpoint) and compare
+    // id/vector/payload against the seed
+    val back = WireVdb.read(spark, "milvus", s"h2://${milvus.hostPort}", c)
+      .collect()
       .map(r => (r.getString(0), r.getSeq[Double](1).toList,
         r.getMap[String, String](2).toMap)).toSet
     assert(back.size == 450)
@@ -130,15 +123,37 @@ class CliWireSpec extends SparkSpec {
     assert(Cli.run(spark, Seq("export", "--db", "qdrant",
       "--db_root", http.url, "--collections", c, "--out", vdf)) == 0)
     // numeric id filter doesn't apply to string ids; use max_rows cap
-    assert(Cli.run(spark, Seq("import", "--db", "grpc",
-      "--db_root", grpc.hostPort, "--dir", vdf, "--max_rows", "40")) == 0)
-    assert(grpc.collectionSize(c) == 40)
+    assert(Cli.run(spark, Seq("import", "--db", "milvus",
+      "--db_root", milvus.hostPort, "--dir", vdf, "--max_rows", "40")) == 0)
+    assert(milvus.collectionSize(c) == 40)
     // create_new: the occupied name is suffixed, the data lands there
-    assert(Cli.run(spark, Seq("import", "--db", "grpc",
-      "--db_root", grpc.hostPort, "--dir", vdf, "--max_rows", "40",
+    assert(Cli.run(spark, Seq("import", "--db", "milvus",
+      "--db_root", milvus.hostPort, "--dir", vdf, "--max_rows", "40",
       "--create_new")) == 0)
-    assert(grpc.collectionSize(s"$c-1") == 40)
+    assert(milvus.collectionSize(s"$c-1") == 40)
   }
+  test("--db grpc is refused with the dialect list: milvus is the one gRPC dialect") {
+    val tmp = java.nio.file.Files.createTempDirectory("wire_grpc").toString
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val rcs =
+      try Seq(
+        Cli.run(spark, Seq("export", "--db", "grpc", "--db_root",
+          milvus.hostPort, "--collections", "c", "--out", tmp + "/out")),
+        Cli.run(spark, Seq("import", "--db", "grpc", "--db_root",
+          milvus.hostPort, "--dir", tmp)))
+      finally System.setErr(saved)
+    assert(rcs == Seq(2, 2))
+    // refused before any connector is built (mock would mkdir its root)
+    assert(!new java.io.File(milvus.hostPort).exists())
+    val lines = err.toString("UTF-8").linesIterator
+      .filter(_.contains("unknown --db 'grpc'")).toSeq
+    assert(lines.size == 2, err.toString("UTF-8"))
+    assert(lines.forall(l => l.contains("|milvus|") && l.contains("mock|")),
+      lines.mkString("\n"))
+  }
+
   test("toWireShape: id by name, vector discovery, payload stringification") {
     import spark.implicits._
     import graft.connectors.wire.WireCliConnector.toWireShape

@@ -419,63 +419,61 @@ class AdapterWireSpec extends SparkSpec {
   }
 
   // ---------------------------------------------------------------
-  // The gRPC-shaped FRAMED BINARY dialect (round 8): same WireDialect
-  // trait, same DSv2 stack, length-prefixed protobuf-style frames on a
-  // raw socket instead of JSON-over-HTTP — the transport the reference
-  // prefers for Pinecone/Qdrant (`pinecone_export.py:9`,
-  // `qdrant_export.py:34-39`).
+  // The gRPC dialect (milvus over HTTP/2): same WireDialect trait, same
+  // DSv2 stack, 5-byte-prefixed protobuf-style messages on HTTP/2
+  // streams instead of JSON-over-HTTP.
 
   test("grpc: the framed binary dialect drives the full DSv2 stack") {
-    val g = new GrpcStubServer
+    val g = new MilvusH2Stub
     try {
       val c = "grpc_rt"
-      GrpcWire(g.hostPort).create(c, 3)
+      MilvusWire(g.hostPort).create(c, 3)
       val df = points(800, c)
-      WireVdb.write(df, "grpc", g.hostPort, c, batchSize = 300)
-      val back = WireVdb.read(spark, "grpc", g.hostPort, c, batchSize = 250)
+      WireVdb.write(df, "milvus", g.hostPort, c, batchSize = 300)
+      val back = WireVdb.read(spark, "milvus", g.hostPort, c, batchSize = 250)
       assert(asPoints(back) == asPoints(df))
       val pages = g.requestLog.asScala.toSeq
-        .filter(_.startsWith(s"grpc page $c"))
+        .filter(_.startsWith(s"milvus query $c"))
       assert(pages.size == 4, pages.mkString("\n")) // 250×3 + 50
       assert(pages.forall(_.contains("want_vector=true")))
       // column pruning reaches the binary frames: an id-only scan
       // sends want_vector=false/want_payload=false
       g.requestLog.clear()
-      val idsOnly = WireVdb.read(spark, "grpc", g.hostPort, c, 800)
+      val idsOnly = WireVdb.read(spark, "milvus", g.hostPort, c, 800)
         .select("id").collect()
       assert(idsOnly.length == 800)
-      val slimPages = g.requestLog.asScala.toSeq.filter(_.contains("grpc page"))
+      val slimPages = g.requestLog.asScala.toSeq.filter(_.contains("milvus query"))
       assert(slimPages.nonEmpty && slimPages.forall(p =>
         p.contains("want_vector=false") && p.contains("want_payload=false")))
       // and the id-IN pushdown becomes a framed targeted retrieve
       g.requestLog.clear()
-      val got = WireVdb.read(spark, "grpc", g.hostPort, c, 800)
+      val got = WireVdb.read(spark, "milvus", g.hostPort, c, 800)
         .filter(col("id").isin(s"$c-1", s"$c-99", s"$c-absent"))
         .collect()
       assert(got.map(_.getString(0)).toSet == Set(s"$c-1", s"$c-99"))
       val lg = g.requestLog.asScala.toSeq
-      assert(lg.exists(_.startsWith(s"grpc retrieve $c n=3")), lg.mkString("\n"))
-      assert(!lg.exists(_.contains("grpc page")), "id pushdown must not page")
+      assert(lg.exists(_.startsWith(s"milvus retrieve $c n=3")), lg.mkString("\n"))
+      assert(!lg.exists(_.contains("milvus query")), "id pushdown must not page")
     } finally g.stop()
   }
 
   test("grpc: RESOURCE_EXHAUSTED shrinks writes, UNAVAILABLE shrinks the read fetch") {
-    val g = new GrpcStubServer
+    val g = new MilvusH2Stub
     try {
       val c = "grpc_faults"
       g.failNextWrites(2, 8) // gRPC 8 → the 429 class
-      WireVdb.write(points(600, c).coalesce(1), "grpc", g.hostPort, c,
+      WireVdb.write(points(600, c).coalesce(1), "milvus", g.hostPort, c,
         batchSize = 600)
       assert(g.collectionSize(c) == 600)
       val sizes = g.requestLog.asScala.toSeq
-        .filter(_.startsWith(s"grpc upsert $c")).map(_.split("n=")(1).toInt)
+        .filter(_.startsWith(s"milvus upsert $c")).map(_.split("n=")(1).toInt)
       assert(sizes.take(3) == List(600, 400, 266), sizes.mkString(","))
       g.requestLog.clear()
       g.failNextReads(1, 14) // gRPC 14 → the 503 class
-      assert(WireVdb.read(spark, "grpc", g.hostPort, c,
+      assert(WireVdb.read(spark, "milvus", g.hostPort, c,
         batchSize = 600).count() == 600)
       val limits = g.requestLog.asScala.toSeq
-        .filter(_.startsWith(s"grpc page $c"))
+        .filter(_.startsWith(s"milvus query $c"))
         .map(_.split("limit=")(1).split(" ")(0).toInt)
       assert(limits == List(600, 400, 200), limits.mkString(","))
     } finally g.stop()

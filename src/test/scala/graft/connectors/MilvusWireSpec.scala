@@ -9,21 +9,22 @@ import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
 
-/** Milvus over the framed binary transport: the reference's most-used
+/** Milvus over gRPC/HTTP/2: the reference's most-used
   * connector (`export_vdf/milvus_export.py:117-158` query_iterator
   * export, `import_vdf/milvus_import.py:111-210` VARCHAR-pk /
   * FLOAT_VECTOR create + shrink-batched upsert), exercised as real
-  * bytes against the Milvus stub. Asserts iterator-batch paging, the
+  * bytes against the Milvus stub behind the HTTP/2 server, dialed at a
+  * bare host:port. Asserts iterator-batch paging, the
   * ×2/3 shrink on injected faults, the describe surface
   * (dtype 101 = FLOAT_VECTOR), metric round-trip, and the CLI
   * migration path. */
 class MilvusWireSpec extends SparkSpec {
 
-  private var m: MilvusStubServer = _
+  private var m: MilvusH2Stub = _
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    m = new MilvusStubServer
+    m = new MilvusH2Stub
   }
 
   override def afterAll(): Unit = {
@@ -128,19 +129,23 @@ class MilvusWireSpec extends SparkSpec {
     assert(!lg.exists(_.contains("milvus query")), "id pushdown must not page")
   }
 
-  test("milvus: ZILLIZ_CLOUD_TOKEN-style auth rides field 14 of every frame") {
+  test("milvus: ZILLIZ_CLOUD_TOKEN-style auth rides the authorization header of every call") {
     val c = "mlv_auth"
     val wire = MilvusWire(m.hostPort, token = Some("zilliz-tok"))
     wire.create(c, 3, Metric.Cosine)
     WireVdb.write(points(50, c).coalesce(1), "milvus", m.hostPort, c,
       batchSize = 50, apiKey = Some("zilliz-tok"))
-    m.authLog.clear()
+    m.authLog.clear(); m.h2.requestLog.clear()
     assert(WireVdb.read(spark, "milvus", m.hostPort, c, 50,
       apiKey = Some("zilliz-tok")).count() == 50)
     assert(wire.count(c) == 50)
     val entries = m.authLog.asScala.toSeq.filter(_.contains(s" $c "))
     assert(entries.nonEmpty &&
       entries.forall(_.endsWith("token=zilliz-tok")), entries.mkString("\n"))
+    // on the wire it is a real HTTP/2 `authorization` header
+    val streams = m.h2.requestLog.asScala.toSeq
+    assert(streams.nonEmpty && streams.forall(
+      _.endsWith("authorization=Bearer zilliz-tok")), streams.mkString("\n"))
     // env sourcing: the key comes from the reference's env var name
     assert(WireAuth.EnvVar("milvus") == "ZILLIZ_CLOUD_TOKEN")
     assert(WireAuth.fromEnv("milvus",
@@ -153,19 +158,17 @@ class MilvusWireSpec extends SparkSpec {
     w.create(c, 3, graft.core.Metric.Cosine)
     w.upsertOnce(c, (0 until 400).map(i =>
       WirePoint(s"$c-$i", Seq(i.toDouble, 0, 0), Map("r" -> i.toString))))
-    val connBefore = m.connections.get()
+    val connBefore = m.h2.connections.get()
     val reqBefore = m.requestLog.size()
     // 40 pages through the DSv2 scan (4 partitions x 10 pages each)
     val back = WireVdb.read(spark, "milvus", m.hostPort, c, batchSize = 10)
     assert(back.count() == 400)
     val pages = m.requestLog.size() - reqBefore
-    val conns = m.connections.get() - connBefore
+    val conns = m.h2.connections.get() - connBefore
     assert(pages >= 40, s"expected >=40 page requests, saw $pages")
-    // the channel pool bounds connections by CONCURRENCY (task
-    // threads), not by page count: the reference's one-channel-per-
-    // process shape, where the old client dialed once per page
-    assert(conns <= pages / 2,
-      s"$conns new connections for $pages requests — no reuse")
+    // every page is a stream on the endpoint's one HTTP/2 connection:
+    // the reference's one-channel-per-process shape
+    assert(conns <= 1, s"$conns new connections for $pages requests — no reuse")
   }
 
   test("CLI migration: qdrant --wire--> VDF --wire--> milvus, metric carried") {

@@ -38,8 +38,7 @@ class WireAdviceR10Spec extends SparkSpec {
     val renderings = Seq[Any](
       QdrantWire("http://h:1", key), PineconeWire("http://h:1", key),
       ChromaWire("http://h:1", key), LanceDbWire("http://h:1", key),
-      KdbaiWire("http://h:1", key), GrpcWire("h:1", key),
-      MilvusWire("h:1", key), AstraWire("http://h:1", "ks", key),
+      KdbaiWire("http://h:1", key), MilvusWire("h:1", key), AstraWire("http://h:1", "ks", key),
       TurbopufferWire("http://h:1", key), WeaviateWire("http://h:1", key),
       VertexWire("http://h:1", "ep", key)).map(_.toString)
     renderings.foreach { s =>
@@ -101,7 +100,7 @@ class WireAdviceR10Spec extends SparkSpec {
   }
 
   test("milvus: describe of a missing collection fails fast with 404") {
-    val ms = new MilvusStubServer
+    val ms = new MilvusH2Stub
     try {
       val w = MilvusWire(ms.hostPort)
       val e = intercept[WireHttpError] { w.describe("nope") }

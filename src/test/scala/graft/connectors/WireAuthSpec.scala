@@ -48,8 +48,7 @@ class WireAuthSpec extends SparkSpec {
       "weaviate" -> "WEAVIATE_API_KEY",
       "milvus" -> "ZILLIZ_CLOUD_TOKEN",
       "lancedb" -> "LANCEDB_API_KEY",
-      "kdbai" -> "KDBAI_API_KEY",
-      "grpc" -> "GRAFT_GRPC_TOKEN"))
+      "kdbai" -> "KDBAI_API_KEY"))
     assert(WireAuth.fromEnv("qdrant", Map("QDRANT_API_KEY" -> "k")) ==
       Some("k"))
     assert(WireAuth.fromEnv("qdrant", Map.empty).isEmpty)
@@ -129,21 +128,21 @@ class WireAuthSpec extends SparkSpec {
       wEntries.forall(_.endsWith("=Bearer wvtok")), wEntries.mkString("\n"))
   }
 
-  test("grpc: the token rides field 14 of every frame; CLI --api_key threads it") {
-    val g = new GrpcStubServer
+  test("milvus: the token rides the authorization header of every call; CLI --api_key threads it") {
+    val g = new MilvusH2Stub
     try {
       val c = "auth_g"
-      GrpcWire(g.hostPort, Some("gtok")).create(c, 3)
-      WireVdb.write(points(80, c).coalesce(1), "grpc", g.hostPort, c,
+      MilvusWire(g.hostPort, Some("gtok")).create(c, 3)
+      WireVdb.write(points(80, c).coalesce(1), "milvus", g.hostPort, c,
         batchSize = 40, apiKey = Some("gtok"))
-      assert(WireVdb.read(spark, "grpc", g.hostPort, c, 40,
+      assert(WireVdb.read(spark, "milvus", g.hostPort, c, 40,
         apiKey = Some("gtok")).count() == 80)
       val entries = g.authLog.asScala.toSeq.filter(_.contains(s" $c "))
       assert(entries.nonEmpty &&
         entries.forall(_.endsWith("token=gtok")), entries.mkString("\n"))
 
       // CLI end-to-end: export from qdrant with --api_key, import into
-      // grpc with --api_key — the keys ride the respective wires
+      // milvus with --api_key — the keys ride the respective wires
       val cq = "auth_cli"
       WireDialect("qdrant", server.url, Some("clik")).create(cq, 3)
       WireVdb.write(points(90, cq), "qdrant", server.url, cq,
@@ -158,7 +157,7 @@ class WireAuthSpec extends SparkSpec {
       assert(scrolls.nonEmpty && scrolls.forall(_.endsWith("=clik")),
         scrolls.mkString("\n"))
       g.authLog.clear()
-      assert(Cli.run(spark, Seq("import", "--db", "grpc",
+      assert(Cli.run(spark, Seq("import", "--db", "milvus",
         "--db_root", g.hostPort, "--dir", vdf,
         "--api_key", "gtok2")) == 0)
       val upserts = g.authLog.asScala.toSeq.filter(_.contains(s" $cq "))

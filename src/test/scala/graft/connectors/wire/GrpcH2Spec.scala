@@ -5,22 +5,20 @@ import graft.core.Metric
 
 import scala.jdk.CollectionConverters._
 
-/** Round-11 ask #5: real gRPC-over-HTTP/2 for the Milvus dialect.
-  * grpc-java is not in the offline cache, but Netty's HTTP/2 codec is
-  * on the Spark classpath — so [[GrpcH2Client]]/[[GrpcH2StubServer]]
-  * speak the actual gRPC wire protocol (HTTP/2 streams, `:path`
-  * routing, `application/grpc` 5-byte DATA framing, `authorization`
-  * header, `grpc-status` trailers) and the Milvus dialect runs on it
-  * end to end via `h2://host:port`, with the TLV TCP transport as the
-  * documented fallback. */
+/** Real gRPC-over-HTTP/2, the one gRPC transport. grpc-java is not in
+  * the offline build, but Netty's HTTP/2 codec is on the Spark
+  * classpath — so [[GrpcH2Client]]/[[GrpcH2StubServer]] speak the
+  * actual gRPC wire protocol (HTTP/2 streams, `:path` routing,
+  * `application/grpc` 5-byte DATA framing, `authorization` header,
+  * `grpc-status` trailers) and the Milvus dialect runs on it end to
+  * end at `host:port`, `h2://host:port` or `h2s://host:port`. */
 class GrpcH2Spec extends SparkSpec {
 
   private def withServers[T](body: (MilvusStubServer, GrpcH2StubServer,
       String) => T): T = {
-    val m = new MilvusStubServer()
-    val h2 = new GrpcH2StubServer(m.dispatchH2)
-    try body(m, h2, s"h2://${h2.hostPort}")
-    finally { h2.stop(); m.stop() }
+    val stub = new MilvusH2Stub
+    try body(stub.milvus, stub.h2, s"h2://${stub.hostPort}")
+    finally stub.stop()
   }
 
   test("Milvus dialect over real HTTP/2: create/upsert/describe/count/page round trip") {
@@ -115,24 +113,6 @@ class GrpcH2Spec extends SparkSpec {
       System.clearProperty("graft.wire.truststore")
       System.clearProperty("graft.wire.truststorePass")
     }
-  }
-
-  test("the generic GrpcWire dialect rides HTTP/2 too (the pinecone/qdrant-preferred shape)") {
-    val g = new GrpcStubServer()
-    val h2 = new GrpcH2StubServer(g.dispatchH2)
-    try {
-      val c = "g_h2"
-      val w = GrpcWire(s"h2://${h2.hostPort}", Some("tok"))
-      w.create(c, 3, Metric.Cosine)
-      w.upsertOnce(c, (0 until 50).map(i =>
-        WirePoint(s"$c-$i", Seq(i.toDouble, 0, 0), Map("r" -> i.toString))))
-      assert(w.count(c) == 50)
-      val got = w.fetchByIds(c, Seq(s"$c-7"), wantVector = true,
-        wantPayload = true)
-      assert(got.size == 1 && got.head.id == s"$c-7")
-      assert(h2.requestLog.toArray.map(_.toString).exists(_.startsWith(
-        "/graft.v1.VectorService/Get")))
-    } finally { h2.stop(); g.stop() }
   }
 
   test("flow control: multi-megabyte messages cross the 64 KB HTTP/2 windows both ways") {
@@ -288,21 +268,62 @@ class GrpcH2Spec extends SparkSpec {
     }
   }
 
-  test("TLV fallback unchanged: the same dialect code drives both transports") {
-    // identical calls, one stub — plain TCP endpoint vs h2:// endpoint
-    withServers { (m, h2, ep) =>
-      val c = "mlv_both"
-      MilvusWire(ep).create(c, 3, Metric.Cosine)
-      MilvusWire(ep).upsertOnce(c, (0 until 25).map(i =>
-        WirePoint(s"$c-$i", Seq(i.toDouble, 0, 0), Map.empty)))
-      // the TCP acceptor serves the SAME store through field-15 framing
-      assert(MilvusWire(m.hostPort).count(c) == 25)
-      val viaTcp = MilvusWire(m.hostPort)
-        .fetchPage(c, 0, 25, wantVector = true, wantPayload = false)
-      val viaH2 = MilvusWire(ep)
-        .fetchPage(c, 0, 25, wantVector = true, wantPayload = false)
-      assert(viaTcp.points.map(_.id) == viaH2.points.map(_.id))
-      assert(viaTcp.points.map(_.vector) == viaH2.points.map(_.vector))
+  test("a bare host:port milvus endpoint is cleartext h2: create, upsert, count, page") {
+    withServers { (m, h2, _) =>
+      val c = "mlv_bare"
+      val w = MilvusWire(h2.hostPort)
+      w.create(c, 3, Metric.Cosine)
+      w.upsertOnce(c, (0 until 25).map(i =>
+        WirePoint(s"$c-$i", Seq(i.toDouble, 0, 0), Map("r" -> i.toString))))
+      assert(w.count(c) == 25)
+      val page = w.fetchPage(c, 5, 10, wantVector = true, wantPayload = true)
+      assert(page.points.map(_.id) == (5 until 15).map(i => s"$c-$i"))
+      assert(page.points.head.vector == Seq(5.0, 0, 0))
+      assert(page.points.head.payload == Map("r" -> "5"))
+      // every call was an HTTP/2 stream on the one stub connection
+      assert(h2.requestLog.size() == 4, h2.requestLog.asScala.mkString("\n"))
+      assert(h2.connections.get() == 1)
+      assert(m.collectionSize(c) == 25)
+    }
+  }
+
+  test("the endpoint rule: tls:// and grpc:// are refused, naming the accepted forms") {
+    assert(GrpcH2Client.endpoint("127.0.0.1:19530") == "127.0.0.1:19530")
+    assert(GrpcH2Client.endpoint("h2://127.0.0.1:19530") == "127.0.0.1:19530")
+    assert(GrpcH2Client.endpoint("h2s://db.example:443") == "tls:db.example:443")
+    for (url <- Seq("tls://127.0.0.1:19530", "grpc://127.0.0.1:19530")) {
+      val e = intercept[IllegalArgumentException](MilvusWire(url))
+      assert(e.getMessage.contains(url) && e.getMessage.contains("h2s://") &&
+        e.getMessage.contains("h2://"), e.getMessage)
+      intercept[IllegalArgumentException](WireDialect("milvus", url, None))
+    }
+  }
+
+  test("WireDialect refuses the retired generic grpc dialect, listing milvus") {
+    val e = intercept[IllegalArgumentException] {
+      WireDialect("grpc", "127.0.0.1:1", None)
+    }
+    assert(e.getMessage.contains("'grpc'") && e.getMessage.contains("|milvus)"),
+      e.getMessage)
+    assert(!WireAuth.EnvVar.contains("grpc"))
+  }
+
+  test("a closed h2 connection is redialed once on the next call, which succeeds") {
+    withServers { (_, h2, ep) =>
+      val c = "mlv_redial"
+      val w = MilvusWire(ep)
+      w.create(c, 3, Metric.Cosine)
+      assert(w.count(c) == 0)
+      val key = s"${h2.hostPort}|"
+      val ch = GrpcH2Client.conns.get(key)
+      assert(ch != null && ch.isActive, GrpcH2Client.conns.keySet())
+      ch.close().await(5000)
+      val d0 = GrpcH2Client.dials.get()
+      w.upsertOnce(c, Seq(WirePoint(s"$c-0", Seq(1.0, 0, 0), Map.empty)))
+      assert(GrpcH2Client.dials.get() == d0 + 1)
+      assert(w.count(c) == 1)
+      assert(GrpcH2Client.dials.get() == d0 + 1) // and reused after
+      assert(h2.connections.get() == 2)
     }
   }
 
