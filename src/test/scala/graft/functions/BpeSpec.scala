@@ -370,6 +370,79 @@ class BpeSpec extends SparkSpec {
       "fixture must exercise the UNK path")
   }
 
+  // The encode contract on hostile docs, pinned with the values the
+  // vocab-join forms produced: a SEP word in the middle of a doc keeps
+  // its word_pos slot, a token outside a pinned vocab is UNK (-1), and
+  // whitespace-only, empty and null docs have no token rows and count
+  // toward no source. doc_id % 199 == 7 except doc 8, so the
+  // q_bpe_token_ids subset is every doc but that one.
+  private def pinDocs = {
+    import spark.implicits._
+    Seq(("s0", 7L, "abc a" + Bpe.Sep + "b xyz"), ("s0", 8L, "abab xy"),
+      ("s0", 206L, " \t\n "), ("s1", 405L, ""),
+      ("s1", 604L, null.asInstanceOf[String]), ("s1", 803L, "zab\tc abc"),
+      ("s2", 1002L, "   "))
+      .toDF("source", "doc_id", "text")
+  }
+  private val pinMerges = Seq(Bpe.Merge(1, "a", "b", 0L),
+    Bpe.Merge(2, "ab", "c", 0L), Bpe.Merge(3, "x", "y", 0L))
+  private val pinVocab = Seq("a" -> 0L, "b" -> 1L, "c" -> 2L, "ab" -> 3L,
+    "abc" -> 4L, "xy" -> 5L)
+
+  /** (doc_id, word_pos, tok_pos, token_id) in order. */
+  private def pinLongRows(pinned: Boolean): Seq[(Long, Int, Int, Long)] = {
+    import spark.implicits._
+    val docs = pinDocs
+    Bpe.docTokenIdsLong(docs, "text", Seq("doc_id"), pinMerges,
+        Bpe.wordFreq(docs, "text"),
+        pinnedIds = if (pinned) Some(pinVocab.toDF("token", "token_id")) else None)
+      .orderBy("doc_id", "word_pos", "tok_pos")
+      .as[(Long, Int, Int, Long)].collect().toSeq
+  }
+
+  /** q_bpe_encode's per-source (source, n_docs, n_words, n_tokens). */
+  private def pinEncodeRows(): Seq[(String, Long, Long, Long)] = {
+    import spark.implicits._
+    val docs = pinDocs
+    Bpe.docTokenCounts(docs, "text", Seq("doc_id", "source"), pinMerges,
+        Bpe.wordFreq(docs, "text"))
+      .groupBy("source")
+      .agg(countDistinct("doc_id"), sum("n_words"), sum("n_tokens"))
+      .orderBy("source")
+      .as[(String, Long, Long, Long)].collect().toSeq
+  }
+
+  test("encode pins: word positions, UNK, token-less docs, per-source counts") {
+    // base alphabet a b c x y z -> 0..5, then ab 6, abc 7, xy 8
+    assert(pinLongRows(pinned = false) == Seq(
+      (7L, 0, 0, 7L), (7L, 2, 0, 8L), (7L, 2, 1, 5L),
+      (8L, 0, 0, 6L), (8L, 0, 1, 6L), (8L, 1, 0, 8L),
+      (803L, 0, 0, 5L), (803L, 0, 1, 6L), (803L, 1, 0, 2L), (803L, 2, 0, 7L)))
+    // the pinned vocab has no x, y or z: z is UNK
+    assert(pinLongRows(pinned = true) == Seq(
+      (7L, 0, 0, 4L), (7L, 2, 0, 5L), (7L, 2, 1, -1L),
+      (8L, 0, 0, 3L), (8L, 0, 1, 3L), (8L, 1, 0, 5L),
+      (803L, 0, 0, -1L), (803L, 0, 1, 3L), (803L, 1, 0, 2L), (803L, 2, 0, 4L)))
+    assert(pinEncodeRows() == Seq(("s0", 2L, 4L, 6L), ("s1", 1L, 3L, 4L)))
+  }
+
+  test("encode pins: the q_bpe_* queries on the hostile docs") {
+    val dir = java.nio.file.Files.createTempDirectory("bpepin").toString
+    pinDocs.write.parquet(s"$dir/documents.parquet")
+    def rows(q: String): Seq[Seq[Any]] =
+      graft.SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSeq
+    // (source, n_docs, n_words, n_tokens): s2 holds only a token-less doc
+    assert(rows("q_bpe_encode") == Seq(Seq("s0", 2L, 4L, 4L),
+      Seq("s1", 1L, 3L, 3L)))
+    // (doc_id, word_pos, tok_pos, token_id) of the doc_id % 199 == 7 subset
+    assert(rows("q_bpe_token_ids") == Seq(Seq(7L, 0, 0, 7L),
+      Seq(7L, 2, 0, 10L), Seq(803L, 0, 0, 11L), Seq(803L, 1, 0, 2L),
+      Seq(803L, 2, 0, 7L)))
+    // (source, n_tokens, id_sum, pos_sum)
+    assert(rows("q_bpe_ids_checksum") == Seq(Seq("s0", 4L, 34L, 62L),
+      Seq("s1", 3L, 20L, 36L)))
+  }
+
   test("packTokenIds: EOS-terminated concatenation cut into fixed shards per source") {
     import spark.implicits._
     val perDoc = Seq(
