@@ -26,8 +26,8 @@ import graft.similarity.Kmeans
   *                        (the doubled-sep `replace` encoding makes
   *                        each merge one string call on both engines).
   *  - q_bpe_encode:       per-source corpus token counts under an
-  *                        8-merge learned tokenizer — vocab tokenized
-  *                        once, corpus joined against it.
+  *                        8-merge learned tokenizer, from the map-only
+  *                        count kernel.
   *
   * The BPE oracle chain mirrors `Bpe.learnDistributed` stage for
   * stage: wf = wordFreq (same empty/SEP filters), w0 = the wrapped
@@ -49,9 +49,9 @@ object QueriesExt14 {
     * invocation (`persist`) — the Spark twin of the oracle chains'
     * `wf AS MATERIALIZED`. Every BPE gate consults this table from
     * several driver actions (the learn loop's route stats + vocab
-    * fetch) and plan subtrees (tokenized-vocab and id-table broadcast
-    * builds), each of which would otherwise re-run the corpus-scale
-    * explode+aggregate from parquet — measured 4-5 recomputes per
+    * fetch) and plan subtrees (the id-table build), each of which
+    * would otherwise re-run the corpus-scale explode+aggregate from
+    * parquet — measured 4-5 recomputes per
     * query at r15 (the DuckDB twin pays the pass ONCE by contract).
     * Scale story: this is the vocab-scale table (10⁵× smaller than
     * the corpus), exactly what a production trainer pins in memory.
@@ -100,31 +100,23 @@ object QueriesExt14 {
       .orderBy("rank")
   }
 
-  /** Corpus token accounting under a LEARNED 8-merge tokenizer: the
-    * vocab is tokenized once (8 nested codegen'd replaces over the
-    * word table), the corpus probes it as a broadcast join — per
-    * source: documents, whitespace words, BPE tokens. */
+  /** Corpus token accounting under a LEARNED 8-merge tokenizer — per
+    * source: documents, whitespace words, BPE tokens, from the map-only
+    * count kernel (`Bpe.docCounts`). Documents without a word count
+    * toward no source, as in the oracle's word explode. */
   private def qBpeEncode(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.graftbridge.Bridge
     val docs = t(s, dir, "documents")
-    val words = materializedWords(docs)
-    val learned = Bpe.learnWithStats(words, numMerges = 8)
-    val merges = learned.merges
-    // size-routed like docTokenIdsLong (r15): the broadcast hint is
-    // only forced while the vocab is provably broadcast-sized — the
-    // row count the learn loop already computed — so a production
-    // corpus's multi-GB word table degrades to a plain shuffle join
-    // instead of a forced multi-GB broadcast (routing single-sourced
-    // in Bpe.routeVocab, which also guards the -1 sentinel)
-    val vocab = graft.functions.Bpe.routeVocab(
-      Bpe.tokenizeVocab(words, merges), Some(learned.nWords), words)
-    docs.select(col("doc_id"), col("source"),
-        explode(TF.tokens(col("text"))).as("word"))
-      .filter(!col("word").contains(Bpe.Sep))
-      .join(vocab, Seq("word"))
+    val merges = Bpe.learn(materializedWords(docs), numMerges = 8)
+    Bpe.docCounts(docs, "text", Seq("doc_id", "source"), merges)
+      .filter(col("n_words") > 0)
       .groupBy("source")
       .agg(countDistinct("doc_id").as("n_docs"),
-        count(lit(1)).as("n_words"),
-        sum("n_tok").as("n_tokens"))
+        // a group holds at least one document with a word, so the sum
+        // is never null; the tag keeps the schema `count` gave n_words
+        Bridge.column(org.apache.spark.sql.catalyst.expressions.KnownNotNull(
+          Bridge.expression(sum("n_words")))).as("n_words"),
+        sum("n_tokens").as("n_tokens"))
       .orderBy("source")
   }
 
@@ -168,6 +160,21 @@ object QueriesExt14 {
       .orderBy(desc("sym_freq"), asc("symbol"))
   }
 
+  /** The learned 8-merge tokenizer + its collected id table, shared by
+    * the id gates here and in QueriesExt16: alphabet + merges rows —
+    * driver-sized by construction. The word table is materialized once
+    * per invocation: the learn loop's two driver actions and the
+    * id-table collect all consult it. */
+  private[graft] def learnedIds(s: SparkSession, dir: String)
+      : (DataFrame, Seq[Bpe.Merge], Seq[(String, Long)]) = {
+    val docs = t(s, dir, "documents")
+    val words = materializedWords(docs)
+    val merges = Bpe.learn(words, numMerges = 8)
+    val idRows = Bpe.vocabIds(words, merges)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    (docs, merges, idRows)
+  }
+
   /** Per-document token-ID sequences (r14): the actual trainer input —
     * every token of every word of a deterministic 1-in-199 document
     * subset, in document order, with its engine-neutral vocabulary id
@@ -175,12 +182,15 @@ object QueriesExt14 {
     * merge rank). Long format (doc_id, word_pos, tok_pos, token_id) so
     * the oracle compares exact sequences, not a hash of arrays. */
   private def qBpeTokenIds(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val words = materializedWords(docs)
-    val learned = Bpe.learnWithStats(words, numMerges = 8)
-    Bpe.docTokenIdsLong(docs.filter(col("doc_id") % 199 === 7),
-        "text", Seq("doc_id"), learned.merges, words,
-        vocabRows = Some(learned.nWords))
+    import org.apache.spark.sql.graftbridge.Bridge
+    val (docs, merges, idRows) = learnedIds(s, dir)
+    Bpe.docTokenIdRows(docs.filter(col("doc_id") % 199 === 7),
+        "text", Seq("doc_id"), merges, idRows)
+      // the kernel's ids are never null; the tag keeps the schema the
+      // id table's `min` aggregate gave token_id
+      .withColumn("token_id", Bridge.column(
+        org.apache.spark.sql.catalyst.expressions.KnownNullable(
+          Bridge.expression(col("token_id")))))
       .orderBy("doc_id", "word_pos", "tok_pos")
   }
 
@@ -189,11 +199,8 @@ object QueriesExt14 {
     * through the same id pipeline — per source, token count, Σ id and
     * the order-sensitive Σ id·(word_pos+1). */
   private def qBpeIdsChecksum(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val words = materializedWords(docs)
-    val learned = Bpe.learnWithStats(words, numMerges = 8)
-    Bpe.docTokenIdsLong(docs, "text", Seq("doc_id", "source"),
-        learned.merges, words, vocabRows = Some(learned.nWords))
+    val (docs, merges, idRows) = learnedIds(s, dir)
+    Bpe.docTokenIdRows(docs, "text", Seq("doc_id", "source"), merges, idRows)
       .groupBy("source")
       .agg(count(lit(1)).as("n_tokens"),
         sum(col("token_id")).as("id_sum"),

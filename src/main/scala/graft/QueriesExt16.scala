@@ -10,13 +10,11 @@ import graft.functions.Bpe
   *
   *  - q_bpe_ids_kernel: the MAP-ONLY id-emission kernel
   *    (`Bpe.docTokenIdsFast` / the `BpeDocTokenIds` codegen
-  *    expression) over the whole corpus — the production route that
-  *    replaces the r14 join form's forced vocab broadcast. The gate is
-  *    the order-sensitive checksum idiom over the FLAT token position
-  *    (q_bpe_ids_checksum covers word_pos for the join form; this
-  *    covers the kernel's own concatenation order), so a kernel that
-  *    dropped, reordered, or mis-id'd a single token anywhere in the
-  *    corpus hash-mismatches.
+  *    expression) over the whole corpus, flattened. The gate is the
+  *    order-sensitive checksum idiom over the FLAT token position
+  *    (q_bpe_ids_checksum covers word_pos; this covers the flattened
+  *    concatenation order), so a kernel that dropped, reordered, or
+  *    mis-id'd a single token anywhere in the corpus hash-mismatches.
   *  - q_pack_ids: PACKED training shards (`Bpe.packTokenIds`) — per
   *    source, documents in doc_id order, id sequences EOS-terminated
   *    (id −2, distinct from the −1 UNK sentinel) and concatenated,
@@ -44,26 +42,10 @@ object QueriesExt16 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     QueriesCommon.table(s, dir, name)
 
-  /** The learned tokenizer + collected id table shared by both gates:
-    * alphabet + merges rows — driver-sized by construction. */
-  private def learnedIds(s: SparkSession, dir: String)
-      : (DataFrame, Seq[Bpe.Merge], Seq[(String, Long)]) = {
-    val docs = t(s, dir, "documents")
-    // word table materialized once per invocation (the oracle's
-    // `wf AS MATERIALIZED` twin — see QueriesExt14.materializedWords):
-    // the learn loop's two driver actions and the id-table collect all
-    // consult it, and would otherwise re-run the corpus pass each
-    val words = QueriesExt14.materializedWords(docs)
-    val merges = Bpe.learn(words, numMerges = 8)
-    val idRows = Bpe.vocabIds(words, merges)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    (docs, merges, idRows)
-  }
-
   /** Full-corpus checksum of the map-only id kernel: per source, token
     * count, Σ id, and the order-sensitive Σ id·(flat_pos+1). */
   private def qBpeIdsKernel(s: SparkSession, dir: String): DataFrame = {
-    val (docs, merges, idRows) = learnedIds(s, dir)
+    val (docs, merges, idRows) = QueriesExt14.learnedIds(s, dir)
     Bpe.docTokenIdsFast(docs, "text", Seq("doc_id", "source"), merges, idRows)
       .select(col("source"), posexplode(col("token_ids")).as(Seq("p", "id")))
       .groupBy("source")
@@ -75,12 +57,12 @@ object QueriesExt16 {
 
   /** Packed 512-id shards with exact per-shard fingerprints. The
     * kernel emits empty sequences for token-less documents; the
-    * oracle's join form has no rows for them, so they are filtered
+    * oracle's word explode has no rows for them, so they are filtered
     * out here to keep the two document sets (and hence EOS markers)
     * identical — a token-less doc contributes nothing a trainer would
     * pack anyway. */
   private def qPackIds(s: SparkSession, dir: String): DataFrame = {
-    val (docs, merges, idRows) = learnedIds(s, dir)
+    val (docs, merges, idRows) = QueriesExt14.learnedIds(s, dir)
     val perDoc = Bpe
       .docTokenIdsFast(docs, "text", Seq("source", "doc_id"), merges, idRows)
       .filter(col("n_tokens") > 0)
@@ -98,7 +80,7 @@ object QueriesExt16 {
     * the PERMUTED layout must all match the oracle's reconstruction
     * of the identical permutation. */
   private def qPackShuffle(s: SparkSession, dir: String): DataFrame = {
-    val (docs, merges, idRows) = learnedIds(s, dir)
+    val (docs, merges, idRows) = QueriesExt14.learnedIds(s, dir)
     val perDoc = Bpe
       .docTokenIdsFast(docs, "text", Seq("source", "doc_id"), merges, idRows)
       .filter(col("n_tokens") > 0)
@@ -123,7 +105,7 @@ object QueriesExt16 {
     * packing is the per-source window cumsum + one (source, shard)
     * exchange — ONE corpus-scale exchange in the whole recipe. */
   private def qPackRecipe(s: SparkSession, dir: String): DataFrame = {
-    val (docs, merges, idRows) = learnedIds(s, dir)
+    val (docs, merges, idRows) = QueriesExt14.learnedIds(s, dir)
     val kept = graft.ops.Mixture.temperature(docs, "lang", "doc_id",
       alpha = 0.5)
     val perDoc = Bpe

@@ -599,8 +599,15 @@ object Cli {
         require(a.flags.get("collections").exists(_.nonEmpty),
           s"--db $db needs --collections a,b (wire dialects don't enumerate)")
         wireConnector(db, a)
-      } else exporters.getOrElse(db, return unknownDb("export", db))(
-        a.flags("db_root"))
+      } else {
+        val make = exporters.getOrElse(db, return unknownDb("export", db))
+        val root = a.flags("db_root")
+        if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root))) {
+          System.err.println(s"export: --db_root '$root' is not a directory")
+          return 2
+        }
+        make(root)
+      }
     val out = a.flags("out")
     val frames = exp.indexNames.map(ix => (ix, "") -> exp.scan(spark, ix)).toMap
     // record each index's distance metric so import doesn't silently
@@ -1534,9 +1541,9 @@ object Cli {
       return 0
     }
     val docs = spark.read.parquet(a.flags("in"))
-    // every sink below re-reads the word table (learn, both vocab
-    // tokenizations, the id table, --stats) — persist the ONE
-    // corpus-scale pass instead of paying it per sink
+    // every sink below re-reads the word table (learn, the id table,
+    // --stats) — persist the ONE corpus-scale pass instead of paying it
+    // per sink
     val words = graft.functions.Bpe.wordFreq(docs, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val merges: Seq[graft.functions.Bpe.Merge] =
@@ -1553,8 +1560,7 @@ object Cli {
           .mkString("", "\n", "\n"))
     }
     a.flags.get("out").foreach { out =>
-      graft.functions.Bpe
-        .docTokenCounts(docs, textCol, Seq(idCol), merges, words)
+      graft.functions.Bpe.docCounts(docs, textCol, Seq(idCol), merges)
         .write.mode("overwrite").parquet(out)
     }
     // a pinned --vocab_file makes emitted ids portable across corpora

@@ -8,18 +8,18 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{BpeIdTable, BpeMergeTable}
 
-/** `bigint` learned-BPE token count of a text column — the
-  * production-table form of [[graft.functions.Bpe.docTokenCountCol]]
-  * (exactness spec-pinned in BpeSpec): one codegen'd byte-scan +
-  * merge-loop kernel call per row instead of a numMerges-deep
-  * interpreted replace/aggregate tower. The merge table rides the plan
-  * as a reference object (`ctx.addReferenceObj` — Spark's own pattern
-  * for non-literal expression state, e.g. compiled regex patterns), so
-  * the generated Java calls straight into [[BpeMergeTable]]'s kernel;
-  * its word→count cache warms per executor and amortizes vocabulary
-  * probes across every partition the executor runs. Constant sizing:
-  * a 50k-merge table is ~2 MB of task binary — see the BpeMergeTable
-  * scaladoc for the bound and the broadcast escape hatch. */
+/** `bigint` learned-BPE token count of a text column
+  * ([[graft.functions.Bpe.docTokenCountFastCol]]): one codegen'd
+  * byte-scan + merge-loop kernel call per row. The merge table rides
+  * the plan as a reference object (`ctx.addReferenceObj` — Spark's own
+  * pattern for non-literal expression state, e.g. compiled regex
+  * patterns), so the generated Java calls straight into
+  * [[BpeMergeTable]]'s kernel; its word→count cache warms per executor
+  * and amortizes vocabulary probes across every partition the executor
+  * runs. Constant sizing: a 50k-merge table is ~2 MB of task binary —
+  * see the BpeMergeTable scaladoc for the bound. Exactness is gated by
+  * the DuckDB oracle of q_bpe_encode and by BpeSpec's reference column
+  * form (a sum of per-word replace towers). */
 case class BpeDocTokenCount(child: Expression, table: BpeMergeTable)
     extends UnaryExpression with Serializable {
   override def prettyName: String = "graft_bpe_doc_token_count"
@@ -52,21 +52,24 @@ case class BpeDocTokenCount(child: Expression, table: BpeMergeTable)
     copy(child = newChild)
 }
 
-/** `array<bigint>` learned-BPE token-ID sequence of a text column, in
-  * document order — the MAP-ONLY production form of id emission (the
-  * id-emitting sibling of [[BpeDocTokenCount]]; exactness vs the
-  * oracle-expressible join form is spec-pinned in BpeSpec and
-  * DuckDB-gated via q_bpe_ids_kernel). The ride-along state is the
-  * merge table + the id VOCABULARY (alphabet + one token per merge —
-  * constant-sized, ~2 MB at 50k merges), NOT the corpus-scale
-  * tokenized word table the join form would broadcast: the corpus
-  * never joins anything, so a 10⁷-distinct-word vocabulary costs the
-  * plan nothing (the r14 verdict's top ask). Unknown tokens under a
-  * pinned vocabulary emit −1 (UNK), never a dropped position. */
+/** `array<array<bigint>>` learned-BPE token ids of a text column
+  * ([[graft.functions.Bpe.docTokenIdsCol]]): one inner array per word
+  * of `TextFunctions.tokens`, in document order, empty for a word
+  * holding SEP — the outer index is the word position. The id-emitting
+  * sibling of [[BpeDocTokenCount]] over the same document scan. The
+  * ride-along state is the merge table + the id VOCABULARY (alphabet +
+  * one token per merge — constant-sized, ~2 MB at 50k merges), so the
+  * corpus never joins anything and a 10⁷-distinct-word vocabulary
+  * costs the plan nothing. Unknown tokens under a pinned vocabulary
+  * emit −1 (UNK), never a dropped position. Exactness is gated by the
+  * DuckDB oracles of q_bpe_token_ids (exact rows on a subset),
+  * q_bpe_ids_checksum and q_bpe_ids_kernel, and by BpeSpec's
+  * reference column forms. */
 case class BpeDocTokenIds(child: Expression, idTable: BpeIdTable)
     extends UnaryExpression with Serializable {
   override def prettyName: String = "graft_bpe_doc_token_ids"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def dataType: DataType =
+    ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
   override def nullable: Boolean = child.nullable
 
   // shape-only rendering (see BpeDocTokenCount)
@@ -83,12 +86,12 @@ case class BpeDocTokenIds(child: Expression, idTable: BpeIdTable)
       s"$prettyName requires a string input, got ${child.dataType.simpleString}")
 
   override def nullSafeEval(input: Any): Any =
-    idTable.docTokenIds(input.asInstanceOf[UTF8String])
+    idTable.docWordIds(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("bpeIdTable", idTable,
       classOf[BpeIdTable].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.docTokenIds($c)")
+    defineCodeGen(ctx, ev, c => s"$ref.docWordIds($c)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): BpeDocTokenIds =

@@ -33,18 +33,21 @@ import org.apache.spark.storage.StorageLevel
   *      vocab size but serial-round-bound in numMerges, so it is the
   *      escape hatch for vocabularies that genuinely exceed driver RAM,
   *      not the production path.
-  *   3. encode: tokenize the VOCAB once with the in-memory merge-loop
-  *      kernel ([[BpeMergeTable]], executor-side, exact), then corpus
-  *      token counts are a broadcast join — zero corpus-side shuffle.
-  *      The nested-`replace` COLUMN forms ([[applyMergesCol]] etc.)
-  *      remain for what they are good at: small merge tables and the
-  *      DuckDB oracle gates (every SQL engine has `replace`, which is
-  *      what makes the whole learn loop oracle-checkable). At 32k
-  *      merges a numMerges-deep replace tower is the wrong shape
-  *      twice over — the expression tree falls out of codegen (the
-  *      engine's own NearestList lesson) and costs O(numMerges) per
-  *      word regardless of how many merges can fire; the kernel costs
+  *   3. encode: two codegen'd kernels over one [[BpeMergeTable]] byte
+  *      scan of each document — token counts
+  *      ([[docTokenCountFastCol]]) and per-word token ids
+  *      ([[docTokenIdsCol]]). Map-only: the corpus joins nothing and
+  *      the only ride-along state is the merge table (and id
+  *      vocabulary), whose size is bounded by the alphabet and
+  *      numMerges, never by the corpus vocabulary. The kernels cost
   *      O(len·maxTokenLen) candidate probes + O(candidates) per word.
+  *      The nested-`replace` COLUMN form ([[applyMergesCol]]) remains
+  *      for small merge tables and as the shape of the DuckDB oracle
+  *      chains (every SQL engine has `replace`, which is what makes
+  *      the whole learn loop oracle-checkable). Exactness of the
+  *      kernels is gated by the DuckDB oracle (q_bpe_encode,
+  *      q_bpe_token_ids, q_bpe_ids_checksum, q_bpe_ids_kernel) and by
+  *      BpeSpec's reference column forms.
   *
   * Merge application is EXACTLY canonical BPE (leftmost-first,
   * non-overlapping, one pass per merge rank) via a string encoding
@@ -147,10 +150,12 @@ object Bpe {
     split(sw.substr(lit(2), length(sw) - 2), Sep2)
 
   /** Apply a learned merge table to a word: numMerges nested codegen'd
-    * replaces, in rank order — pure map-side compute. Right for SMALL
-    * merge tables and for the oracle gates; production encode at
-    * vocab-sized tables goes through [[tokenizeVocab]]/[[BpeMergeTable]]
-    * (see the object doc, point 3). */
+    * replaces, in rank order — the string form of the merge loop that
+    * every SQL engine can run, which is what the DuckDB oracle chains
+    * run. Right for SMALL merge tables (q_bpe_vocab tokenizes its word
+    * table with it); documents are encoded by the two kernels
+    * ([[docTokenCountFastCol]], [[docTokenIdsCol]]), which BpeSpec pins
+    * against this form. */
   def applyMergesCol(w: Column, merges: Seq[Merge]): Column =
     merges.sortBy(_.rank).foldLeft(wrapCol(w)) { (c, m) =>
       org.apache.spark.sql.functions.replace(c,
@@ -162,77 +167,36 @@ object Bpe {
   def tokensCol(w: Column, merges: Seq[Merge]): Column =
     symbolsCol(applyMergesCol(w, merges))
 
-  /** BPE token count of a word under a merge table (join-free column
-    * form; see `tokenizeVocab` for the broadcast-join form that
-    * tokenizes each distinct word once). */
-  def tokenCountCol(w: Column, merges: Seq[Merge]): Column =
-    size(tokensCol(w, merges))
-
-  /** Whole-document BPE token count as ONE pure column — no explode,
-    * no join: the sum over the doc's words of each word's token count
-    * (same words and SEP filter as `wordFreq`). Higher-order
-    * functions evaluate interpreted, so this is the right form ONLY
-    * when the merge table is small (an oracle gate, a handful of
-    * merges); [[docTokenCountFastCol]] is the same contract as one
-    * codegen'd kernel expression for production-sized tables, and
-    * `docTokenCounts`' broadcast-vocab join is the shuffle-free batch
-    * shape. */
-  def docTokenCountCol(text: Column, merges: Seq[Merge]): Column = {
-    val words = org.apache.spark.sql.functions.filter(
-      TextFunctions.tokens(text), w => !w.contains(Sep))
-    aggregate(words, lit(0L), (acc, w) => acc + tokenCountCol(w, merges))
-  }
-
-  /** [[docTokenCountCol]]'s contract as ONE codegen'd kernel
-    * expression ([[graft.expressions.BpeDocTokenCount]]): a byte-scan
-    * word split + per-word merge-loop tokenize with a per-table
-    * word→count cache, exact vs the column form (BpeSpec pins them
-    * equal), O(word) instead of O(numMerges·word) — the form the CLI
-    * uses so `curate --bpe_file` with a 32k-merge production table
-    * stays map-only AND inside whole-stage codegen. */
+  /** Whole-document BPE token count as ONE codegen'd kernel expression
+    * ([[graft.expressions.BpeDocTokenCount]]): a byte-scan word split
+    * (the words of [[wordFreq]]: `TextFunctions.tokens`, SEP-containing
+    * words skipped) + per-word merge-loop tokenize with a per-table
+    * word→count cache, O(word) instead of O(numMerges·word), inside
+    * whole-stage codegen. Null text counts null. */
   def docTokenCountFastCol(text: Column, merges: Seq[Merge]): Column = {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.expressions.BpeDocTokenCount(
       Bridge.expression(text), new BpeMergeTable(merges.toArray)))
   }
 
-  /** (word, n_tok): the vocab tokenized ONCE under the merge table —
-    * broadcast this against exploded corpus words so the corpus pays a
-    * hash probe per word instead of a tokenize per occurrence. The
-    * tokenize itself runs the in-memory merge-loop kernel
-    * ([[BpeMergeTable]], shipped as a broadcast variable) over the
-    * vocab partitions: interpreted per-WORD Scala is the designed
-    * kernel here exactly like the driver trainer — the vocab table is
-    * 10⁵× smaller than the corpus, and the alternative (a
-    * numMerges-deep replace tower) is O(numMerges) per word and falls
-    * out of codegen at production table sizes. Exactness vs the column
-    * form is spec-pinned AND oracle-gated (q_bpe_vocab's DuckDB chain
-    * is the replace tower; this kernel must hash-match it). */
-  def tokenizeVocab(words: DataFrame, merges: Seq[Merge]): DataFrame = {
-    val spark = words.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(new BpeMergeTable(merges.toArray))
-    words.select(col("word")).as[String]
-      .mapPartitions { it =>
-        val t = bc.value
-        it.map(w => (w, t.tokenCount(w).toLong))
-      }
-      .toDF("word", "n_tok")
-  }
-
-  /** (word, toks array<string>): the vocab's full token SEQUENCES
-    * under the merge table (the id-emitting sibling of
-    * [[tokenizeVocab]] — same kernel, same broadcast-join usage). */
-  def tokenizeVocabTokens(words: DataFrame, merges: Seq[Merge]): DataFrame = {
-    val spark = words.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(new BpeMergeTable(merges.toArray))
-    words.select(col("word")).as[String]
-      .mapPartitions { it =>
-        val t = bc.value
-        it.map(w => (w, t.tokenize(w).toSeq))
-      }
-      .toDF("word", "toks")
+  /** Per-document counts (keyCols…, n_words, n_tokens), one row per
+    * input document: n_words counts the words of [[wordFreq]] (a word
+    * holding SEP is skipped), n_tokens is the count kernel. Null,
+    * empty and whitespace-only text count 0 and 0. Both counts stay
+    * inside whole-stage codegen: the word count is the
+    * `TextFunctions.tokenCount` byte scan, less, on the rare text that
+    * holds a SEP at all, its SEP words — the tokens left once every
+    * character that is neither SEP nor a separator is deleted. */
+  def docCounts(docs: DataFrame, textCol: String, keyCols: Seq[String],
+      merges: Seq[Merge]): DataFrame = {
+    val text = col(textCol)
+    val sepWords = when(text.contains(Sep), TextFunctions.tokenCount(
+        regexp_replace(text, s"[^$Sep${TextFunctions.SepClass}]", "")))
+      .otherwise(0)
+    docs.select(keyCols.map(col) ++ Seq(
+      coalesce((TextFunctions.tokenCount(text) - sepWords).cast("long"),
+        lit(0L)).as("n_words"),
+      coalesce(docTokenCountFastCol(text, merges), lit(0L)).as("n_tokens")): _*)
   }
 
   /** The learned vocabulary WITH token ids — the shippable artifact a
@@ -283,114 +247,19 @@ object Bpe {
       .groupBy("token").agg(min(col("token_id")).as("token_id"))
   }
 
-  /** Per-document BPE token-ID sequences in document order — what a
-    * training run actually consumes (the counting forms above feed
-    * budgets; this feeds the model). One corpus scan: words explode
-    * map-side with their position, probe the broadcast tokenized vocab
-    * and the broadcast id table, and the ONE exchange is the re-group
-    * by document key (positions carried so the sort inside the
-    * aggregation is per-doc list reassembly, not a global sort).
-    * Output: keyCols…, n_tokens, token_ids array<bigint>.
-    *
-    * `pinnedIds` supplies a PERSISTED (token, token_id) vocabulary —
-    * the portability contract: ids derived by [[vocabIds]] depend on
-    * the current corpus's alphabet, so encoding corpus B for a model
-    * trained on corpus A's ids MUST pin A's vocab file (CLI
-    * `--vocab_file`). Tokens outside a pinned vocab (an alphabet
-    * character A never saw) emit id −1 — the explicit UNK sentinel a
-    * trainer can filter or remap, never a silently dropped token. */
-  def docTokenIds(docs: DataFrame, textCol: String, keyCols: Seq[String],
-      merges: Seq[Merge], words: DataFrame,
-      pinnedIds: Option[DataFrame] = None,
-      vocabRows: Option[Long] = None): DataFrame = {
-    val toks = docTokenIdsLong(docs, textCol, keyCols, merges, words,
-      pinnedIds, vocabRows)
-    toks
-      .groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("n_tokens"),
-        expr("transform(array_sort(" +
-          "collect_list(struct(word_pos, tok_pos, token_id))), " +
-          "s -> s.token_id)").as("token_ids"))
-  }
-
-  /** Distinct-word count above which the tokenized vocab must NOT be
-    * hint-forced as a broadcast in the join forms: 1M words at ~100
-    * bytes of (word, toks) row is ~100 MB materialized per executor —
-    * the edge of sane; the r14-probed production vocab (15.65M words)
-    * would be multi-GB. Above the cap the join runs as a plain
-    * shuffle join (the honest distributed shape for a genuinely big
-    * build side) — and the RIGHT production route is the join-free
-    * kernel ([[docTokenIdsFast]]), which this cap exists to make the
-    * obvious choice. */
-  final val VocabBroadcastCap = 1L << 20
-
-  /** True when the word table is small enough to force-broadcast —
-    * ONE cheap limit-probe job (the scan stops at cap+1 rows), never
-    * a full count of a 10⁸-row vocabulary. */
-  private def vocabFits(words: DataFrame): Boolean =
-    words.limit((VocabBroadcastCap + 1).toInt).count() <= VocabBroadcastCap
-
-  /** THE vocab-join size routing, single-sourced (r15 review): force
-    * the broadcast hint only while the vocabulary is provably under
-    * [[VocabBroadcastCap]]. `vocabRows` must be the row count of THIS
-    * `words` table (the [[learnWithStats]] count qualifies only when
-    * the learn ran with minFreq = 1 — a pruned count under-states the
-    * full vocabulary); negative values (the numMerges == 0 sentinel)
-    * are treated as unknown and fall back to the limit-probe, never
-    * to a forced broadcast. */
-  private[graft] def routeVocab(vocab0: DataFrame,
-      vocabRows: Option[Long], words: DataFrame): DataFrame = {
-    val fits = vocabRows.filter(_ >= 0L)
-      .map(_ <= VocabBroadcastCap)
-      .getOrElse(vocabFits(words))
-    if (fits) broadcast(vocab0) else vocab0
-  }
-
-  /** The long form behind [[docTokenIds]] (and the q_bpe_token_ids
-    * oracle): one row per (doc, word_pos, tok_pos) with its token_id.
-    * With `pinnedIds` the join goes LEFT and unknown tokens coalesce
-    * to −1 (see [[docTokenIds]]); the derived-vocab path keeps the
-    * inner join — every token is in its own vocab by construction.
-    * The corpus⋈vocab join is broadcast only below
-    * [[VocabBroadcastCap]] (size-routed — see its doc); the id table
-    * is alphabet+merges-sized and always broadcasts. */
-  def docTokenIdsLong(docs: DataFrame, textCol: String, keyCols: Seq[String],
-      merges: Seq[Merge], words: DataFrame,
-      pinnedIds: Option[DataFrame] = None,
-      vocabRows: Option[Long] = None): DataFrame = {
-    val vocab0 = tokenizeVocabTokens(words, merges)
-    // size routing: a caller that just learned on the same table knows
-    // its row count (`learnWithStats`) — reuse it instead of paying the
-    // limit-probe job a second time over the same vocabulary
-    val vocab = routeVocab(vocab0, vocabRows, words)
-    val dw = docs.select(keyCols.map(col) :+
-        posexplode(TextFunctions.tokens(col(textCol))).as(Seq("word_pos", "word")): _*)
-      .filter(!col("word").contains(Sep))
-    val toks = dw.join(vocab, Seq("word"))
-      .select(keyCols.map(col) :+ col("word_pos") :+
-        posexplode(col("toks")).as(Seq("tok_pos", "token")): _*)
-    val joined = pinnedIds match {
-      case Some(p) => toks
-        .join(broadcast(p.select(col("token"),
-          col("token_id").cast("long").as("token_id"))), Seq("token"), "left")
-        .withColumn("token_id", coalesce(col("token_id"), lit(-1L)))
-      case None =>
-        toks.join(broadcast(vocabIds(words, merges)), Seq("token"))
-    }
-    joined.select(keyCols.map(col) ++ Seq(col("word_pos"), col("tok_pos"),
-      col("token_id")): _*)
-  }
-
-  /** [[docTokenIds]]'s contract as ONE codegen'd kernel column — the
-    * PRODUCTION id-emission path: zero joins, zero corpus exchange
-    * beyond the caller's own, and the only ride-along state is the
-    * constant-sized merge table + id vocabulary
-    * ([[graft.expressions.BpeDocTokenIds]] — see its scaladoc for why
-    * this beats the join form at production vocabularies). `ids` is
-    * the (token → id) vocabulary: a pinned `--vocab_file` table, or
-    * [[vocabIds]] collected (alphabet + merges rows — driver-sized by
-    * construction, NOT corpus-vocabulary-sized). Null text yields an
-    * empty sequence (the join form simply has no rows to group). */
+  /** Per-document BPE token ids as ONE codegen'd kernel column
+    * ([[graft.expressions.BpeDocTokenIds]]): `array<array<bigint>>`,
+    * one inner array per word of `TextFunctions.tokens(text)` in
+    * document order, holding that word's token ids; a word holding SEP
+    * keeps its slot as an empty array, so the outer index is the word
+    * position. No join and no corpus exchange: the ride-along state is
+    * the merge table + id vocabulary. `ids` is the (token → id)
+    * vocabulary: a pinned `--vocab_file` table, or [[vocabIds]]
+    * collected (alphabet + merges rows — driver-sized by construction,
+    * NOT corpus-vocabulary-sized). The ids of a vocabulary built
+    * elsewhere are portable only when it is pinned: a token outside it
+    * emits −1 (UNK), never a dropped position. Null text yields an
+    * empty array. */
   def docTokenIdsCol(text: Column, merges: Seq[Merge],
       ids: Seq[(String, Long)]): Column = {
     import org.apache.spark.sql.graftbridge.Bridge
@@ -399,19 +268,28 @@ object Bpe {
       new BpeIdTable(new BpeMergeTable(merges.toArray), ids.toArray)))
   }
 
-  /** Map-only per-document token-ID emission (keyCols…, n_tokens,
-    * token_ids) via [[docTokenIdsCol]] — same output contract as
-    * [[docTokenIds]] for every document with ≥1 token (spec-pinned);
-    * additionally EMITS empty-sequence rows for token-less documents,
-    * which the join form drops (a trainer artifact should account for
-    * every input row). */
+  /** Map-only per-document token-ID sequences (keyCols…, n_tokens,
+    * token_ids): [[docTokenIdsCol]] flattened — what a training run
+    * consumes. One row per input document; a token-less one has an
+    * empty sequence. */
   def docTokenIdsFast(docs: DataFrame, textCol: String, keyCols: Seq[String],
       merges: Seq[Merge], ids: Seq[(String, Long)]): DataFrame =
     docs.select(keyCols.map(col) :+
-        docTokenIdsCol(col(textCol), merges, ids).as("token_ids"): _*)
+        flatten(docTokenIdsCol(col(textCol), merges, ids)).as("token_ids"): _*)
       .select(keyCols.map(col) ++ Seq(
         size(col("token_ids")).cast("long").as("n_tokens"),
         col("token_ids")): _*)
+
+  /** The long form of [[docTokenIdsCol]]: one row (keyCols…, word_pos,
+    * tok_pos, token_id) per token, positions 0-based — the two
+    * `posexplode`s of the per-word arrays. Token-less documents and SEP
+    * words have no rows. */
+  def docTokenIdRows(docs: DataFrame, textCol: String, keyCols: Seq[String],
+      merges: Seq[Merge], ids: Seq[(String, Long)]): DataFrame =
+    docs.select(keyCols.map(col) :+ posexplode(
+        docTokenIdsCol(col(textCol), merges, ids)).as(Seq("word_pos", "toks")): _*)
+      .select(keyCols.map(col) ++ Seq(col("word_pos"),
+        posexplode(col("toks")).as(Seq("tok_pos", "token_id"))): _*)
 
   /** PACKED training shards in token IDS — the artifact a training
     * loop memory-maps: per `srcCol` group, documents in `docCol`
@@ -423,7 +301,7 @@ object Bpe {
     * final shard of a group may be short — padding policy is the
     * trainer's, not the data layout's).
     *
-    * Input: the [[docTokenIdsFast]]/[[docTokenIds]] output shape
+    * Input: the [[docTokenIdsFast]] output shape
     * (srcCol, docCol, token_ids). Output: (srcCol, shard, n_ids, ids).
     *
     * Shapes at scale (the q_pack precedent): ONE per-source window
@@ -488,25 +366,6 @@ object Bpe {
           "s -> s.seg))").as("ids"))
   }
 
-  /** Per-document BPE token counts: explode words (map-side), probe the
-    * broadcast tokenized vocab, re-aggregate by document — the corpus
-    * is scanned once and shuffled only as (doc key, partial count).
-    * Size-routed like [[docTokenIdsLong]]: vocabularies past
-    * [[VocabBroadcastCap]] join plain (or better, the caller uses the
-    * join-free [[docTokenCountFastCol]]). */
-  def docTokenCounts(docs: DataFrame, textCol: String, keyCols: Seq[String],
-      merges: Seq[Merge], words: DataFrame,
-      vocabRows: Option[Long] = None): DataFrame = {
-    val vocab0 = tokenizeVocab(words, merges)
-    val vocab = routeVocab(vocab0, vocabRows, words)
-    val dw = docs.select(keyCols.map(col) :+
-        explode(TextFunctions.tokens(col(textCol))).as("word"): _*)
-      .filter(!col("word").contains(Sep))
-    dw.join(vocab, Seq("word"))
-      .groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("n_words"), sum(col("n_tok")).as("n_tokens"))
-  }
-
   /** Learn `numMerges` merges from a (word, freq) table. At or below
     * `collectCap` distinct words the vocab STREAMS to the driver
     * (`toLocalIterator` — one partition in flight, never one giant
@@ -526,33 +385,17 @@ object Bpe {
     * definition it learns the merges OF THE PRUNED TABLE (identical
     * to calling learn on a pre-filtered table — spec-pinned), not an
     * approximation of the unpruned train; encode paths should still
-    * tokenize the FULL vocabulary with the learned merges. */
+    * tokenize the FULL vocabulary with the learned merges.
+    *
+    * A vocab whose estimated trainer footprint is at most
+    * `smallCollectBytes` reaches the driver in one collect job; a
+    * larger one streams partition by partition. */
   def learn(words: DataFrame, numMerges: Int,
       collectCap: Long = 20000000L, checkpointEvery: Int = 16,
-      minFreq: Long = 1L): Seq[Merge] =
-    learnWithStats(words, numMerges, collectCap, checkpointEvery,
-      minFreq).merges
-
-  /** [[learn]]'s result plus the pruned-table row count its route
-    * guard already computed — callers that go on to size-route a
-    * vocab join ([[docTokenIdsLong]]/[[docTokenCounts]] `vocabRows`)
-    * reuse the count instead of paying a second probe job over the
-    * same table. `nWords` counts the table AFTER the minFreq prune,
-    * so it only qualifies as a `vocabRows` hint when the learn ran
-    * with minFreq = 1 (a pruned count under-states the vocabulary the
-    * join tokenizes); −1 when the loop never ran (numMerges == 0) —
-    * [[routeVocab]] treats negatives as unknown, never as "fits". */
-  final case class Learned(merges: Seq[Merge], nWords: Long)
-
-  /** [[learn]] returning [[Learned]]. A vocab whose estimated trainer
-    * footprint is at most `smallCollectBytes` reaches the driver in one
-    * collect job; a larger one streams partition by partition. */
-  def learnWithStats(words: DataFrame, numMerges: Int,
-      collectCap: Long = 20000000L, checkpointEvery: Int = 16,
-      minFreq: Long = 1L, smallCollectBytes: Long = 256L << 20): Learned = {
+      minFreq: Long = 1L, smallCollectBytes: Long = 256L << 20): Seq[Merge] = {
     require(numMerges >= 0, s"numMerges must be >= 0, got $numMerges")
     require(minFreq >= 1, s"minFreq must be >= 1, got $minFreq")
-    if (numMerges == 0) return Learned(Seq.empty, -1L)
+    if (numMerges == 0) return Seq.empty
     val pruned =
       if (minFreq > 1L) words.filter(col("freq") >= minFreq) else words
     // The word table is read by the route's stats job and then by the
@@ -570,7 +413,7 @@ object Bpe {
 
   private def learnPruned(pruned: DataFrame, numMerges: Int,
       collectCap: Long, checkpointEvery: Int,
-      smallCollectBytes: Long): Learned = {
+      smallCollectBytes: Long): Seq[Merge] = {
     // heap-headroom guard, LENGTH-AWARE: the driver trainer's working
     // set scales with symbols, not just words — per word ~24 bytes per
     // symbol (array slot + occurrence-index int + pair-count/heap share)
@@ -587,7 +430,7 @@ object Bpe {
     val statsRow = pruned
       .agg(count(lit(1)), avg(length(col("word")))).head()
     val n = statsRow.getLong(0)
-    if (n == 0L) return Learned(Seq.empty, 0L)
+    if (n == 0L) return Seq.empty
     val avgLen = statsRow.getDouble(1)
     val needBytes = (n * (120.0 + 24.0 * avgLen)).toLong
     val headroom = Runtime.getRuntime.maxMemory / 2
@@ -613,14 +456,14 @@ object Bpe {
             .toLocalIterator().asScala
             .map(r => (r.getString(0), r.getLong(1)))
         }
-      Learned(learnIncremental(it, numMerges), n)
+      learnIncremental(it, numMerges)
     } else {
       if (n <= collectCap)
         System.err.println(f"[bpe] $n distinct words need ~${needBytes / 1e9}%.1f GB " +
           f"of driver heap (max ${Runtime.getRuntime.maxMemory / 1e9}%.1f GB) — " +
           "routing to the distributed merge loop; raise driver memory for " +
           "the fast incremental trainer (or prune the tail with minFreq)")
-      Learned(learnDistributed(pruned, numMerges, checkpointEvery), n)
+      learnDistributed(pruned, numMerges, checkpointEvery)
     }
   }
 

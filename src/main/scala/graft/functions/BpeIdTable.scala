@@ -1,34 +1,29 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A BPE merge table PLUS its token→id vocabulary — the executor-side
   * kernel behind map-only token-ID emission
-  * ([[graft.expressions.BpeDocTokenIds]] / [[Bpe.docTokenIdsFast]]).
+  * ([[graft.expressions.BpeDocTokenIds]] / [[Bpe.docTokenIdsCol]]).
   *
-  * Why it exists (the r14 scale finding): the join form of id
-  * emission ships the TOKENIZED VOCAB — (word → token array), one row
-  * per distinct corpus word — to every executor as a broadcast, which
-  * at a production vocabulary (15.65M words) is a multi-GB
-  * materialization per executor. The two tables that are actually
-  * CONSTANT-sized are the merge table (~2 MB at 50k merges) and the
-  * id vocabulary (base alphabet + one token per merge — bounded by
-  * alphabet + numMerges, NOT by corpus vocabulary), so a kernel that
-  * re-tokenizes words executor-side and maps tokens through the id
-  * table emits ids with ZERO joins and zero corpus-scale broadcast:
-  * the corpus never meets the word table at all. The per-word work is
-  * memoized in the shared byte-bounded cache exactly like token
-  * counting, so hot words tokenize once per executor process.
+  * The two tables it holds are CONSTANT-sized: the merge table (~2 MB
+  * at 50k merges) and the id vocabulary (base alphabet + one token per
+  * merge — bounded by alphabet + numMerges, NOT by corpus vocabulary).
+  * So the kernel re-tokenizes words executor-side and maps tokens
+  * through the id table with ZERO joins: the corpus never meets its
+  * word table, which at a production vocabulary (15.65M words) would
+  * be a multi-GB table per executor. The per-word work is memoized in
+  * the shared byte-bounded cache exactly like token counting, so hot
+  * words tokenize once per executor process.
   *
-  * Exactness seam: the join form ([[Bpe.docTokenIdsLong]]) remains
-  * the DuckDB-oracle-expressible sibling; BpeSpec pins this kernel
-  * word-for-word and document-for-document equal to it (including the
-  * UNK = −1 contract for tokens outside a pinned vocabulary), and the
-  * q_bpe_ids_kernel gate re-proves the whole kernel pipeline against
-  * the oracle's replace-tower chain on every Verify run.
+  * Exactness: the DuckDB gates q_bpe_token_ids (exact long-form rows
+  * on a subset), q_bpe_ids_checksum (word-position checksum over the
+  * corpus) and q_bpe_ids_kernel (flat-position checksum) re-prove the
+  * kernel against the oracle's replace-tower chain on every Verify
+  * run; BpeSpec pins it against its reference column forms, including
+  * the UNK = −1 contract for tokens outside a pinned vocabulary.
   *
   * Equality/hashCode are VALUE-based (merge array + id rows) for the
   * same reasons as [[BpeMergeTable]]: subexpression elimination,
@@ -59,7 +54,7 @@ final class BpeIdTable(val table: BpeMergeTable, val ids: Array[(String, Long)])
   @transient private lazy val cache = BpeMergeTable.sharedCache(this)
 
   /** Id of one token; −1 (UNK) when outside the vocabulary — the
-    * pinned-vocab portability contract (see Bpe.docTokenIds). */
+    * pinned-vocab portability contract (see [[Bpe.docTokenIdsCol]]). */
   def idOf(token: String): Long = {
     val v = idMap.get(token)
     if (v == null) -1L else v.longValue()
@@ -82,42 +77,17 @@ final class BpeIdTable(val table: BpeMergeTable, val ids: Array[(String, Long)])
     out
   }
 
-  /** Whole-document token-ID sequence in document order, as one
-    * byte-scan kernel call — the id-emitting sibling of
-    * [[BpeMergeTable.docTokenCount]] (identical word split:
-    * `TextFunctions.tokens` as non-separator byte runs, SEP-containing
-    * words skipped). Called from generated code
+  /** Per-word token ids of a whole document, in document order: one
+    * inner array per word of [[BpeMergeTable.scanWords]] (the words
+    * of `TextFunctions.tokens`), empty for a SEP word, so the outer
+    * index is the word position. Called from generated code
     * (BpeDocTokenIds's doGenCode). */
-  def docTokenIds(text: UTF8String): ArrayData = {
-    val base = text.getBaseObject
-    val off = text.getBaseOffset
-    val n = text.numBytes
-    var buf = new Array[Long](16)
-    var m = 0
-    var i = 0
-    while (i < n) {
-      while (i < n && TextFunctions.isSep(Platform.getByte(base, off + i))) i += 1
-      if (i < n) {
-        val start = i
-        var hasSepChar = false
-        while (i < n && !TextFunctions.isSep(Platform.getByte(base, off + i))) {
-          if (Platform.getByte(base, off + i) == 0x01) hasSepChar = true
-          i += 1
-        }
-        if (!hasSepChar) {
-          val w = UTF8String.fromAddress(base, off + start, i - start).toString
-          val ids = wordIds(w)
-          if (m + ids.length > buf.length) {
-            var cap = buf.length * 2
-            while (cap < m + ids.length) cap *= 2
-            buf = java.util.Arrays.copyOf(buf, cap)
-          }
-          System.arraycopy(ids, 0, buf, m, ids.length)
-          m += ids.length
-        }
-      }
+  def docWordIds(text: UTF8String): ArrayData = {
+    val words = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
+    BpeMergeTable.scanWords(text) { w =>
+      words += UnsafeArrayData.fromPrimitiveArray(
+        if (w == null) Array.emptyLongArray else wordIds(w))
     }
-    UnsafeArrayData.fromPrimitiveArray(
-      if (m == buf.length) buf else java.util.Arrays.copyOf(buf, m))
+    new GenericArrayData(words.toArray)
   }
 }

@@ -4,8 +4,9 @@ import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** An immutable BPE merge table with a FAST EXACT tokenizer — the
-  * production encode kernel behind [[Bpe.tokenizeVocab]] and the
-  * [[graft.expressions.BpeDocTokenCount]] expression.
+  * encode kernel behind the [[graft.expressions.BpeDocTokenCount]] and
+  * (through [[BpeIdTable]]) [[graft.expressions.BpeDocTokenIds]]
+  * expressions, which share its document scan ([[BpeMergeTable.scanWords]]).
   *
   * Semantics: identical to the canonical sequential form (apply every
   * merge in rank order, each as one leftmost-first non-overlapping
@@ -25,8 +26,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * NearestList lesson, r13). Applying a subset that provably contains
   * every merge that can fire yields the exact sequential result, so
   * the kernel is bit-equal to the column form — BpeSpec pins it, and
-  * q_bpe_vocab's DuckDB replace-tower oracle re-proves it end-to-end
-  * on every Verify run.
+  * the DuckDB replace-tower oracles of q_bpe_encode, q_bpe_token_ids,
+  * q_bpe_ids_checksum and q_bpe_ids_kernel re-prove it end-to-end on
+  * every Verify run.
   *
   * The candidate probe itself never allocates until it has a REAL
   * candidate: a rolling `h·31 + c` hash (String.hashCode's recurrence,
@@ -42,8 +44,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * allocation-heavy probe collapsing the column form to 2 M tok/s.
   *
   * Constant sizing (the NearestList/MatVecProject discipline): the
-  * table travels to executors as a broadcast variable or plan
-  * reference of ~(total merge string bytes) — a 50k-merge production
+  * table travels to executors as a plan reference of ~(total merge
+  * string bytes) — a 50k-merge production
   * table is ~2 MB, driver- and task-sized by design. The word→result
   * cache is PROCESS-WIDE, keyed by the table's CONTENT fingerprint
   * (deserialization makes a fresh instance per task on the
@@ -150,33 +152,12 @@ final class BpeMergeTable(val merges: Array[Bpe.Merge]) extends Serializable {
     c
   }
 
-  /** [[Bpe.docTokenCountCol]]'s contract over a whole document as one
-    * byte-scan: the words are `TextFunctions.tokens(text)`, scanned as
-    * maximal runs of non-separator bytes ([[TextFunctions.isSep]]),
-    * SEP-containing words skipped (U+0001 is the single byte 0x01),
-    * token counts summed. Called from generated code
-    * (BpeDocTokenCount's doGenCode). */
+  /** Whole-document BPE token count: the token counts of the words of
+    * [[scanWords]] summed, SEP words skipped. Called from generated
+    * code (BpeDocTokenCount's doGenCode). */
   def docTokenCount(text: UTF8String): Long = {
-    val base = text.getBaseObject
-    val off = text.getBaseOffset
-    val n = text.numBytes
     var total = 0L
-    var i = 0
-    while (i < n) {
-      while (i < n && TextFunctions.isSep(Platform.getByte(base, off + i))) i += 1
-      if (i < n) {
-        val start = i
-        var hasSepChar = false
-        while (i < n && !TextFunctions.isSep(Platform.getByte(base, off + i))) {
-          if (Platform.getByte(base, off + i) == 0x01) hasSepChar = true
-          i += 1
-        }
-        if (!hasSepChar) {
-          val w = UTF8String.fromAddress(base, off + start, i - start).toString
-          total += tokenCount(w)
-        }
-      }
-    }
+    scanWords(text)(w => if (w != null) total += tokenCount(w))
     total
   }
 }
@@ -275,6 +256,31 @@ object BpeMergeTable {
         i = (i + 1) & mask
       }
       false
+    }
+  }
+
+  /** The one document scan of both encode kernels: calls `word` with
+    * each word of `TextFunctions.tokens(text)` in document order —
+    * maximal runs of non-separator bytes ([[TextFunctions.isSep]]) —
+    * or with null for a word holding SEP (U+0001 is the single byte
+    * 0x01), which [[Bpe.wordFreq]] skips. */
+  private[functions] def scanWords(text: UTF8String)(word: String => Unit): Unit = {
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    val n = text.numBytes
+    var i = 0
+    while (i < n) {
+      while (i < n && TextFunctions.isSep(Platform.getByte(base, off + i))) i += 1
+      if (i < n) {
+        val start = i
+        var hasSepChar = false
+        while (i < n && !TextFunctions.isSep(Platform.getByte(base, off + i))) {
+          if (Platform.getByte(base, off + i) == 0x01) hasSepChar = true
+          i += 1
+        }
+        word(if (hasSepChar) null
+          else UTF8String.fromAddress(base, off + start, i - start).toString)
+      }
     }
   }
 

@@ -34,7 +34,7 @@ object TextFunctions {
 
   /** The separator set as a regex character-class body,
     * `\x09-\x0D\x20`, which Java regex and RE2 read alike. */
-  private val SepClass = f"\\x$SepLo%02X-\\x$SepHi%02X\\x$SepSpace%02X"
+  private[functions] val SepClass = f"\\x$SepLo%02X-\\x$SepHi%02X\\x$SepSpace%02X"
 
   /** One separator run (the whitespace that [[fingerprint]] and
     * [[charShingles]] collapse to one space). */

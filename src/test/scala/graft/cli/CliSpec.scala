@@ -20,6 +20,31 @@ class CliSpec extends SparkSpec {
       .toDF("id", "vector", "title"))
   }
 
+  test("export from a missing mock --db_root is a usage error and creates nothing") {
+    val root = tmp() + "/no_such_root"
+    val out = tmp() + "/vdf"
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val rc =
+      try Cli.run(spark, Seq("export", "--db", "mock", "--db_root", root,
+        "--out", out))
+      finally System.setErr(saved)
+    assert(rc == 2)
+    assert(!new java.io.File(root).exists() && !new java.io.File(out).exists())
+    val lines = err.toString("UTF-8").linesIterator.toSeq
+    assert(lines.size == 1 && lines.head.contains(root), lines.mkString("\n"))
+    // import still creates its target root
+    val vdf = tmp() + "/vdf2"
+    val src = tmp()
+    seedDb(src)
+    assert(Cli.run(spark, Seq("export", "--db", "mock", "--db_root", src,
+      "--out", vdf)) == 0)
+    assert(Cli.run(spark, Seq("import", "--db", "mock", "--db_root", root,
+      "--dir", vdf)) == 0)
+    assert(new MockVdb(root).indexNames == Seq("idx1"))
+  }
+
   test("export → count → id-list → import round trip via CLI") {
     val dbRoot = tmp(); val vdf = tmp() + "/vdf"; val dst = tmp()
     seedDb(dbRoot)
@@ -379,7 +404,7 @@ class CliSpec extends SparkSpec {
     val words = graft.functions.Bpe.wordFreq(docs, "text")
     val merges = graft.functions.Bpe.learn(words, 4)
     val want = graft.functions.Bpe
-      .docTokenCounts(docs, "text", Seq("doc_id"), merges, words)
+      .docCounts(docs, "text", Seq("doc_id"), merges)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val got = spark.read.parquet(out)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_tok")).toMap
@@ -515,7 +540,7 @@ class CliSpec extends SparkSpec {
     val words = graft.functions.Bpe.wordFreq(docs, "text")
     val merges = graft.functions.Bpe.learn(words, 5)
     val want = graft.functions.Bpe
-      .docTokenCounts(docs, "text", Seq("doc_id"), merges, words)
+      .docCounts(docs, "text", Seq("doc_id"), merges)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val got = spark.read.parquet(out)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_tok")).toMap
@@ -550,6 +575,31 @@ class CliSpec extends SparkSpec {
       "--bpe_merges", "3", "--follow")) == 2)
   }
 
+  test("tokenize --out and --out_ids write one row per input document") {
+    import spark.implicits._
+    val in = tmp() + "/docs"
+    Seq((1L, "abab abc"), (2L, ""), (3L, " \t\n "),
+      (4L, null.asInstanceOf[String]), (5L, "xa b" + graft.functions.Bpe.Sep + "x"),
+      (6L, "cab abab b"), (7L, "abab abc"), (8L, "b"))
+      .toDF("doc_id", "text").write.parquet(in)
+    val out = tmp() + "/counts"
+    val ids = tmp() + "/ids"
+    assert(Cli.run(spark, Seq("tokenize", "--in", in, "--merges", "5",
+      "--out", out, "--out_ids", ids)) == 0)
+    val counts = spark.read.parquet(out).collect().map(r =>
+      r.getAs[Long]("doc_id") ->
+        ((r.getAs[Long]("n_words"), r.getAs[Long]("n_tokens")))).toMap
+    val idDocs = spark.read.parquet(ids).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_tokens")).toMap
+    assert(counts.keySet == (1L to 8L).toSet)
+    assert(idDocs.keySet == counts.keySet)
+    // token-less docs (empty, whitespace-only, null) count zero; the
+    // SEP word of doc 5 is skipped, as in wordFreq
+    Seq(2L, 3L, 4L).foreach(d => assert(counts(d) == ((0L, 0L)), s"doc $d"))
+    assert(counts(5L)._1 == 1L)
+    counts.foreach { case (d, (_, n)) => assert(n == idDocs(d), s"doc $d") }
+  }
+
   test("tokenize: learn → persist TSV → reload → apply, library-equal") {
     import spark.implicits._
     val in = tmp() + "/docs"
@@ -576,7 +626,7 @@ class CliSpec extends SparkSpec {
       .collect().map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_words"), r.getAs[Long]("n_tokens"))).toMap
     val ref = graft.functions.Bpe
-      .docTokenCounts(docs, "text", Seq("doc_id"), want, words)
+      .docCounts(docs, "text", Seq("doc_id"), want)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == ref && got.keySet == Set(1L, 2L, 3L))
 
@@ -599,15 +649,16 @@ class CliSpec extends SparkSpec {
     val gotIds = spark.read.parquet(idsOut)
       .collect().map(r => r.getAs[Long]("doc_id") ->
         r.getAs[Seq[Long]]("token_ids").toList).toMap
+    val refIdRows = graft.functions.Bpe.vocabIds(words, want)
+      .orderBy("token_id").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
     val refIds = graft.functions.Bpe
-      .docTokenIds(docs, "text", Seq("doc_id"), want, words)
+      .docTokenIdsFast(docs, "text", Seq("doc_id"), want, refIdRows)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](2).toList).toMap
     assert(gotIds == refIds && gotIds.keySet == Set(1L, 2L, 3L))
     val vocabLines = java.nio.file.Files.readString(
       java.nio.file.Paths.get(vocabF)).trim.split("\n").toSeq
-    val refVocab = graft.functions.Bpe.vocabIds(words, want)
-      .orderBy("token_id").collect()
-      .map(r => s"${r.getLong(1)}\t${r.getString(0)}").toSeq
+    val refVocab = refIdRows.map { case (t, id) => s"$id\t$t" }
     assert(vocabLines == refVocab)
     // ids are consecutive from 0 and the file is in id order
     assert(vocabLines.zipWithIndex.forall { case (l, i) =>
@@ -633,11 +684,8 @@ class CliSpec extends SparkSpec {
       .collect().map(r => r.getAs[Long]("doc_id") ->
         r.getAs[Seq[Long]]("token_ids").toList).toMap
     // tokenize "abz" under A's merges, map through A's vocab, z -> -1
-    val docsB = spark.read.parquet(inB)
-    val wordsB = graft.functions.Bpe.wordFreq(docsB, "text")
-    val toksB = graft.functions.Bpe.tokenizeVocabTokens(wordsB, want)
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    val expB = toksB("abz").map(t => vocabIdsA.getOrElse(t, -1L)).toList
+    val expB = new graft.functions.BpeMergeTable(want.toArray).tokenize("abz")
+      .map(t => vocabIdsA.getOrElse(t, -1L)).toList
     assert(seqB == Map(9L -> expB), s"got $seqB want $expB")
     assert(expB.contains(-1L), "fixture must exercise the UNK path")
     // malformed / duplicate vocab files fail loudly

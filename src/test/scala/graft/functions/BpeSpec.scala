@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class BpeSpec extends SparkSpec {
@@ -56,6 +57,30 @@ class BpeSpec extends SparkSpec {
     corpusWf.toSeq.toDF("word", "freq")
   }
 
+  // Reference column forms of the encode contract, from the replace
+  // tower (Bpe.tokensCol) and higher-order functions: interpreted and
+  // O(numMerges) per word, so they serve as the specs' judges of the two
+  // kernels, never as an encoder.
+
+  /** A document's BPE token count: the sum over wordFreq's words (SEP
+    * words skipped) of each word's token count. */
+  private def docTokenCountCol(text: Column, merges: Seq[Bpe.Merge]): Column = {
+    val words = filter(TextFunctions.tokens(text), w => !w.contains(Bpe.Sep))
+    aggregate(words, lit(0L), (acc, w) => acc + size(Bpe.tokensCol(w, merges)))
+  }
+
+  /** A document's per-word token ids: one array per word of
+    * `TextFunctions.tokens`, empty for a SEP word, −1 for a token
+    * outside `ids`; null text has no words. */
+  private def wordIdsCol(text: Column, merges: Seq[Bpe.Merge],
+      ids: Seq[(String, Long)]): Column = {
+    val idMap = typedLit(ids.toMap)
+    transform(TextFunctions.tokens(coalesce(text, lit(""))), w =>
+      when(w.contains(Bpe.Sep), array().cast("array<bigint>"))
+        .otherwise(transform(Bpe.tokensCol(w, merges),
+          t => coalesce(idMap(t), lit(-1L)))))
+  }
+
   test("learnInMemory matches the reference merge sequence") {
     val got = Bpe.learnInMemory(corpusWf.toArray, 6)
     val (ref, _) = refBpe(corpusWf, 6)
@@ -76,7 +101,7 @@ class BpeSpec extends SparkSpec {
     // corpus and pin the learned merges equal — the fetch route must
     // never change results.
     val viaCollect = Bpe.learn(wordsDf, 6)
-    val viaStream = Bpe.learnWithStats(wordsDf, 6, smallCollectBytes = 0L).merges
+    val viaStream = Bpe.learn(wordsDf, 6, smallCollectBytes = 0L)
     assert(viaCollect == viaStream)
     assert(viaCollect.size == 6)
   }
@@ -99,7 +124,7 @@ class BpeSpec extends SparkSpec {
     rows.asScala.toSeq
   }
 
-  test("learnWithStats reads the corpus once, on the collect and the distributed route") {
+  test("learn reads the corpus once, on the collect and the distributed route") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("bpecorpus").toString
     val n = 3000L
@@ -109,50 +134,26 @@ class BpeSpec extends SparkSpec {
     // a stage that scanned the corpus read all n rows; reads of the
     // cached word table count its column batches, far fewer than n
     def corpusReads(collectCap: Long): Seq[Long] = {
-      var learned: Bpe.Learned = null
+      var merges: Seq[Bpe.Merge] = Nil
       val reads = stageInputRows {
-        learned = Bpe.learnWithStats(Bpe.wordFreq(docs, "text"), 4,
+        merges = Bpe.learn(Bpe.wordFreq(docs, "text"), 4,
           collectCap = collectCap)
       }
-      assert(learned.merges.size == 4)
+      assert(merges.size == 4)
       reads.filter(_ >= n)
     }
     assert(corpusReads(20000000L) == Seq(n))
     assert(corpusReads(0L) == Seq(n))
-    // the table learnWithStats cached is released; a table the caller
-    // cached stays cached
+    // the table learn cached is released; a table the caller cached
+    // stays cached
     val words = Bpe.wordFreq(docs, "text")
-    Bpe.learnWithStats(words, 2)
+    Bpe.learn(words, 2)
     assert(words.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     words.persist()
     try {
-      Bpe.learnWithStats(words, 2)
+      Bpe.learn(words, 2)
       assert(words.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
     } finally words.unpersist()
-  }
-
-  test("learnWithStats count and docTokenIdsLong vocabRows routing") {
-    import spark.implicits._
-    val docs = Seq((1L, "abab abc b"), (2L, "xabx aaa b"))
-      .toDF("doc_id", "text")
-    val words = Bpe.wordFreq(docs, "text")
-    val learned = Bpe.learnWithStats(words, 4)
-    assert(learned.merges == Bpe.learn(words, 4))
-    assert(learned.nWords == words.count())
-    def rows(vr: Option[Long]) =
-      Bpe.docTokenIdsLong(docs, "text", Seq("doc_id"), learned.merges,
-          words, vocabRows = vr)
-        .orderBy("doc_id", "word_pos", "tok_pos")
-        .collect().map(_.toSeq).toSeq
-    val default = rows(None)
-    // the hint (broadcast route) and an over-cap count (plain-join
-    // route) must both be value-identical to the probe-job default
-    assert(rows(Some(learned.nWords)) == default)
-    assert(rows(Some(Bpe.VocabBroadcastCap + 1)) == default)
-    // the numMerges==0 sentinel (−1) is treated as UNKNOWN, not as
-    // "fits": routeVocab falls back to the probe — results identical
-    assert(rows(Some(-1L)) == default)
-    assert(default.nonEmpty)
   }
 
   test("boundary safety: a merge never fires across symbol boundaries") {
@@ -184,10 +185,6 @@ class BpeSpec extends SparkSpec {
         Bpe.tokensCol(col("word"), merges).as("toks"))
       .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
     assert(got == refWords)
-    // and the broadcast-join vocab path agrees with the direct column
-    val vocab = Bpe.tokenizeVocab(wordsDf, merges)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    refWords.foreach { case (w, syms) => assert(vocab(w) == syms.size) }
   }
 
   test("learnIncremental equals the recount loop (engineered corpus)") {
@@ -293,7 +290,7 @@ class BpeSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val got = docs.select(col("doc_id"),
         Bpe.docTokenCountFastCol(col("text"), merges).as("fast"),
-        Bpe.docTokenCountCol(col("text"), merges).as("slow"))
+        docTokenCountCol(col("text"), merges).as("slow"))
       .collect()
     got.foreach { r =>
       if (r.isNullAt(1) || r.isNullAt(2))
@@ -323,7 +320,7 @@ class BpeSpec extends SparkSpec {
       Map("abab" -> 1L, "abc" -> 1L, "b" -> 1L, "cab" -> 1L), 2)
     val ids = Bpe.vocabIds(words, merges)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val got = Bpe.docTokenIds(docs, "text", Seq("doc_id"), merges, words)
+    val got = Bpe.docTokenIdsFast(docs, "text", Seq("doc_id"), merges, ids.toSeq)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getSeq[Long](2).toList))).toMap
     val exp = Map(
       1L -> (refWords("abab") ++ refWords("abc")),
@@ -333,11 +330,10 @@ class BpeSpec extends SparkSpec {
     assert(got == exp)
   }
 
-  test("docTokenIdsFast (map-only kernel) equals the join form, derived and pinned") {
+  test("docTokenIdsFast equals the reference column form, derived and pinned") {
     import spark.implicits._
-    // adversarial whitespace, SEP word (skipped), multi-byte UTF-8,
-    // empty and null docs (kernel emits empty sequences; join form has
-    // no rows to group)
+    // adversarial whitespace, SEP word (an empty slot), multi-byte
+    // UTF-8, empty and null docs (empty sequences)
     val docs = Seq(
       (1L, "abab abc\taaa"), (2L, " \t xa bx\r\nxabx  "), (3L, "b cab"),
       (4L, "he" + Bpe.Sep + "x abc"), (5L, ""), (6L, "héllo wörld"),
@@ -347,26 +343,32 @@ class BpeSpec extends SparkSpec {
     val merges = Bpe.learn(words, 6)
     val idRows = Bpe.vocabIds(words, merges)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val fast = Bpe.docTokenIdsFast(docs, "text", Seq("doc_id"), merges, idRows)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getSeq[Long](2).toList))).toMap
-    val join = Bpe.docTokenIds(docs, "text", Seq("doc_id"), merges, words)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getSeq[Long](2).toList))).toMap
-    join.foreach { case (id, v) => assert(fast(id) == v, s"doc $id") }
-    // every input doc present in the kernel output; token-less → empty
-    assert(fast.keySet == Set(1L, 2L, 3L, 4L, 5L, 6L, 7L))
-    assert(fast(5L) == ((0L, Nil)) && fast(7L) == ((0L, Nil)))
-
-    // pinned vocabulary MISSING some tokens: kernel and join form both
-    // emit -1 (UNK) at those positions, ids agree everywhere else
+    // pinned vocabulary MISSING some tokens: -1 (UNK) at those positions
     val pinnedRows = idRows.filter { case (t, _) => t != "a" && t != "ab" }
-    val pinnedDf = pinnedRows.toDF("token", "token_id")
-    val fastP = Bpe.docTokenIdsFast(docs, "text", Seq("doc_id"), merges, pinnedRows)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](2).toList).toMap
-    val joinP = Bpe.docTokenIds(docs, "text", Seq("doc_id"), merges, words,
-        pinnedIds = Some(pinnedDf))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](2).toList).toMap
-    joinP.foreach { case (id, v) => assert(fastP(id) == v, s"pinned doc $id") }
-    assert(fastP.values.exists(_.contains(-1L)),
+    Seq(idRows, pinnedRows).foreach { ids =>
+      val perWord = docs.select(col("doc_id"),
+          Bpe.docTokenIdsCol(col("text"), merges, ids).as("kernel"),
+          wordIdsCol(col("text"), merges, ids).as("ref"))
+        .collect().map(r => r.getLong(0) ->
+          ((r.getSeq[scala.collection.Seq[Long]](1).map(_.toList).toList,
+            r.getSeq[scala.collection.Seq[Long]](2).map(_.toList).toList))).toMap
+      perWord.foreach { case (id, (k, ref)) => assert(k == ref, s"doc $id") }
+      assert(perWord(4L)._1.head == Nil, "a SEP word keeps its slot, empty")
+      // the flat and the long form are the per-word arrays, flattened
+      // and posexploded
+      val flat = Bpe.docTokenIdsFast(docs, "text", Seq("doc_id"), merges, ids)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getSeq[Long](2).toList))).toMap
+      assert(flat == perWord.map { case (id, (k, _)) =>
+        id -> ((k.flatten.size.toLong, k.flatten)) })
+      val long = Bpe.docTokenIdRows(docs, "text", Seq("doc_id"), merges, ids)
+        .orderBy("doc_id", "word_pos", "tok_pos")
+        .as[(Long, Int, Int, Long)].collect().toSeq
+      assert(long == perWord.toSeq.sortBy(_._1).flatMap { case (id, (k, _)) =>
+        k.zipWithIndex.flatMap { case (toks, wp) =>
+          toks.zipWithIndex.map { case (t, tp) => (id, wp, tp, t) } } })
+    }
+    assert(Bpe.docTokenIdsFast(docs, "text", Seq("doc_id"), merges, pinnedRows)
+        .collect().exists(_.getSeq[Long](2).contains(-1L)),
       "fixture must exercise the UNK path")
   }
 
@@ -393,9 +395,10 @@ class BpeSpec extends SparkSpec {
   private def pinLongRows(pinned: Boolean): Seq[(Long, Int, Int, Long)] = {
     import spark.implicits._
     val docs = pinDocs
-    Bpe.docTokenIdsLong(docs, "text", Seq("doc_id"), pinMerges,
-        Bpe.wordFreq(docs, "text"),
-        pinnedIds = if (pinned) Some(pinVocab.toDF("token", "token_id")) else None)
+    val ids = if (pinned) pinVocab
+      else Bpe.vocabIds(Bpe.wordFreq(docs, "text"), pinMerges)
+        .as[(String, Long)].collect().toSeq
+    Bpe.docTokenIdRows(docs, "text", Seq("doc_id"), pinMerges, ids)
       .orderBy("doc_id", "word_pos", "tok_pos")
       .as[(Long, Int, Int, Long)].collect().toSeq
   }
@@ -403,9 +406,8 @@ class BpeSpec extends SparkSpec {
   /** q_bpe_encode's per-source (source, n_docs, n_words, n_tokens). */
   private def pinEncodeRows(): Seq[(String, Long, Long, Long)] = {
     import spark.implicits._
-    val docs = pinDocs
-    Bpe.docTokenCounts(docs, "text", Seq("doc_id", "source"), pinMerges,
-        Bpe.wordFreq(docs, "text"))
+    Bpe.docCounts(pinDocs, "text", Seq("doc_id", "source"), pinMerges)
+      .filter(col("n_words") > 0)
       .groupBy("source")
       .agg(countDistinct("doc_id"), sum("n_words"), sum("n_tokens"))
       .orderBy("source")
@@ -541,37 +543,23 @@ class BpeSpec extends SparkSpec {
     assert(wf == Map("the" -> 2L, "cat" -> 1L, "dog" -> 1L))
   }
 
-  test("docTokenCountCol (pure column) equals the broadcast-join path") {
+  test("docCounts: per-doc word and token counts, one row per document") {
     import spark.implicits._
-    val docs = Seq((1L, "abab abc aaa"), (2L, "  xa bx  xabx "), (3L, "b"))
+    val docs = Seq((1L, "abab abc"), (2L, "aaa b x" + Bpe.Sep + "y"),
+      (3L, " \t "), (4L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
     val words = Bpe.wordFreq(docs, "text")
-    val merges = Bpe.learn(words, 4)
-    val direct = docs.select(col("doc_id"),
-        Bpe.docTokenCountCol(col("text"), merges).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val joined = Bpe.docTokenCounts(docs, "text", Seq("doc_id"), merges, words)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(direct == joined)
-    // empty text counts zero tokens (filter drops the "" pseudo-word)
-    val z = Seq((9L, "")).toDF("doc_id", "text")
-      .select(Bpe.docTokenCountCol(col("text"), merges)).collect().head.getLong(0)
-    assert(z == 0L)
-  }
-
-  test("docTokenCounts: per-doc counts via the broadcast vocab") {
-    import spark.implicits._
-    val docs = Seq((1L, "abab abc"), (2L, "aaa b")).toDF("doc_id", "text")
-    val words = Bpe.wordFreq(docs, "text")
     val merges = Bpe.learn(words, 2) // (a,b) then (ab,ab)… per corpus stats
-    val got = Bpe.docTokenCounts(docs, "text", Seq("doc_id"), merges, words)
+    val got = Bpe.docCounts(docs, "text", Seq("doc_id"), merges)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    // reference: tokenize each word under the same merges
+    // reference: tokenize each word under the same merges; the SEP
+    // word is no word, a token-less doc counts zero
     val (_, refWords) = refBpe(
       Map("abab" -> 1L, "abc" -> 1L, "aaa" -> 1L, "b" -> 1L), 2)
     val exp = Map(
       1L -> (2L, (refWords("abab").size + refWords("abc").size).toLong),
-      2L -> (2L, (refWords("aaa").size + refWords("b").size).toLong))
+      2L -> (2L, (refWords("aaa").size + refWords("b").size).toLong),
+      3L -> (0L, 0L), 4L -> (0L, 0L))
     assert(got == exp)
   }
 }
