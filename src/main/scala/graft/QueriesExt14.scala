@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{KnownNotNull, KnownNullable}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.{Bpe, TextFunctions => TF}
 import graft.similarity.Kmeans
@@ -105,7 +107,6 @@ object QueriesExt14 {
     * count kernel (`Bpe.docCounts`). Documents without a word count
     * toward no source, as in the oracle's word explode. */
   private def qBpeEncode(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
     val docs = t(s, dir, "documents")
     val merges = Bpe.learn(materializedWords(docs), numMerges = 8)
     Bpe.docCounts(docs, "text", Seq("doc_id", "source"), merges)
@@ -114,8 +115,8 @@ object QueriesExt14 {
       .agg(countDistinct("doc_id").as("n_docs"),
         // a group holds at least one document with a word, so the sum
         // is never null; the tag keeps the schema `count` gave n_words
-        Bridge.column(org.apache.spark.sql.catalyst.expressions.KnownNotNull(
-          Bridge.expression(sum("n_words")))).as("n_words"),
+        Bridge.column(KnownNotNull(Bridge.expression(sum("n_words"))))
+          .as("n_words"),
         sum("n_tokens").as("n_tokens"))
       .orderBy("source")
   }
@@ -182,15 +183,13 @@ object QueriesExt14 {
     * merge rank). Long format (doc_id, word_pos, tok_pos, token_id) so
     * the oracle compares exact sequences, not a hash of arrays. */
   private def qBpeTokenIds(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
     val (docs, merges, idRows) = learnedIds(s, dir)
     Bpe.docTokenIdRows(docs.filter(col("doc_id") % 199 === 7),
         "text", Seq("doc_id"), merges, idRows)
       // the kernel's ids are never null; the tag keeps the schema the
       // id table's `min` aggregate gave token_id
-      .withColumn("token_id", Bridge.column(
-        org.apache.spark.sql.catalyst.expressions.KnownNullable(
-          Bridge.expression(col("token_id")))))
+      .withColumn("token_id",
+        Bridge.column(KnownNullable(Bridge.expression(col("token_id")))))
       .orderBy("doc_id", "word_pos", "tok_pos")
   }
 

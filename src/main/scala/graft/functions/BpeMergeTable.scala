@@ -45,9 +45,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Constant sizing (the NearestList/MatVecProject discipline): the
   * table travels to executors as a plan reference of ~(total merge
-  * string bytes) — a 50k-merge production
-  * table is ~2 MB, driver- and task-sized by design. The word→result
-  * cache is PROCESS-WIDE, keyed by the table's CONTENT fingerprint
+  * string bytes) — a 50k-merge production table is ~2 MB, driver- and
+  * task-sized by design. The word→result cache is PROCESS-WIDE, keyed
+  * by the table's CONTENT fingerprint
   * (deserialization makes a fresh instance per task on the
   * plan-reference path — an instance-owned cache would restart cold
   * every task and never amortize), BYTE-bounded against the process
